@@ -170,14 +170,6 @@ def pg_timestamp(col: Column | str) -> Column:
     return F.when(ok, c.try_cast("timestamp_ntz"))
 
 
-def pg_timestamptz(col: Column | str) -> Column:
-    """timestamptz → TIMESTAMP normalized to UTC (cell.rs:49: the reference
-    normalizes to UTC on decode; session tz is pinned UTC in session.py)."""
-    c = _c(col)
-    ok = c.rlike(r"^[0-9]{4}-[0-9]{2}-[0-9]{2}[ T]")
-    return F.when(ok, c.try_cast("timestamp"))
-
-
 # ---------------------------------------------------------------------------
 # uuid / json  (text.rs:117-134)
 # ---------------------------------------------------------------------------
@@ -189,12 +181,6 @@ def pg_uuid(col: Column | str) -> Column:
     """uuid → canonical lowercase string (text.rs:117-125)."""
     c = _c(col)
     return F.when(c.rlike(_UUID_RE), F.lower(c))
-
-
-def pg_json(col: Column | str) -> Column:
-    """json/jsonb kept as the raw string (SURVEY §1.1: Spark idiom is the
-    JSON string + ``get_json_object``/``from_json`` on demand)."""
-    return _c(col)
 
 
 def json_get(col: Column | str, path: str) -> Column:

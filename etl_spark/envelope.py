@@ -98,13 +98,6 @@ def event_seq_hex(commit_lsn: Column | str = "commit_lsn", start_lsn: Column | s
     return F.format_string("%016x/%016x", c, s).alias("event_seq_hex")
 
 
-def lsn_from_hex(col: Column | str) -> Column:
-    """Parse one 16-hex-digit LSN component back to a long (inverse of
-    :func:`event_seq_hex` per component)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.conv(c, 16, 10).cast(T.LongType())
-
-
 def with_sequence(df, commit_lsn: str = "commit_lsn", tx_ordinal: str = "tx_ordinal", start_lsn: str = "start_lsn"):
     """Attach ``event_seq`` and ``event_seq_hex`` to an envelope DataFrame."""
     out = df.withColumn("event_seq", event_seq(commit_lsn, tx_ordinal))

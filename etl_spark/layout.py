@@ -6,7 +6,9 @@ parallel. At Spark scale the analogous decisions are:
 
 - **bucketing**: persist fact tables bucketed by their join/merge key so
   repeated joins (orders ⋈ lineitem, CDC merge by pk) are co-located and
-  shuffle-free — the single biggest recurring-cost lever on a big cluster;
+  shuffle-free — the single biggest recurring-cost lever on a big cluster.
+  Read both tables back with ``spark.table`` so Catalyst sees the bucket
+  spec, and a plain ``join`` plans with no exchange on either side;
 - **partition sizing**: pick file-split / shuffle-partition counts from
   byte budgets, the batch-budget idea (batch_budget.rs:22-70) applied to
   layout.
@@ -14,10 +16,9 @@ parallel. At Spark scale the analogous decisions are:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
-#: reference scan-planning constants (copy.rs:53-58), reused as defaults
-ROWS_PER_PARTITION = 250_000
+#: reference scan-planning cap (copy.rs:53-58), reused for shuffle sizing
 MAX_PARTITIONS = 1024
 
 
@@ -42,29 +43,12 @@ def bucket_table(
     writer.saveAsTable(name)
 
 
-def plan_scan_partitions(estimated_rows: int, rows_per_partition: int = ROWS_PER_PARTITION) -> int:
-    """Partition count for a parallel snapshot scan — the reference's CTID
-    range planning (≥1 per ~250k rows, capped at 1024; copy.rs:132-161)."""
-    return max(1, min(MAX_PARTITIONS, -(-estimated_rows // rows_per_partition)))
-
-
 def shuffle_partitions_for_bytes(
     total_bytes: int, target_partition_bytes: int = 128 * 1024 * 1024
 ) -> int:
     """Shuffle-partition count sized so post-shuffle partitions hit a byte
     budget (AQE coalescing treats it as a ceiling, not a commitment)."""
     return max(1, min(MAX_PARTITIONS * 8, -(-total_bytes // target_partition_bytes)))
-
-
-def co_located_join(
-    spark: SparkSession, left_table: str, right_table: str, on: list[str], how: str = "inner"
-) -> DataFrame:
-    """Join two same-bucketed tables — zero exchange on either side.
-
-    Reads the bucketed layout back so Catalyst sees the bucket spec
-    (output partitioning satisfies the join's distribution requirement).
-    """
-    return spark.table(left_table).join(spark.table(right_table), on, how)
 
 
 def zorder_key(a, b, bits: int = 16):

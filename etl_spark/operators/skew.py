@@ -1,15 +1,14 @@
-"""Skew mitigation: salted joins and two-phase aggregation.
+"""Skew mitigation: two-phase aggregation and two-phase top-k.
 
 AQE's skew-join splitting (on in session.py) handles most skew at runtime;
 these operators are for the cases AQE can't fix:
 
-- a *broadcast-ineligible* join where one key holds a double-digit share of
-  rows (AQE splits partitions, but one giant key still lands in one task on
-  the build side of a shuffled hash join);
 - high-cardinality aggregation where a handful of hot keys serialize the
   reduce stage (partial aggregation helps only when the map side sees
   repeats; a hot key spread across every input partition still funnels into
-  one reducer).
+  one reducer);
+- per-key top-k over Zipfian keys, where one window puts a hot key's
+  entire sort in one task.
 
 Salting trades one extra narrow stage for even task sizes — the standard
 fix (e.g. Spark summit folklore; MMDS ch.2 combiner discussion).
@@ -19,31 +18,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: list[str],
-    n_salts: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join with salted keys: the (large, skewed) left side gets a
-    random salt in [0, n_salts); the (smaller) right side is replicated
-    ``n_salts``× with every salt value, so each hot left key spreads over
-    ``n_salts`` tasks instead of one.
-
-    Result is row-identical to ``left.join(right, on, how)``. Cost: right
-    side shuffles ``n_salts``× its size — use when right ≪ left but is too
-    big to broadcast (the broadcast join needs no salt at all).
-    """
-    salt = (F.rand(seed=42) * n_salts).cast("int")
-    l_s = left.withColumn("__salt", salt)
-    r_s = right.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    )
-    out = l_s.join(r_s, [*on, "__salt"], how)
-    return out.drop("__salt")
 
 
 def salted_agg(
@@ -76,20 +50,6 @@ def salted_agg(
         *[refold[fn](f"__p_{c}").alias(f"{fn}_{c}") for c, fn in aggs.items()]
     )
     return final
-
-
-def top_frequent_keys(df: DataFrame, keys: list[str], top_n: int = 10) -> DataFrame:
-    """Skew diagnosis: the ``top_n`` heaviest key groups with their row
-    share — run this before choosing a mitigation (broadcast < salt < AQE).
-    """
-    total = df.count()
-    return (
-        df.groupBy(*keys)
-        .agg(F.count("*").alias("n_rows"))
-        .withColumn("share", F.col("n_rows") / F.lit(total))
-        .orderBy(F.col("n_rows").desc())
-        .limit(top_n)
-    )
 
 
 def salted_topk_per_key(

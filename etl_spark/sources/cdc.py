@@ -1,21 +1,19 @@
-"""Change-stream readers: batch + Structured Streaming envelope sources.
+"""Change-stream reader: the Structured Streaming envelope source.
 
 The reference's WAL streaming source (SURVEY §2.1 S3: pgoutput frames →
 typed events, crates/etl/src/postgres/stream/replication_message.rs) maps
 to a Structured Streaming source over an append-only change log. This
 module provides:
 
-- :func:`read_changes` / :func:`stream_changes` — batch and streaming
-  readers over envelope parquet/JSON directories (checkpoint directory =
-  replication slot, SURVEY S4);
+- :func:`stream_changes` — the streaming reader over an envelope parquet
+  directory (checkpoint directory = replication slot, SURVEY S4);
 - :func:`envelope_from_events` — the deterministic sim-harness derivation
   of a CDC envelope from the driver's ``events`` table, used by tests,
   bench, and the correctness gate (its DuckDB-SQL mirror lives in
   ``__spark_entry__.oracle_sql``).
 
-Per-table routing (P3 ``should_apply_changes``, apply.rs:2626-2639) and
-event-type filtering (P4, apply.rs:2113-2125) are plain ``filter`` calls —
-Catalyst pushes both into the scan.
+Per-table routing (P3 ``should_apply_changes``, apply.rs:2626-2639) is a
+plain ``filter`` call — Catalyst pushes it into the scan.
 """
 
 from __future__ import annotations
@@ -23,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_spark.envelope import GENERIC_ENVELOPE, ROW_OPS, with_sequence
+from etl_spark.envelope import GENERIC_ENVELOPE, with_sequence
 from etl_spark.io import read_table
 
 
@@ -34,83 +32,17 @@ def ts_from_nanos(col):
     return F.timestamp_micros((c / 1000).cast("long")).cast("timestamp_ntz")
 
 
-def read_changes(
-    spark: SparkSession, path: str, table: str | None = None, fmt: str = "parquet"
-) -> DataFrame:
-    """Batch-read an envelope directory; optionally route one table (P3).
-
-    ``fmt``: parquet (sim harness), json (JSON-lines, what WAL shippers
-    like Debezium emit), or csv — all land on the same GENERIC_ENVELOPE
-    schema, so everything downstream is format-agnostic."""
-    df = _read(spark.read, path, fmt)
-    df = with_sequence(df)
-    if table:
-        df = df.filter(F.col("table") == table)
-    return df
-
-
-def _read(reader, path: str, fmt: str) -> DataFrame:
-    if fmt == "parquet":
-        return reader.schema(GENERIC_ENVELOPE).parquet(path)
-    if fmt == "json":
-        return reader.schema(GENERIC_ENVELOPE).json(path)
-    if fmt == "csv":
-        # CSV has no array type: `missing_cols` travels as a JSON string
-        # (e.g. "[1,2]") and is parsed back, so downstream still sees the
-        # exact GENERIC_ENVELOPE shape
-        from pyspark.sql import types as T
-
-        csv_schema = T.StructType(
-            [
-                T.StructField(f.name, T.StringType(), True)
-                if f.name == "missing_cols"
-                else f
-                for f in GENERIC_ENVELOPE.fields
-            ]
-        )
-        # RFC-4180 quoting (embedded quotes doubled) — Spark's default
-        # escape is backslash, which silently corrupts JSON row images
-        df = (
-            reader.schema(csv_schema)
-            .option("header", "true")
-            .option("escape", '"')
-            .csv(path)
-        )
-        return df.withColumn(
-            "missing_cols", F.from_json("missing_cols", "array<int>")
-        )
-    raise ValueError(f"unsupported envelope format: {fmt}")
-
-
 def stream_changes(
-    spark: SparkSession,
-    path: str,
-    table: str | None = None,
-    max_files_per_trigger: int | None = None,
-    fmt: str = "parquet",
+    spark: SparkSession, path: str, table: str | None = None
 ) -> DataFrame:
     """Streaming envelope source. The checkpoint dir (set on the writer)
     plays the replication slot's role: offsets = progress, deleting it =
-    slot invalidation → full re-sync (SURVEY S4).
-
-    ``max_files_per_trigger`` is the batch-size budget (T1: the
-    reference's EventBatch byte/deadline flush, apply.rs:645-695, mapped
-    onto Spark's per-trigger source limit — one WAL-shipper flush file ≈
-    one budgeted batch)."""
-    reader = spark.readStream
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    df = _read(reader, path, fmt)
+    slot invalidation → full re-sync (SURVEY S4)."""
+    df = spark.readStream.schema(GENERIC_ENVELOPE).parquet(path)
     df = with_sequence(df)
     if table:
         df = df.filter(F.col("table") == table)
     return df
-
-
-def filter_supported(df: DataFrame) -> DataFrame:
-    """Drop unsupported event kinds (P4: Origin/Type/unknown logical
-    messages are dropped with warnings, apply.rs:2113-2125)."""
-    return df.filter(F.col("op").isin(*ROW_OPS, "TRUNCATE", "RELATION", "BEGIN", "COMMIT"))
 
 
 # ---------------------------------------------------------------------------

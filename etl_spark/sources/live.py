@@ -763,6 +763,17 @@ def assign_xids(frames, frame_col: str = "frame", lsn_col: str = "wal_start",
     return out.drop("__ord") if order_cols is not None else out
 
 
+#: :meth:`FrameFilePump.run_live` keepalive policy (apply.rs:96-116): the
+#: client self-sends a status update at this fraction of
+#: ``wal_sender_timeout`` since its last send...
+KEEP_ALIVE_FRACTION = 0.6
+#: ...clamped to at least this many seconds, so a 1 ms server setting
+#: cannot spin the loop...
+MIN_KEEP_ALIVE_DEADLINE_S = 0.1
+#: ...and the idle loop naps at most this long between empty polls.
+IDLE_NAP_S = 0.02
+
+
 class FrameFilePump:
     """Bridge a :class:`ReplicationFrameSource` into the pipeline's
     micro-batched file queue — the piece LIVE_SOURCE.md's component map
@@ -863,10 +874,8 @@ class FrameFilePump:
             pipeline.run_until_drained()
             self.report_progress()
 
-    def run_live(self, pipeline, stop, wal_sender_timeout_s: float = 60.0,
-                 keep_alive_fraction: float = 0.6,
-                 min_deadline_s: float = 0.1,
-                 idle_nap_s: float = 0.02) -> None:
+    def run_live(self, pipeline, stop,
+                 wal_sender_timeout_s: float = 60.0) -> None:
         """Continuous live loop with PROACTIVE keepalive status updates —
         the reference's deadline policy (apply.rs:96-116): Postgres kills
         a silent client at ``wal_sender_timeout`` (default 60 s) and
@@ -882,8 +891,8 @@ class FrameFilePump:
         :meth:`run_until_source_drained` when frames arrive."""
         import time
 
-        deadline = max(wal_sender_timeout_s * keep_alive_fraction,
-                       min_deadline_s)
+        deadline = max(wal_sender_timeout_s * KEEP_ALIVE_FRACTION,
+                       MIN_KEEP_ALIVE_DEADLINE_S)
         # A blocking transport defeats the proactive deadline: a socket
         # source built with the default poll_timeout_s=None would sit
         # inside poll_frames forever on an idle server and the 60%-
@@ -893,7 +902,7 @@ class FrameFilePump:
         if (hasattr(self.source, "poll_timeout_s")
                 and self.source.poll_timeout_s is None):
             self.source.poll_timeout_s = max(
-                min(deadline / 4.0, 1.0), min_deadline_s / 2.0)
+                min(deadline / 4.0, 1.0), MIN_KEEP_ALIVE_DEADLINE_S / 2.0)
         last_send = time.monotonic()
         while not stop.is_set():
             sends_before = len(getattr(self.source, "sent_updates", ()))
@@ -907,7 +916,7 @@ class FrameFilePump:
             if time.monotonic() - last_send >= deadline:
                 self.report_progress()  # proactive: the 60%-deadline ack
                 last_send = time.monotonic()
-            time.sleep(min(idle_nap_s, deadline / 4))
+            time.sleep(min(IDLE_NAP_S, deadline / 4))
 
     def run_live_resilient(self, pipeline, stop, slot_name: str,
                            wal_sender_timeout_s: float = 60.0,

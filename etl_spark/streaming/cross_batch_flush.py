@@ -4,14 +4,12 @@
 The reference overlaps batch N's destination flush with batch N+1's
 accumulation: one ``pending_flush_result`` may be in flight, and the WAL
 restart LSN advances only when the destination ACKNOWLEDGES the flush.
-:class:`~etl_spark.streaming.async_flush.AsyncFlushSink` deliberately
-confines overlap WITHIN a batch because Spark's streaming commit log
-marks a batch done the moment ``foreachBatch`` returns — an in-flight
-write at return time would be unreplayable from the checkpoint alone.
+Spark's streaming commit log marks a batch done the moment
+``foreachBatch`` returns, so a write still in flight at return time
+would be unreplayable from the checkpoint alone.
 
-This module lifts that restriction the same way the reference does: by
-making the restart point the DESTINATION-ACKED ledger, not the commit
-log.
+This module handles that the same way the reference does: by making the
+restart point the DESTINATION-ACKED ledger, not the commit log.
 
 - Every ``write_changes`` first STAGES its rows to a durable parquet
   spill (cheap, local — the slow part is the destination ack, which is
@@ -36,8 +34,8 @@ log.
 
 Truncates are recorded as ledger ops (no payload) so a replayed batch
 preserves truncate-then-write ordering. ``write_snapshot`` stays
-synchronous behind a full settle, like the within-batch sink: the copy
-path is bulk-throughput bound and backfill has its own restart states.
+synchronous behind a full settle: the copy path is bulk-throughput bound
+and backfill has its own restart states.
 """
 
 from __future__ import annotations

@@ -87,24 +87,13 @@ class Pipeline:
         tables: list[TableConfig],
         sink: Sink,
         work_dir: str,
-        async_flush: bool = False,
         source_fmt: str = "envelope",
-        envelope_fmt: str = "parquet",
-        compact_batches: bool = False,
-        batch_budget_bytes: int | None = None,
         metrics_registry=None,
     ):
-        #: "envelope" = structured GENERIC_ENVELOPE files (parquet/json/csv
-        #: per ``envelope_fmt`` — a WAL shipper that flushes JSON lines or
-        #: CSV streams through the same pipeline unchanged);
+        #: "envelope" = structured GENERIC_ENVELOPE parquet files;
         #: "pgoutput" = raw binary frame files (FRAME_SCHEMA) from a WAL
         #: shipper, decoded per micro-batch through sources/pgoutput.py
         self.source_fmt = source_fmt
-        self.envelope_fmt = envelope_fmt
-        #: last-image per-key batch compaction before sink writes (see
-        #: _compact); safe for the key-merge sinks this engine ships,
-        #: NOT for changelog-fidelity destinations
-        self.compact_batches = compact_batches
         self.spark = spark
         self.source_dir = source_dir
         self.tables = {t.name: t for t in tables}
@@ -119,11 +108,6 @@ class Pipeline:
             }
             for t in tables
         }
-        if async_flush:
-            from etl_spark.streaming.async_flush import AsyncFlushSink
-
-            if not isinstance(sink, AsyncFlushSink):
-                sink = AsyncFlushSink(sink)
         self.sink = sink
         self.work_dir = work_dir
         # reference-parity telemetry (observability.rs inventory): the
@@ -134,17 +118,6 @@ class Pipeline:
         self.control = ControlStore(os.path.join(work_dir, "control"))
         self.schemas = SchemaRegistry(os.path.join(work_dir, "schemas"))
         self.checkpoint_dir = os.path.join(work_dir, "checkpoint")
-        #: T2 adaptive batch budget: durable bytes-per-file estimator that
-        #: re-sizes maxFilesPerTrigger at each start (see streaming/budget.py)
-        self.budget = None
-        self._files_in_trigger: int | None = None
-        if batch_budget_bytes is not None:
-            from etl_spark.streaming.budget import BatchBudget
-
-            self.budget = BatchBudget(
-                os.path.join(work_dir, "batch_budget.json"),
-                target_bytes=batch_budget_bytes,
-            )
         self.query = None
         self.relations = None
         self.txs = None
@@ -234,15 +207,11 @@ class Pipeline:
         (publication-membership sync, pipeline.rs:354-421). A later re-add
         re-copies from a fresh snapshot, exactly like the reference."""
         removed = [n for n in self.control.tables if n not in self.tables]
-        settle = getattr(self.sink, "await_pending", None)
         for name in removed:
+            # truncate BEFORE dropping the table from control: if the purge
+            # fails, the table stays tracked and the truncate retries on
+            # restart — otherwise stale destination data would survive
             self.sink.truncate(name)
-            # settle the (possibly async-dispatched) truncate BEFORE
-            # dropping the table from control: if the purge fails, the
-            # table stays tracked and the truncate retries on restart —
-            # otherwise stale destination data would survive silently
-            if settle is not None:
-                settle()
             self.control.remove(name)
         return removed
 
@@ -362,38 +331,19 @@ class Pipeline:
         """foreachBatch body — the reference's apply loop for one
         micro-batch (SURVEY §3.2 steps 3-6).
 
-        With an :class:`~etl_spark.streaming.async_flush.AsyncFlushSink`
-        (T5): per-table writes dispatch without blocking — table k+1's
-        truncate probe / decode planning overlaps table k's write on the
-        flush thread — but every dispatched job settles BEFORE this
-        method returns. Spark's commit log marks the batch done at
-        return, so an unacked write here would be lost on restart (the
-        stream resumes after this batch); settling first keeps
-        at-least-once, and the flush-LSN advance below runs only after
-        the destination acknowledged every write (apply.rs ack-gated
-        restart LSN).
+        Two apply paths. Synchronous (every sink but the cross-batch
+        one): each table's write completes inside this method, so the
+        flush LSN advances only after the destination has the batch —
+        Spark's commit log marks the batch done at return, and a replay
+        after a crash re-merges idempotently (apply.rs ack-gated restart
+        LSN). With a
+        :class:`~etl_spark.streaming.cross_batch_flush.CrossBatchFlushSink`
+        (T5 full form): the batch opens in the sink's ledger, writes
+        dispatch to its flush thread, and the flush LSN advances on the
+        destination ack, after this method has returned.
         """
-        from etl_spark.streaming.async_flush import AsyncFlushSink
         from etl_spark.streaming.cross_batch_flush import CrossBatchFlushSink
 
-        if self.budget is not None:
-            # T2/A3: size-hint the RAW input batch (what the trigger cap
-            # controls) and feed the durable bytes-per-file estimator; the
-            # next start() applies the recommendation
-            from etl_spark.streaming.budget import estimate_batch_bytes
-
-            # the ACTUAL file count of the micro-batch, not the cap: the
-            # cap may not be in effect (first run: an uncapped availableNow
-            # drain delivers the whole backlog in one batch — seeding
-            # bytes_per_file at backlog-bytes/1 would clamp the next start
-            # to maxFilesPerTrigger=1), and a drain's last trigger carries
-            # fewer files than the cap
-            _rows, est, n_files = estimate_batch_bytes(batch, with_files=True)
-            n_files = n_files or (self._files_in_trigger or 0)
-            if n_files > 0:
-                self.budget.observe(est, n_files)
-
-        raw_frames = None
         wire = None
         if self.source_fmt == "pgoutput":
             # binary WAL frames → envelope: learn relations first (persisted
@@ -405,7 +355,6 @@ class Pipeline:
                 decode_frames,
             )
 
-            raw_frames = batch
             # snapshot BEFORE learning this batch's relations: the decoder
             # takes the PRE-batch base and resolves this batch's RELATION
             # frames per-position itself — handing it the post-update
@@ -428,8 +377,10 @@ class Pipeline:
             # (types now, relations/txs deferred to batch success below),
             # so the crash/replay windows are unchanged.
             self.spark.sparkContext.setJobDescription("pipeline: wire-stats")
-            wire = collect_wire_stats(batch, max_tx=MAX_TX_PER_WINDOW)
-            self.spark.sparkContext.setJobDescription(None)
+            try:
+                wire = collect_wire_stats(batch, max_tx=MAX_TX_PER_WINDOW)
+            finally:
+                self.spark.sparkContext.setJobDescription(None)
             # TYPE names are exempt from the deferral: they are idempotent
             # oid→name metadata (never positional), and _apply_relations
             # needs same-batch TYPE frames visible when naming custom-typed
@@ -442,7 +393,6 @@ class Pipeline:
             # numbers) and popped committed xids (strict-decode crash
             # loop). snapshot_for(first frame's wal) returns the state the
             # FIRST attempt decoded with, whether or not the advance ran.
-            raw_wal_bounds = wire.bounds
             batch = decode_frames(
                 batch,
                 relations=carried_relations,
@@ -452,17 +402,8 @@ class Pipeline:
             )
         batch = with_sequence(batch) if "event_seq" not in batch.columns else batch
         batch = batch.persist()
-        async_mode = isinstance(self.sink, AsyncFlushSink)
         cross_mode = isinstance(self.sink, CrossBatchFlushSink)
         try:
-            if async_mode:
-                # defensive: all of the previous batch's jobs settled
-                # before its foreachBatch returned, and backfill's
-                # dispatches settle inside write_snapshot /
-                # reconcile_membership — so this is a no-op on every
-                # normal path; it only matters for stray dispatches made
-                # directly against the sink (tests, manual truncates)
-                self.sink.await_pending()
             # one agg also feeds telemetry (events + transactions per
             # batch ride the same job as the max-LSN read). Only ROW ops
             # count as events (RELATION/TYPE/MESSAGE metadata frames would
@@ -489,7 +430,6 @@ class Pipeline:
             # RELATION/MESSAGE rows are catalog-sized, so each group
             # collect_lists its own and _apply_relations consumes the
             # merged list instead of running its own filter+collect job.
-            self.spark.sparkContext.setJobDescription("pipeline: batch-stats")
             tstats_agg = batch.groupBy("table").agg(
                 F.max("commit_lsn").alias("m"),
                 F.count(F.when(is_row, 1)).alias("n"),
@@ -513,12 +453,13 @@ class Pipeline:
                     )
                 ).alias("relmeta"),
             )
-            tstats = tstats_agg.collect()
-            self.spark.sparkContext.setJobDescription(None)
+            self.spark.sparkContext.setJobDescription("pipeline: batch-stats")
+            try:
+                tstats = tstats_agg.collect()
+            finally:
+                self.spark.sparkContext.setJobDescription(None)
             self._apply_relations(
-                batch,
-                rows=[m for r in tstats for m in (r["relmeta"] or ())],
-            )
+                [m for r in tstats for m in (r["relmeta"] or ())])
             # FORCE_SCHEMA_CLEANUP: aggressively prune schema versions up to
             # the durable flush LSN mid-stream (reference forces cleanup to
             # prove as-of decode never needs a pruned version,
@@ -576,11 +517,6 @@ class Pipeline:
             # recorded flush LSN lags; replay from the stale LSN must
             # converge to the same state
             lost = failpoints.should_skip(failpoints.SEND_STATUS_UPDATE)
-            if async_mode:
-                # settle THIS batch's dispatched writes; a flush failure
-                # raises here, fails the micro-batch, and the restart
-                # replays it — the commit log never runs ahead of the ack
-                self.sink.await_pending()
             if cross_mode:
                 # do NOT settle: foreachBatch returns while the flush
                 # continues; the flush LSN advances on the destination ack
@@ -589,7 +525,6 @@ class Pipeline:
                 self.sink.end_batch(advance_lsn=not lost)
             elif max_lsn is not None and not lost:
                 # durable progress: every sink write above has completed
-                # (synchronously, or settled by await_pending just now)
                 self.control.advance_flush_lsn(int(max_lsn))
             self.metrics.inc(
                 telemetry.ETL_EVENTS_PROCESSED_TOTAL, int(max_lsn_row["n"]))
@@ -604,7 +539,7 @@ class Pipeline:
                     telemetry.ETL_APPLY_LOOP_FLUSH_LAG_BYTES,
                     max(0, int(max_lsn) - int(self.control.flush_lsn)),
                 )
-            if raw_frames is not None:
+            if wire is not None:
                 # tx- AND relation-registry advance is deliberately LAST:
                 # a batch that fails above replays on restart, and the
                 # replayed decode must see the same carried state it saw
@@ -631,15 +566,14 @@ class Pipeline:
         finally:
             batch.unpersist()
 
-    def _apply_relations(self, batch: DataFrame, rows=None) -> None:
+    def _apply_relations(self, rows) -> None:
         """Schema-change stream (T9, apply.rs:2138-2276 + Relation
         republish apply.rs:2363-2440): RELATION events carry the new column
         list as JSON; record each version keyed by its DDL start-LSN and
         switch the table's decode schema to the newest version.
 
-        ``rows``: the RELATION/MESSAGE rows if the caller already
-        collected them (the per-batch grouped agg collect_lists them —
-        catalog-sized — so no second filter+collect job runs here).
+        ``rows``: the batch's RELATION/MESSAGE rows, collected by the
+        per-batch grouped agg (catalog-sized ``collect_list``s).
 
         Fidelity note vs the reference: pgoutput tuples are POSITIONAL, so
         the reference must decode each event against its exact schema
@@ -649,15 +583,6 @@ class Pipeline:
         per batch instead of a per-event split.
         """
         import json as _json
-
-        rel = rows if rows is not None else (
-            batch.filter(F.col("op").isin("RELATION", "MESSAGE"))
-            .select(
-                "op", "table", "commit_lsn", "schema_snapshot_lsn", "after",
-                "start_lsn",
-            )
-            .collect()
-        )
 
         # Versioning key = the RELATION's STREAM POSITION (start_lsn), not
         # its transaction's commit LSN: a relation change applies to the
@@ -669,7 +594,7 @@ class Pipeline:
         def _lsn(r) -> int:
             return r["start_lsn"] if r["start_lsn"] is not None else r["commit_lsn"]
 
-        for r in sorted(rel, key=_lsn):
+        for r in sorted(rows, key=_lsn):
             table = r["table"]
             payload = r["after"]
             if r["op"] == "MESSAGE":
@@ -831,16 +756,6 @@ class Pipeline:
             for name in d.columns_to_remove:
                 idents.pop(name, None)
         return idents
-
-    def _rename_aliases(self, table: str) -> dict[str, list[str]]:
-        """Current column name → its prior names (oldest first), the
-        flat view of :meth:`_column_identities` used by restart key
-        resolution."""
-        return {
-            cur: [n for _s, n in segs[:-1]]
-            for cur, segs in self._column_identities(table).items()
-            if len(segs) > 1
-        }
 
     def _ordinal_exprs(self, table: str, fields: list[tuple[str, str]]):
         """Field name → Column expr giving the field's ORDINAL in the
@@ -1028,24 +943,13 @@ class Pipeline:
         return out
 
     def _apply_table_batch(self, name: str, t_rows: DataFrame, batch_id: int,
-                           stats=None) -> None:
+                           stats) -> None:
         cfg = self.tables[name]
         # truncate splitting (T8): events ≤ the last TRUNCATE are dead;
         # the sink resets before the survivors apply. ``stats`` is this
         # table's row of the batch-wide grouped agg (_apply_batch) — the
-        # pre-computed truncate fence and ROW_OPS count; when absent
-        # (direct calls, e.g. tests) the same numbers come from one agg
-        # here. Either way the old truncate-agg + isEmpty job pair is one
-        # job at most.
-        if stats is None:
-            stats = t_rows.agg(
-                F.max(
-                    F.when(F.col("op") == "TRUNCATE", F.col("event_seq"))
-                ).alias("trunc_seq"),
-                F.count(
-                    F.when(F.col("op").isin(*ROW_OPS), 1)
-                ).alias("n"),
-            ).collect()[0]
+        # pre-computed truncate fence and ROW_OPS count, so no per-table
+        # agg or isEmpty job runs unless a truncate splits the batch.
         if stats["trunc_seq"] is not None:
             self.sink.truncate(name)
             t_rows = t_rows.filter(
@@ -1059,48 +963,13 @@ class Pipeline:
             if stats["n"] == 0:
                 return
             rows = t_rows.filter(F.col("op").isin(*ROW_OPS))
-        decoded = self._decode(cfg, rows)
-        if self.compact_batches:
-            decoded = self._compact(cfg, decoded)
-        self.sink.write_changes(name, decoded, batch_id)
-
-    def _compact(self, cfg: TableConfig, decoded: DataFrame) -> DataFrame:
-        """Last-image batch compaction: ONE event per key per micro-batch
-        (the highest ``event_seq``), DELETEs kept as tombstones.
-
-        Every sink in this engine merges by key with LWW-by-sequence, so
-        dropping a key's superseded intra-batch events cannot change the
-        destination state — it only cuts write amplification (the
-        reference's batch accumulation achieves the same reduction by
-        merging in memory before the destination write). This is
-        deliberately WEAKER than full net-effect cancellation
-        (:func:`etl_spark.workload.cdc_changelog_compact` drops
-        INSERT..DELETE pairs entirely): cancellation is only safe when
-        INSERT provably means "key did not exist before this batch",
-        which an at-least-once replayed stream cannot promise. Not for
-        changelog-fidelity destinations — those need every event.
-        """
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(*cfg.keys).orderBy(F.col("event_seq").desc())
-        return (
-            decoded.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+        self.sink.write_changes(name, self._decode(cfg, rows), batch_id)
 
     # ------------------------------------------------------------------
-    def start(self, available_now: bool = True, max_files_per_trigger: int | None = None):
+    def start(self, available_now: bool = True):
         """Backfill, then start the stream. ``available_now=True`` drains
-        what exists and stops (test/batch mode); False runs continuously.
-        ``max_files_per_trigger`` bounds each micro-batch (T1); with a
-        ``batch_budget_bytes`` configured and no explicit cap, the cap
-        comes from the durable budget's recommendation (T2)."""
+        what exists and stops (test/batch mode); False runs continuously."""
         from etl_spark.streaming.cross_batch_flush import CrossBatchFlushSink
-
-        if max_files_per_trigger is None and self.budget is not None:
-            max_files_per_trigger = self.budget.recommend()
-        self._files_in_trigger = max_files_per_trigger
 
         if isinstance(self.sink, CrossBatchFlushSink):
             # ack-gated restart (apply.rs:1956-2023): wire the flush LSN to
@@ -1120,17 +989,10 @@ class Pipeline:
         if self.source_fmt == "pgoutput":
             from etl_spark.sources.pgoutput import FRAME_SCHEMA
 
-            reader = self.spark.readStream.schema(FRAME_SCHEMA)
-            if max_files_per_trigger is not None:
-                reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-            stream = reader.parquet(self.source_dir)
+            stream = self.spark.readStream.schema(FRAME_SCHEMA).parquet(
+                self.source_dir)
         else:
-            stream = stream_changes(
-                self.spark,
-                self.source_dir,
-                max_files_per_trigger=max_files_per_trigger,
-                fmt=self.envelope_fmt,
-            )
+            stream = stream_changes(self.spark, self.source_dir)
         writer = (
             stream.writeStream.foreachBatch(self._apply_batch)
             .option("checkpointLocation", self.checkpoint_dir)

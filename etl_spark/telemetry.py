@@ -14,8 +14,7 @@ text exposition format. Round 12 also ships the scrape binding itself:
 (metrics.rs:82-97) — opt-in, best-effort, never on the data path.
 
 Registry state is metadata-sized (one float per (metric, label-set) —
-never row data) and lives on the driver, matching where Spark's own
-StreamingQueryListener metrics (streaming/metrics.py) are collected.
+never row data) and lives on the driver.
 """
 
 from __future__ import annotations

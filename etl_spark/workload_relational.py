@@ -23,15 +23,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_table(spark, sf_dir, name)
 
 
-def _nanos(date_str: str) -> int:
-    """Epoch nanos of a UTC date literal — comparing the raw long keeps the
-    filter pushdown-eligible at the parquet scan (no per-row conversion)."""
-    import datetime
-
-    d = datetime.datetime.fromisoformat(date_str).replace(tzinfo=datetime.timezone.utc)
-    return int(d.timestamp()) * NANOS_PER_SEC
-
-
 def _ts(date_str: str):
     """TIMESTAMP_NTZ literal for lineitem/orders date columns (millis
     parquet → TIMESTAMP_NTZ in Spark; events.ts is nanos → long)."""

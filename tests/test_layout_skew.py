@@ -26,30 +26,13 @@ def test_bucketed_join_has_no_exchange(spark, facts):
     try:
         layout.bucket_table(left, "b_left", ["k"], n_buckets=8, sort_cols=["k"])
         layout.bucket_table(right, "b_right", ["k"], n_buckets=8, sort_cols=["k"])
-        joined = layout.co_located_join(spark, "b_left", "b_right", ["k"])
+        joined = spark.table("b_left").join(spark.table("b_right"), ["k"])
         plan = plan_of(joined)
         assert n_shuffles(plan) == 0, plan  # co-located: no exchange either side
         assert joined.count() == left.join(right, "k").count()
     finally:
         spark.sql("DROP TABLE IF EXISTS b_left")
         spark.sql("DROP TABLE IF EXISTS b_right")
-
-
-def test_salted_join_matches_plain(spark, facts):
-    left, right = facts
-    plain = left.join(right, ["k"]).groupBy("k").count()
-    salted = skew.salted_join(left, right, ["k"], n_salts=4).groupBy("k").count()
-    assert {(r.k, r["count"]) for r in salted.collect()} == {
-        (r.k, r["count"]) for r in plain.collect()
-    }
-
-
-def test_salted_join_left_outer(spark):
-    left = spark.createDataFrame([(1, "a"), (2, "b"), (99, "zz")], "k int, l string")
-    right = spark.createDataFrame([(1, "x"), (2, "y")], "k int, r string")
-    out = skew.salted_join(left, right, ["k"], n_salts=4, how="left").collect()
-    got = {(r.k, r.l, r.r) for r in out}
-    assert got == {(1, "a", "x"), (2, "b", "y"), (99, "zz", None)}
 
 
 def test_salted_agg_matches_plain(spark, facts):
@@ -76,22 +59,6 @@ def test_salted_agg_matches_plain(spark, facts):
 def test_salted_agg_rejects_non_mergeable(spark, facts):
     with pytest.raises(ValueError):
         skew.salted_agg(facts[0], ["k"], {"l_val": "avg"})
-
-
-def test_top_frequent_keys(spark):
-    df = spark.createDataFrame(
-        [(1,)] * 80 + [(2,)] * 15 + [(3,)] * 5, "k int"
-    )
-    top = skew.top_frequent_keys(df, ["k"], top_n=2).collect()
-    assert [r.k for r in top] == [1, 2]
-    assert abs(top[0].share - 0.8) < 1e-9
-
-
-def test_plan_scan_partitions_matches_reference_constants(spark):
-    assert layout.plan_scan_partitions(1) == 1
-    assert layout.plan_scan_partitions(250_000) == 1
-    assert layout.plan_scan_partitions(250_001) == 2
-    assert layout.plan_scan_partitions(10**12) == layout.MAX_PARTITIONS
 
 
 def test_dynamic_partition_pruning_fires(spark, tmp_path):
@@ -136,7 +103,7 @@ def test_bucketed_full_outer_diff_has_no_exchange(spark):
     try:
         layout.bucket_table(cur, "b_cur", ["pk"], n_buckets=8, sort_cols=["pk"])
         layout.bucket_table(dest, "b_dest", ["pk"], n_buckets=8, sort_cols=["pk"])
-        j = layout.co_located_join(spark, "b_cur", "b_dest", ["pk"], how="full_outer")
+        j = spark.table("b_cur").join(spark.table("b_dest"), ["pk"], "full_outer")
         diff = (
             j.withColumn(
                 "diff_kind",

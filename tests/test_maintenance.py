@@ -1,6 +1,5 @@
 """Compaction + version expiry (the reference's external maintenance,
-ducklake/external_maintenance.rs) and streaming metrics listener (T4/A4
-replication-status analog)."""
+ducklake/external_maintenance.rs)."""
 
 import os
 
@@ -49,39 +48,6 @@ def test_expire_versions_keeps_live(spark, tmp_path):
     # keep clamps to 1 — the live version can never be expired
     assert expire_versions(root, keep=0) == ["v3"]
     assert sorted(d for d in os.listdir(root) if d.startswith("v")) == ["v4"]
-
-
-def test_metrics_listener_collects_progress(spark, tmp_path):
-    import time
-
-    from pyspark.sql import functions as F
-
-    from etl_spark.streaming.metrics import PipelineMetrics
-
-    src = str(tmp_path / "src")
-    spark.range(0, 50).select(F.col("id")).write.parquet(src)
-    m = PipelineMetrics()
-    spark.streams.addListener(m)
-    try:
-        q = (
-            spark.readStream.schema("id long").parquet(src)
-            .writeStream.format("noop")
-            .option("checkpointLocation", str(tmp_path / "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # listener events are delivered async — poll briefly
-        for _ in range(50):
-            if m.snapshot()["total_rows"] >= 50:
-                break
-            time.sleep(0.2)
-        snap = m.snapshot()
-        assert snap["total_rows"] >= 50
-        (qstats,) = snap["queries"].values()
-        assert qstats["batches"] >= 1 and qstats["rows"] >= 50
-    finally:
-        spark.streams.removeListener(m)
 
 
 def test_incremental_rollup_untouched_partitions_preserved(spark, tmp_path):

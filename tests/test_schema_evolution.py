@@ -402,19 +402,12 @@ def test_ddl_log_matches_model_under_random_ops(spark, tmp_path, seed):
         )
 
 
-import pytest as _pytest
-
-
-@_pytest.mark.parametrize("async_flush", [False, True])
-def test_pipeline_rename_survives_full_replay(spark, tmp_path, async_flush):
+def test_pipeline_rename_survives_full_replay(spark, tmp_path):
     """Checkpoint wiped after a rename-bearing batch: the full replay
     re-delivers the RELATION and every row event. The registry dedups the
     version, the sink's DDL tail-idempotence absorbs the replayed rename,
     and the destination converges to the same state (the reference's
-    missing-status-update failpoint scenario, applied to DDL). The async
-    variant proves the r7-advisory ordering fix: DDL through
-    AsyncFlushSink settles before the registry records the version, so
-    the replay's version-guard can never strand an unapplied rename."""
+    missing-status-update failpoint scenario, applied to DDL)."""
     import shutil
 
     from etl_spark.streaming.pipeline import Pipeline, TableConfig
@@ -445,8 +438,7 @@ def test_pipeline_rename_survives_full_replay(spark, tmp_path, async_flush):
     def mk():
         cfg = TableConfig(name="users", snapshot_path=snap, keys=["pk"],
                           payload_schema="pk long, val string")
-        return Pipeline(spark, source, [cfg], sink, str(tmp_path / "work"),
-                        async_flush=async_flush)
+        return Pipeline(spark, source, [cfg], sink, str(tmp_path / "work"))
 
     p = mk()
     p.run_until_drained()

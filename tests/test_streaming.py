@@ -358,26 +358,6 @@ def test_replayed_batch_id_skips_rewrite(spark, env):
     assert {r.val for r in sink.read("users").filter(F.col("pk") == 8).collect()} == {"h2"}
 
 
-def test_json_envelope_source(spark, env, tmp_path):
-    """The same pipeline semantics over a JSON-lines change log (what a
-    WAL shipper emits) — format-agnostic envelope."""
-    from etl_spark.sources.cdc import read_changes
-
-    src = str(tmp_path / "jsonlog")
-    os.makedirs(src)
-    rows = [
-        ev("INSERT", "users", 10, 0, after={"pk": 4, "val": "d"}),
-        ev("DELETE", "users", 11, 0, before={"pk": 1}, before_kind="KEY"),
-    ]
-    from etl_spark.envelope import GENERIC_ENVELOPE
-    spark.createDataFrame(rows, GENERIC_ENVELOPE).coalesce(1).write.mode(
-        "overwrite").json(src)
-    df = read_changes(spark, src, fmt="json")
-    got = {(r.op, r.commit_lsn) for r in df.collect()}
-    assert got == {("INSERT", 10), ("DELETE", 11)}
-    assert "event_seq" in df.columns
-
-
 def test_stop_then_resume(spark, env):
     """stop() after a drained run is safe; a new pipeline resumes from the
     checkpoint and only applies new events (continuous-mode lifecycle)."""
@@ -752,201 +732,6 @@ def test_replication_status_and_restart(spark, env):
     q.awaitTermination()
     assert current(env)[7] == "r2"
     assert p.replication_status()["flush_lsn"] == 41
-
-
-def test_pipeline_over_json_envelope_stream(spark, env, tmp_path):
-    """The same pipeline runs unchanged over a JSON-lines change log (a
-    WAL shipper that flushes JSON instead of parquet) — envelope_fmt is
-    the only knob."""
-    import json as _json
-
-    src = str(tmp_path / "json_source")
-    os.makedirs(src)
-    rows = [
-        ev("INSERT", "users", 10, 0, after={"pk": 4, "val": "j1"}),
-        ev("UPDATE", "users", 11, 0, after={"pk": 4, "val": "j2"}),
-    ]
-    with open(os.path.join(src, "b1.json"), "w") as f:
-        for r in rows:
-            f.write(_json.dumps(r.asDict()) + "\n")
-
-    cfg = TableConfig(
-        name="users", snapshot_path=env["snap"], keys=["pk"],
-        payload_schema="pk long, val string",
-    )
-    p = Pipeline(
-        spark, src, [cfg], env["sink"], str(tmp_path / "json_work"),
-        envelope_fmt="json",
-    )
-    p.run_until_drained()
-    assert p.status()["tables"]["users"]["state"] == "Ready"
-    assert current(env)[4] == "j2"
-
-
-def test_pipeline_over_csv_envelope_stream(spark, env, tmp_path):
-    """CSV change-log flavor of the same pipeline (envelope_fmt='csv')."""
-    import csv as _csv
-
-    src = str(tmp_path / "csv_source")
-    os.makedirs(src)
-    rows = [
-        ev("INSERT", "users", 10, 0, after={"pk": 5, "val": "c1"}),
-        ev("DELETE", "users", 11, 0, before={"pk": 1}, before_kind="KEY"),
-    ]
-    cols = [f.name for f in GENERIC_ENVELOPE.fields]
-    with open(os.path.join(src, "b1.csv"), "w", newline="") as f:
-        w = _csv.DictWriter(f, fieldnames=cols)
-        w.writeheader()
-        for r in rows:
-            d = r.asDict()
-            # CSV has no list type; missing_cols is absent in this feed
-            d["missing_cols"] = None
-            w.writerow(d)
-
-    cfg = TableConfig(
-        name="users", snapshot_path=env["snap"], keys=["pk"],
-        payload_schema="pk long, val string",
-    )
-    p = Pipeline(
-        spark, src, [cfg], env["sink"], str(tmp_path / "csv_work"),
-        envelope_fmt="csv",
-    )
-    p.run_until_drained()
-    cur = current(env)
-    assert cur[5] == "c1" and 1 not in cur
-
-
-def test_compact_batches_same_state_fewer_writes(spark, env, tmp_path):
-    """Last-image batch compaction: final destination state identical to
-    the uncompacted run; the sink sees ONE row per (key, batch) instead
-    of every intra-batch event (write amplification cut)."""
-    rows = [
-        ev("INSERT", "users", 30, 0, after={"pk": 5, "val": "v0"}),
-        ev("UPDATE", "users", 30, 1, after={"pk": 5, "val": "v1"}),
-        ev("UPDATE", "users", 30, 2, after={"pk": 5, "val": "v2"}),
-        ev("UPDATE", "users", 31, 0, after={"pk": 1, "val": "a9"}),
-        ev("INSERT", "users", 32, 0, after={"pk": 6, "val": "t0"}),
-        ev("DELETE", "users", 33, 0, before={"pk": 6}, before_kind="KEY"),
-    ]
-    write_events(spark, env["source"], rows, "b1")
-
-    seen = []
-    orig = env["sink"].write_changes
-
-    def counting_write(table, df, batch_id):
-        pdf = df.cache()
-        seen.append(pdf.count())
-        orig(table, pdf, batch_id)
-
-    env["sink"].write_changes = counting_write
-    cfg = TableConfig(name="users", snapshot_path=env["snap"], keys=["pk"],
-                      payload_schema=PAYLOAD)
-    p = Pipeline(spark, env["source"], [cfg], env["sink"], env["work"],
-                 compact_batches=True)
-    p.run_until_drained()
-    # one surviving row per touched key: pk5 (last image v2), pk1, pk6
-    # (DELETE tombstone kept — never cancelled against its INSERT)
-    assert sum(seen) == 3
-    assert current(env) == {1: "a9", 2: "b", 3: "c", 5: "v2"}
-
-
-def test_compact_batches_replay_idempotent(spark, env):
-    """Compaction composes with at-least-once replay: wipe the checkpoint,
-    rerun compacted — state unchanged (the tombstone re-applies)."""
-    write_events(spark, env["source"], [
-        ev("INSERT", "users", 40, 0, after={"pk": 7, "val": "q0"}),
-        ev("UPDATE", "users", 40, 1, after={"pk": 7, "val": "q1"}),
-        ev("DELETE", "users", 41, 0, before={"pk": 2}, before_kind="KEY"),
-    ], "b1")
-    cfg = TableConfig(name="users", snapshot_path=env["snap"], keys=["pk"],
-                      payload_schema=PAYLOAD)
-    p = Pipeline(spark, env["source"], [cfg], env["sink"], env["work"],
-                 compact_batches=True)
-    p.run_until_drained()
-    first = current(env)
-    shutil.rmtree(p.checkpoint_dir)
-    p2 = Pipeline(spark, env["source"], [cfg], env["sink"], env["work"],
-                  compact_batches=True)
-    p2.run_until_drained()
-    assert current(env) == first == {1: "a", 3: "c", 7: "q1"}
-
-
-def test_adaptive_batch_budget(spark, env, tmp_path):
-    """T2/A3: the durable batch budget observes the first run's
-    bytes-per-file and re-sizes maxFilesPerTrigger on the next start — a
-    tiny byte target forces one file per micro-batch."""
-    import json as _json
-    import os as _os
-
-    from etl_spark.streaming.budget import BatchBudget, estimate_batch_bytes
-
-    # size-hint sanity: fixed widths + measured string lengths
-    df = spark.createDataFrame([(1, "abcd")], "a long, s string")
-    rows, est = estimate_batch_bytes(df)
-    assert rows == 1 and est == 8 + 4
-
-    for i in range(3):
-        write_events(spark, env["source"], [
-            ev("INSERT", "users", 100 + i, 0, after={"pk": 50 + i, "val": "x"}),
-        ], f"bb{i}")
-    p = make_pipeline(spark, env, batch_budget_bytes=1)
-    p.run_until_drained()
-    state = _json.load(open(_os.path.join(env["work"], "batch_budget.json")))
-    assert state["observations"] >= 1 and state["bytes_per_file"] > 1
-    assert p.budget.recommend() == 1  # 1-byte target < any real file
-
-    # restart: recommendation applies → one file per trigger
-    write_events(spark, env["source"], [
-        ev("INSERT", "users", 200, 0, after={"pk": 60, "val": "y"}),
-        ], "bb3")
-    p2 = make_pipeline(spark, env, batch_budget_bytes=1)
-    p2.run_until_drained()
-    assert p2._files_in_trigger == 1
-    # a roomy budget recommends a larger cap from the same observations
-    roomy = BatchBudget(_os.path.join(env["work"], "batch_budget.json"),
-                        target_bytes=1 << 20)
-    assert roomy.recommend() > 1
-
-
-def test_batch_budget_closed_loop_resizes_microbatches(spark, env):
-    """T2 end-to-end: an UNCAPPED first drain (whole backlog in one
-    micro-batch) seeds bytes-per-file at per-FILE bytes — derived from the
-    batch's actual inputFiles(), never files=1 — and the next start's
-    recommendation demonstrably re-sizes the ACTUAL micro-batches
-    (asserted via the sink's per-batch version bumps)."""
-    import json as _json
-    import os as _os
-
-    for i in range(3):
-        write_events(spark, env["source"], [
-            ev("INSERT", "users", 300 + i, 0, after={"pk": 70 + i, "val": "x"}),
-        ], f"cl{i}")
-    p = make_pipeline(spark, env, batch_budget_bytes=1 << 20)
-    assert p.budget.recommend() is None  # fresh: first run is uncapped
-    p.run_until_drained()
-    state = _json.load(open(_os.path.join(env["work"], "batch_budget.json")))
-    bpf = state["bytes_per_file"]
-    # the 3-file backlog drained in ONE batch: per-file estimate, not
-    # whole-backlog-per-file (the files=1 seeding bug would clamp the
-    # next start to maxFilesPerTrigger=1 for many batches)
-    from etl_spark.envelope import with_sequence
-    from etl_spark.streaming.budget import estimate_batch_bytes
-    _rows, est_full = estimate_batch_bytes(
-        with_sequence(spark.read.parquet(env["source"])))
-    assert bpf <= 0.5 * est_full  # ≈ backlog/3 per file, not backlog/1
-
-    for i in range(4):
-        write_events(spark, env["source"], [
-            ev("INSERT", "users", 400 + i, 0, after={"pk": 80 + i, "val": "y"}),
-        ], f"cl2_{i}")
-    v_before = env["sink"]._current_version("users")
-    p2 = make_pipeline(spark, env, batch_budget_bytes=int(2 * bpf))
-    p2.run_until_drained()
-    assert p2._files_in_trigger == 2  # recommendation applied at start
-    # 4 pending files at 2 files/trigger → exactly 2 micro-batches, each
-    # committing one sink version
-    assert env["sink"]._current_version("users") - v_before == 2
-    assert current(env)[83] == "y"
 
 
 def test_flush_ledger_batch_returns_snapshot(tmp_path):

@@ -226,3 +226,57 @@ def test_transactions_counter_exact_across_split_transaction(spark, tmp_path):
     assert n_files >= 2, "transaction did not split across triggers"
     assert reg.value(telemetry.ETL_TRANSACTIONS_TOTAL) == 1
     assert reg.value(telemetry.ETL_EVENTS_PROCESSED_TOTAL) == 3
+
+
+def _job_description(spark):
+    return spark.sparkContext.getLocalProperty("spark.job.description")
+
+
+def test_wire_stats_job_description_reset_on_failure(spark, tmp_path, monkeypatch):
+    """A failing wire-stats collect must not leave its job description
+    on the thread: every later job in the session would carry it."""
+    from etl_spark.sources import pgoutput as pgo
+    from etl_spark.streaming.pipeline import Pipeline
+    from etl_spark.streaming.sinks import MemorySink
+
+    def boom(*_a, **_k):
+        raise RuntimeError("wire-stats failed")
+
+    monkeypatch.setattr(pgo, "collect_wire_stats", boom)
+    pipe = Pipeline(spark, str(tmp_path / "frames"), [], MemorySink(),
+                    str(tmp_path / "work"), source_fmt="pgoutput",
+                    metrics_registry=telemetry.MetricsRegistry())
+    frames = spark.createDataFrame([], pgo.FRAME_SCHEMA)
+    try:
+        with pytest.raises(RuntimeError, match="wire-stats failed"):
+            pipe._apply_batch(frames, 0)
+        assert _job_description(spark) is None
+    finally:
+        spark.sparkContext.setJobDescription(None)
+
+
+def test_batch_stats_job_description_reset_on_failure(spark, tmp_path):
+    """Same guarantee for the batch-stats collect: a batch whose rows fail
+    at execution time leaves no description behind."""
+    from pyspark.sql import functions as F
+
+    from etl_spark.envelope import GENERIC_ENVELOPE, with_sequence
+    from etl_spark.streaming.pipeline import Pipeline
+    from etl_spark.streaming.sinks import MemorySink
+
+    pipe = Pipeline(spark, str(tmp_path / "src"), [], MemorySink(),
+                    str(tmp_path / "work"),
+                    metrics_registry=telemetry.MetricsRegistry())
+    rows = spark.createDataFrame(
+        [("INSERT", "t", 1, 1, 0, None, None, None, None, None)],
+        GENERIC_ENVELOPE)
+    batch = with_sequence(rows).withColumn(
+        "commit_lsn",
+        F.coalesce(F.raise_error(F.lit("batch-stats failed")).cast("long"),
+                   F.col("commit_lsn")))
+    try:
+        with pytest.raises(Exception, match="batch-stats failed"):
+            pipe._apply_batch(batch, 0)
+        assert _job_description(spark) is None
+    finally:
+        spark.sparkContext.setJobDescription(None)
