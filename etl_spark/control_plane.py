@@ -32,9 +32,10 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import SparkSession
+
+from etl_spark.state import write_json_atomic
 
 #: reference MAX_PIPELINES_PER_TENANT default
 MAX_PIPELINES = 10
@@ -179,16 +180,14 @@ class PipelineRegistry:
             pass
 
     def _save(self) -> None:
-        fd, tmp = tempfile.mkstemp(dir=self.root)
-        with os.fdopen(fd, "w") as f:
-            json.dump(
-                {"pipelines": {str(k): v for k, v in self._configs.items()},
-                 "next_id": self._next_id,
-                 "tenants": self._tenants,
-                 "sources": {str(k): v for k, v in self._sources.items()},
-                 "destinations": {str(k): v for k, v in self._destinations.items()},
-                 "next_resource_id": self._next_resource_id}, f, indent=1)
-        os.replace(tmp, self._path)
+        write_json_atomic(self._path, {
+            "pipelines": {str(k): v for k, v in self._configs.items()},
+            "next_id": self._next_id,
+            "tenants": self._tenants,
+            "sources": {str(k): v for k, v in self._sources.items()},
+            "destinations": {str(k): v for k, v in self._destinations.items()},
+            "next_resource_id": self._next_resource_id,
+        })
 
     # -- tenants (tenants.rs: caller-supplied id + display name) -------------
     def create_tenant(self, tenant_id: str, name: str) -> str:
@@ -500,7 +499,7 @@ class PipelineRegistry:
                 if not os.path.isdir(tdir):
                     report[t["name"]] = {"compacted": False, "folded_batches": []}
                     continue
-                folded = sink.compact(spark, t["name"])
+                folded = sink.compact(t["name"])
                 report[t["name"]] = {"compacted": bool(folded),
                                      "folded_batches": folded}
             return report

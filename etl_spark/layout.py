@@ -1,25 +1,18 @@
-"""Physical table layout for 100 TB: bucketing and partition planning.
+"""Physical table layout for 100 TB: bucketing and clustering keys.
 
 The reference plans its parallel snapshot scan by physical CTID block
 ranges (copy.rs:53-58,132-161) — the layout decision that makes the copy
-parallel. At Spark scale the analogous decisions are:
-
-- **bucketing**: persist fact tables bucketed by their join/merge key so
-  repeated joins (orders ⋈ lineitem, CDC merge by pk) are co-located and
-  shuffle-free — the single biggest recurring-cost lever on a big cluster.
-  Read both tables back with ``spark.table`` so Catalyst sees the bucket
-  spec, and a plain ``join`` plans with no exchange on either side;
-- **partition sizing**: pick file-split / shuffle-partition counts from
-  byte budgets, the batch-budget idea (batch_budget.rs:22-70) applied to
-  layout.
+parallel. At Spark scale the analogous decision is **bucketing**: persist
+fact tables bucketed by their join/merge key so repeated joins (orders ⋈
+lineitem, CDC merge by pk) are co-located and shuffle-free — the single
+biggest recurring-cost lever on a big cluster. Read both tables back with
+``spark.table`` so Catalyst sees the bucket spec, and a plain ``join``
+plans with no exchange on either side.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-
-#: reference scan-planning cap (copy.rs:53-58), reused for shuffle sizing
-MAX_PARTITIONS = 1024
 
 
 def bucket_table(
@@ -41,14 +34,6 @@ def bucket_table(
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(name)
-
-
-def shuffle_partitions_for_bytes(
-    total_bytes: int, target_partition_bytes: int = 128 * 1024 * 1024
-) -> int:
-    """Shuffle-partition count sized so post-shuffle partitions hit a byte
-    budget (AQE coalescing treats it as a ceiling, not a commitment)."""
-    return max(1, min(MAX_PARTITIONS * 8, -(-total_bytes // target_partition_bytes)))
 
 
 def zorder_key(a, b, bits: int = 16):

@@ -25,8 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def plan_compaction_partitions(total_bytes: int, target_mb: int = 128) -> int:
-    """File count sized to a byte budget — same planning rule as the scan
-    side (layout.shuffle_partitions_for_bytes), applied to output files."""
+    """File count sized to a byte budget (ceil of bytes / target)."""
     target = target_mb * 1024 * 1024
     return max(1, -(-total_bytes // target))
 

@@ -36,9 +36,10 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 import time
 from dataclasses import asdict, dataclass, field
+
+from etl_spark.state import write_json_atomic
 
 DEFAULT_MAX_PAUSE_SECONDS = 2700.0
 
@@ -165,12 +166,7 @@ class FileMaintenanceStore:
             "last_completed_at": st.last_completed_at,
             "pause_max_duration_seconds": st.pause_max_duration_seconds,
         }
-        fd, tmp = tempfile.mkstemp(
-            dir=os.path.dirname(os.path.abspath(self.path)) or "."
-        )
-        with os.fdopen(fd, "w") as fh:
-            json.dump(doc, fh)
-        os.replace(tmp, self.path)  # atomic on POSIX
+        write_json_atomic(self.path, doc)
 
     def initialize(self) -> None:
         """Creates the empty coordination document (a pipeline without

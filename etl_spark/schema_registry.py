@@ -21,8 +21,9 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 from dataclasses import dataclass, field
+
+from etl_spark.state import write_json_atomic
 
 
 @dataclass
@@ -97,12 +98,7 @@ class SchemaRegistry:
     # the O(n^2) a whole-registry rewrite per record would cost (same
     # restructure as ControlStore; see SCALE.md "table-count scaling").
     # The reference stores schema versions as per-(table, version) rows
-    # (store/schema/base.rs) for the same reason. A legacy single-file
-    # schemas.json migrates on first load.
-
-    @property
-    def _legacy_path(self) -> str:
-        return os.path.join(self.root, "schemas.json")
+    # (store/schema/base.rs) for the same reason.
 
     @property
     def _tables_dir(self) -> str:
@@ -121,15 +117,6 @@ class SchemaRegistry:
         ]
 
     def _load(self) -> None:
-        if os.path.exists(self._legacy_path):
-            # one-time migration from the single-file layout
-            with open(self._legacy_path) as f:
-                raw = json.load(f)
-            for table, versions in raw.items():
-                self._versions[table] = self._decode_versions(versions)
-                self._save_table(table)
-            os.remove(self._legacy_path)
-            return
         if not os.path.isdir(self._tables_dir):
             return
         for fn in os.listdir(self._tables_dir):
@@ -147,11 +134,7 @@ class SchemaRegistry:
                 for lsn, cols in self._versions.get(table, [])
             ],
         }
-        os.makedirs(self._tables_dir, exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=self._tables_dir)
-        with os.fdopen(fd, "w") as f:
-            json.dump(payload, f, indent=1)
-        os.replace(tmp, self._table_path(table))
+        write_json_atomic(self._table_path(table), payload)
 
     def record(self, table: str, snapshot_lsn: int, columns: list[ColumnDef]) -> bool:
         """Returns True when a NEW version was recorded (False on the

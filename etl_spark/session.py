@@ -75,7 +75,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         # driver testdata writes TIMESTAMP(NANOS) parquet, which Spark has no
-        # native type for; read as long and convert via ts_from_nanos()
+        # native type for; read as long (epoch nanos, io.read_table's contract)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # long-running sessions accumulate finished-query shuffle/broadcast

@@ -25,13 +25,6 @@ from etl_spark.envelope import GENERIC_ENVELOPE, with_sequence
 from etl_spark.io import read_table
 
 
-def ts_from_nanos(col):
-    """TIMESTAMP(NANOS) parquet columns arrive as long (nanosAsLong);
-    convert to TimestampNTZ at micro precision."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.timestamp_micros((c / 1000).cast("long")).cast("timestamp_ntz")
-
-
 def stream_changes(
     spark: SparkSession, path: str, table: str | None = None
 ) -> DataFrame:

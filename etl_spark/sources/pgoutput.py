@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from etl_spark.envelope import with_sequence
+from etl_spark.state import write_json_atomic
 
 # ---------------------------------------------------------------------------
 # TupleData cells (protocol: n / u / t; reference event.rs:941-985)
@@ -711,8 +712,7 @@ class PersistentRelationRegistry:
     still never worse than the previous newest-only behavior.
 
     Persisted shape: ``{rel_id: [[wal_start, spec], ...]}`` sorted by
-    position; legacy newest-only snapshots (``{rel_id: spec}``) migrate
-    in place as a single version at position 0 (matches every frame).
+    position.
     """
 
     def __init__(self, path: str, max_versions: int = 64):
@@ -723,12 +723,9 @@ class PersistentRelationRegistry:
             with open(path) as f:
                 raw = json.load(f)
             for k, v in raw.items():
-                if isinstance(v, dict):  # legacy newest-only snapshot
-                    self._reg[int(k)] = [[0, v]]
-                else:
-                    self._reg[int(k)] = sorted(
-                        ([int(w), s] for w, s in v), key=lambda t: t[0]
-                    )
+                self._reg[int(k)] = sorted(
+                    ([int(w), s] for w, s in v), key=lambda t: t[0]
+                )
         except FileNotFoundError:
             pass
 
@@ -749,14 +746,7 @@ class PersistentRelationRegistry:
             cur.sort(key=lambda t: t[0])
             if len(cur) > self.max_versions:
                 del cur[: len(cur) - self.max_versions]
-        import os
-        import tempfile
-
-        os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(self.path) or ".")
-        with os.fdopen(fd, "w") as f:
-            json.dump({str(k): v for k, v in self._reg.items()}, f)
-        os.replace(tmp, self.path)
+        write_json_atomic(self.path, {str(k): v for k, v in self._reg.items()})
 
     def snapshot(self) -> dict[int, list[tuple[int, dict]]]:
         """Versioned view: ``{rel_id: [(wal_start, spec), ...]}`` sorted.
@@ -794,14 +784,9 @@ class PersistentTypeRegistry:
         :meth:`PersistentRelationRegistry.ingest`)."""
         if new:
             self._reg.update(new)
-            import os
-            import tempfile
-
-            os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
-            fd, tmp = tempfile.mkstemp(dir=os.path.dirname(self.path) or ".")
-            with os.fdopen(fd, "w") as f:
-                json.dump({str(k): v for k, v in self._reg.items()}, f)
-            os.replace(tmp, self.path)
+            write_json_atomic(
+                self.path, {str(k): v for k, v in self._reg.items()}
+            )
 
     def snapshot(self) -> dict[int, str]:
         return dict(self._reg)
@@ -840,8 +825,7 @@ class PersistentTxRegistry:
     envelope rows the transaction has already emitted in prior batches.
     Entries drop when the COMMIT frame is folded. State size is bounded
     by the number of *concurrently open* long transactions, not WAL
-    volume. Legacy flat snapshots migrate as one generation at
-    watermark 0.
+    volume.
     """
 
     def __init__(self, path: str):
@@ -851,14 +835,11 @@ class PersistentTxRegistry:
         try:
             with open(path) as f:
                 raw = json.load(f)
-            if isinstance(raw, dict) and "gens" in raw:
-                self._gens = [
-                    [int(w), {int(k): v for k, v in st.items()}]
-                    for w, st in raw["gens"]
-                ]
-                self._gens.sort(key=lambda g: g[0])
-            elif isinstance(raw, dict):  # legacy flat snapshot
-                self._gens = [[0, {int(k): v for k, v in raw.items()}]]
+            self._gens = sorted(
+                ([int(w), {int(k): v for k, v in st.items()}]
+                 for w, st in raw["gens"]),
+                key=lambda g: g[0],
+            )
         except FileNotFoundError:
             pass
 
@@ -1011,16 +992,9 @@ class PersistentTxRegistry:
         self._gens.append([mx, tx])
         if len(self._gens) > 2:
             del self._gens[: len(self._gens) - 2]
-        import os
-        import tempfile
-
-        os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(self.path) or ".")
-        with os.fdopen(fd, "w") as f:
-            json.dump({"gens": [
-                [w, {str(k): v for k, v in st.items()}] for w, st in self._gens
-            ]}, f)
-        os.replace(tmp, self.path)
+        write_json_atomic(self.path, {"gens": [
+            [w, {str(k): v for k, v in st.items()}] for w, st in self._gens
+        ]})
 
 
 class WireBatchStats:

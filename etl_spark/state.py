@@ -27,6 +27,22 @@ from dataclasses import dataclass, field
 from enum import Enum
 
 
+def write_json_atomic(path: str, payload) -> None:
+    """Atomically replace ``path`` with ``payload`` as JSON: write a temp
+    file in the same directory, then ``os.replace`` it over the target, so
+    a reader sees the old document or the new one, never a torn one. The
+    one writer of every durable JSON file the engine keeps (control state,
+    schema versions, wire registries, sink manifests and pointers, the
+    flush ledger, control-plane configs). No ``fsync``: the rename is
+    atomic, but not durable against power loss."""
+    d = os.path.dirname(path) or "."
+    os.makedirs(d, exist_ok=True)
+    fd, tmp = tempfile.mkstemp(dir=d)
+    with os.fdopen(fd, "w") as f:
+        json.dump(payload, f)
+    os.replace(tmp, path)
+
+
 class TableState(str, Enum):
     INIT = "Init"
     DATA_SYNC = "DataSync"
@@ -123,12 +139,7 @@ class ControlStore:
     # "table-count scaling"). The reference stores per-table replication
     # state as ROWS in its state store for the same reason
     # (store/state/base.rs) — one row updated per transition, never the
-    # whole table list. A legacy single-file control.json is migrated to
-    # the per-table layout on first load.
-
-    @property
-    def _legacy_path(self) -> str:
-        return os.path.join(self.root, "control.json")
+    # whole table list.
 
     @property
     def _flush_path(self) -> str:
@@ -156,19 +167,6 @@ class ControlStore:
         )
 
     def _load(self) -> None:
-        if os.path.exists(self._legacy_path):
-            # one-time migration from the single-file layout
-            with open(self._legacy_path) as f:
-                raw = json.load(f)
-            self.flush_lsn = raw.get("flush_lsn", 0)
-            self.tables = {
-                t["table"]: self._entry_from(t) for t in raw.get("tables", [])
-            }
-            self._save_flush()
-            for e in self.tables.values():
-                self._save_table(e)
-            os.remove(self._legacy_path)
-            return
         if os.path.exists(self._flush_path):
             with open(self._flush_path) as f:
                 self.flush_lsn = json.load(f).get("flush_lsn", 0)
@@ -180,22 +178,15 @@ class ControlStore:
                     t = json.load(f)
                 self.tables[t["table"]] = self._entry_from(t)
 
-    def _write_atomic(self, path: str, payload: dict) -> None:
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path))
-        with os.fdopen(fd, "w") as f:
-            json.dump(payload, f, indent=1)
-        os.replace(tmp, path)
-
     def _save_flush(self) -> None:
-        self._write_atomic(self._flush_path, {"flush_lsn": self.flush_lsn})
+        write_json_atomic(self._flush_path, {"flush_lsn": self.flush_lsn})
 
     def _save_table(self, e: TableEntry) -> None:
         if e.state not in DURABLE_STATES:
             # memory-only states (SyncWait/Catchup) keep the previous
             # durable file; restart_reset sends both back to Init anyway
             return
-        self._write_atomic(self._table_path(e.table), {
+        write_json_atomic(self._table_path(e.table), {
             "table": e.table,
             "state": e.state.value,
             "lsn": e.lsn,

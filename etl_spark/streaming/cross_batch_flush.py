@@ -43,12 +43,12 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import tempfile
 import threading
 from concurrent.futures import Future, ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 
+from etl_spark.state import write_json_atomic
 from etl_spark.streaming.sinks import Sink
 
 
@@ -76,11 +76,7 @@ class FlushLedger:
             pass
 
     def _save(self) -> None:
-        os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(self.path) or ".")
-        with os.fdopen(fd, "w") as f:
-            json.dump({str(k): v for k, v in self._b.items()}, f)
-        os.replace(tmp, self.path)
+        write_json_atomic(self.path, {str(k): v for k, v in self._b.items()})
 
     def open_batch(self, batch_id: int, max_lsn: int | None) -> None:
         with self._mu:
@@ -310,15 +306,11 @@ class CrossBatchFlushSink(Sink):
         self.settle_previous()
         self.inner.write_snapshot(table, df)
 
-    def startup(self) -> None:
-        self.inner.startup()
-
     def shutdown(self) -> None:
         try:
             self.settle_previous()
         finally:
             self._pool.shutdown(wait=True)
-            self.inner.shutdown()
 
     def read(self, *args, **kwargs):
         self.settle_previous()

@@ -63,6 +63,20 @@ def _duck_type(typ: str) -> str:
     return _DUCK_TYPES.get(t, typ)
 
 
+#: envelope columns every change batch carries; everything else is data
+_ENVELOPE = ("op", "commit_lsn", "tx_ordinal", "event_seq")
+
+
+def _scan(staged: str) -> str:
+    return f"read_parquet('{staged}/*.parquet')"
+
+
+def _table_exists(con, table: str) -> bool:
+    return con.execute(
+        "SELECT 1 FROM information_schema.tables WHERE table_name = ?", [table]
+    ).fetchone() is not None
+
+
 def _table_columns(con, table: str) -> list[str]:
     return [
         r[0]
@@ -78,7 +92,7 @@ def _staged_types(con, staged: str) -> dict[str, str]:
     return {
         r[0]: r[1]
         for r in con.execute(
-            f"DESCRIBE SELECT * FROM read_parquet('{staged}/*.parquet')"
+            f"DESCRIBE SELECT * FROM {_scan(staged)}"
         ).fetchall()
     }
 
@@ -105,18 +119,9 @@ def _alter_table(con, table, renames=None, drops=None,
     (schema.rs:729-784), idempotent under batch replay (a rename whose
     source column no longer exists, or a drop of an already-dropped
     column, is skipped; nullability ALTERs are naturally idempotent)."""
-    exists = con.execute(
-        "SELECT 1 FROM information_schema.tables WHERE table_name = ?", [table]
-    ).fetchone()
-    if not exists:
+    if not _table_exists(con, table):
         return
-    cols = {
-        r[0]
-        for r in con.execute(
-            "SELECT column_name FROM information_schema.columns "
-            "WHERE table_name = ?", [table],
-        ).fetchall()
-    }
+    cols = set(_table_columns(con, table))
     for old, new in (renames or []):
         if old in cols and new not in cols:
             con.execute(f'ALTER TABLE "{table}" RENAME COLUMN "{old}" TO "{new}"')
@@ -153,7 +158,109 @@ def _alter_table(con, table, renames=None, drops=None,
             con.execute(f'ALTER TABLE "{table}" ALTER COLUMN "{col}" {verb}')
 
 
-class DuckDBCurrentStateSink(Sink):
+class _DuckDBSink(Sink):
+    """Shared body of the DuckDB sinks: the idempotent-sink contract of
+    the reference's warehouse destinations — stage the batch, merge it,
+    and record its batch id in ``applied_batches`` in the SAME
+    transaction, so a replayed batch is a no-op (ducklake/core.rs:74-80;
+    the contract Structured Streaming's foreachBatch relies on).
+
+    The base owns the ledger, staging, the ``write_changes`` skeleton
+    (replay check → stage → widen → BEGIN → merge → ledger row →
+    COMMIT), truncate, ALTERs (keys follow renames) and read-back, each
+    looped over :meth:`_tables` — every DuckDB table that backs one
+    logical table. A subclass supplies only its SQL:
+    ``_snapshot_sql(table, cols, staged, snapshot_lsn)`` and
+    ``_merge_sql(table, cols, staged)``, where ``cols`` are the batch's
+    data (non-envelope) columns and ``staged`` the staged parquet dir.
+
+    Every method opens its connection in a ``with`` block: a statement
+    that raises closes the connection, which rolls back an open
+    transaction and releases the database file for other connections."""
+
+    def __init__(self, db_path: str, keys: dict[str, list[str]],
+                 staging_dir: str | None = None):
+        self.db_path = db_path
+        self.keys = keys  # table -> replica identity columns
+        self.staging_dir = staging_dir or tempfile.mkdtemp(prefix="etl_stage_")
+        with self._con() as con:
+            con.execute(
+                "CREATE TABLE IF NOT EXISTS applied_batches ("
+                "  tbl VARCHAR, batch_id BIGINT, PRIMARY KEY (tbl, batch_id))"
+            )
+
+    def _con(self):
+        return duckdb.connect(self.db_path)
+
+    def _tables(self, table: str) -> list[str]:
+        return [table]
+
+    def _stage(self, table: str, df: DataFrame, tag: str) -> str:
+        out = os.path.join(self.staging_dir, table, tag)
+        df.write.mode("overwrite").parquet(out)
+        return out
+
+    # -- Sink ----------------------------------------------------------------
+    def write_snapshot(self, table: str, df: DataFrame, snapshot_lsn: int = 0) -> None:
+        staged = self._stage(table, df, "snapshot")
+        cols = [c for c in df.columns if c not in _ENVELOPE]
+        with self._con() as con:
+            for t in self._tables(table):
+                con.execute(f'DROP TABLE IF EXISTS "{t}"')
+            for sql in self._snapshot_sql(table, cols, staged, snapshot_lsn):
+                con.execute(sql)
+            con.execute("DELETE FROM applied_batches WHERE tbl = ?", [table])
+
+    def write_changes(self, table: str, df: DataFrame, batch_id: int) -> None:
+        with self._con() as con:
+            if con.execute(
+                "SELECT 1 FROM applied_batches WHERE tbl = ? AND batch_id = ?",
+                [table, batch_id],
+            ).fetchone():
+                return  # replay: already durable in the warehouse
+            staged = self._stage(table, df, f"batch_{batch_id}")
+            cols = [c for c in df.columns if c not in _ENVELOPE]
+            # a pure ADD COLUMN arrives only as a wider batch — add it to
+            # every backing table before the merge (typed from the staged
+            # parquet)
+            types = _staged_types(con, staged)
+            for t in self._tables(table):
+                _ensure_columns(con, t, cols, types)
+            con.execute("BEGIN")
+            for sql in self._merge_sql(table, cols, staged):
+                con.execute(sql)
+            con.execute("INSERT INTO applied_batches VALUES (?, ?)", [table, batch_id])
+            con.execute("COMMIT")
+
+    def reconcile_keys(self, table: str, keys) -> None:
+        self.keys[table] = list(keys)
+
+    def truncate(self, table: str) -> None:
+        with self._con() as con:
+            for t in self._tables(table):
+                if _table_exists(con, t):
+                    con.execute(f'DELETE FROM "{t}"')
+            con.execute("DELETE FROM applied_batches WHERE tbl = ?", [table])
+
+    def apply_schema_change(self, table, renames=None, drops=None,
+                            defaults=None, nullability=None) -> None:
+        """The SchemaDiff as ALTERs on every backing table, so later
+        merges see the evolved payload."""
+        with self._con() as con:
+            for t in self._tables(table):
+                _alter_table(con, t, renames, drops, defaults, nullability)
+        # key columns follow renames so the staged MERGE keeps matching
+        ren = dict(renames or [])
+        if table in self.keys:
+            self.keys[table] = [ren.get(k, k) for k in self.keys[table]]
+
+    def read(self, table: str):
+        """Driver-side read-back (tests): list of dict rows."""
+        with self._con() as con:
+            return con.execute(f'SELECT * FROM "{table}"').df().to_dict("records")
+
+
+class DuckDBCurrentStateSink(_DuckDBSink):
     """Current-state (LWW) tables materialized inside a DuckDB database.
 
     DELIVERY CONTRACT — what the LWW protection spans. A key's
@@ -175,112 +282,38 @@ class DuckDBCurrentStateSink(Sink):
     replay, so the stronger contract is unnecessary here; pinned by
     ``tests/test_streaming.py::test_duckdb_sink_delivery_contract``."""
 
-    def __init__(self, db_path: str, keys: dict[str, list[str]], staging_dir: str | None = None):
-        self.db_path = db_path
-        self.keys = keys  # table -> replica identity columns
-        self.staging_dir = staging_dir or tempfile.mkdtemp(prefix="etl_stage_")
-        con = self._con()
-        con.execute(
-            "CREATE TABLE IF NOT EXISTS applied_batches ("
-            "  tbl VARCHAR, batch_id BIGINT, PRIMARY KEY (tbl, batch_id))"
-        )
-        con.close()
-
-    def _con(self):
-        return duckdb.connect(self.db_path)
-
-    def _stage(self, table: str, df: DataFrame, tag: str) -> str:
-        out = os.path.join(self.staging_dir, table, tag)
-        df.write.mode("overwrite").parquet(out)
-        return out
-
-    # -- Sink ----------------------------------------------------------------
-    def write_snapshot(self, table: str, df: DataFrame, snapshot_lsn: int = 0) -> None:
-        staged = self._stage(table, df, "snapshot")
-        con = self._con()
-        con.execute(f'DROP TABLE IF EXISTS "{table}"')
-        con.execute(
+    def _snapshot_sql(self, table, cols, staged, snapshot_lsn):
+        return [
             f'CREATE TABLE "{table}" AS '
             f"SELECT *, CAST({snapshot_lsn} AS HUGEINT) AS _etl_seq "
-            f"FROM read_parquet('{staged}/*.parquet')"
-        )
-        con.execute("DELETE FROM applied_batches WHERE tbl = ?", [table])
-        con.close()
+            f"FROM {_scan(staged)}"
+        ]
 
-    def write_changes(self, table: str, df: DataFrame, batch_id: int) -> None:
-        con = self._con()
-        seen = con.execute(
-            "SELECT 1 FROM applied_batches WHERE tbl = ? AND batch_id = ?",
-            [table, batch_id],
-        ).fetchone()
-        if seen:  # replay: already durable in the warehouse
-            con.close()
-            return
-        cols = [c for c in df.columns if c not in ("op", "commit_lsn", "tx_ordinal", "event_seq")]
-        staged = self._stage(table, df, f"batch_{batch_id}")
+    def _merge_sql(self, table, cols, staged):
         keys = self.keys[table]
         key_eq = " AND ".join(f't."{k}" = w.{k}' for k in keys)
         col_list = ", ".join(f'"{c}"' for c in cols)
-        # a pure ADD COLUMN arrives only as a wider batch — add it to the
-        # warehouse table before the merge (typed from the staged parquet)
-        _ensure_columns(con, table, cols, _staged_types(con, staged))
-        con.execute("BEGIN")
         # winner per key within the batch (LWW by event_seq), then delete
         # superseded target rows and insert survivors — the staging-merge
         # pattern every reference warehouse destination uses
-        con.execute(
+        return [
             f"CREATE TEMP TABLE w AS "
             f"SELECT * FROM ("
             f"  SELECT *, row_number() OVER ("
             f"    PARTITION BY {', '.join(keys)} ORDER BY CAST(event_seq AS HUGEINT) DESC) AS rn"
-            f"  FROM read_parquet('{staged}/*.parquet')) WHERE rn = 1"
-        )
-        con.execute(f'DELETE FROM "{table}" t USING w WHERE {key_eq} AND CAST(w.event_seq AS HUGEINT) > t._etl_seq')
-        # explicit target column list: ALTER ADD appends at the table's
-        # end (after _etl_seq), so a positional INSERT would misalign the
-        # first post-ADD batch — name every column on both sides
-        con.execute(
+            f"  FROM {_scan(staged)}) WHERE rn = 1",
+            f'DELETE FROM "{table}" t USING w WHERE {key_eq} AND CAST(w.event_seq AS HUGEINT) > t._etl_seq',
+            # explicit target column list: ALTER ADD appends at the table's
+            # end (after _etl_seq), so a positional INSERT would misalign
+            # the first post-ADD batch — name every column on both sides
             f'INSERT INTO "{table}" ({col_list}, _etl_seq) '
             f"SELECT {col_list}, CAST(event_seq AS HUGEINT) FROM w "
             f"WHERE op <> 'DELETE' AND NOT EXISTS ("
-            f'  SELECT 1 FROM "{table}" t WHERE {key_eq})'
-        )
-        con.execute("INSERT INTO applied_batches VALUES (?, ?)", [table, batch_id])
-        con.execute("COMMIT")
-        con.close()
-
-    def reconcile_keys(self, table: str, keys) -> None:
-        self.keys[table] = list(keys)
-
-    def truncate(self, table: str) -> None:
-        con = self._con()
-        exists = con.execute(
-            "SELECT 1 FROM information_schema.tables WHERE table_name = ?", [table]
-        ).fetchone()
-        if exists:
-            con.execute(f'DELETE FROM "{table}"')
-        con.execute("DELETE FROM applied_batches WHERE tbl = ?", [table])
-        con.close()
-
-    def apply_schema_change(self, table, renames=None, drops=None,
-                            defaults=None, nullability=None) -> None:
-        con = self._con()
-        _alter_table(con, table, renames, drops, defaults, nullability)
-        # key columns follow renames so the staged MERGE keeps matching
-        ren = dict(renames or [])
-        if table in self.keys:
-            self.keys[table] = [ren.get(k, k) for k in self.keys[table]]
-        con.close()
-
-    def read(self, table: str):
-        """Driver-side read-back (tests): list of dict rows."""
-        con = self._con()
-        out = con.execute(f'SELECT * FROM "{table}"').df().to_dict("records")
-        con.close()
-        return out
+            f'  SELECT 1 FROM "{table}" t WHERE {key_eq})',
+        ]
 
 
-class DuckDBScd2Sink(Sink):
+class DuckDBScd2Sink(_DuckDBSink):
     """Versioned-dimension (SCD type-2) tables maintained inside a DuckDB
     database — the warehouse twin of :class:`~etl_spark.streaming.sinks.
     ParquetScd2Sink`, with the same division of labor as
@@ -299,26 +332,11 @@ class DuckDBScd2Sink(Sink):
     identical to :class:`DuckDBCurrentStateSink` (ordered batches +
     whole-batch replays; the event-history dedup additionally makes
     PARTIAL replays of mixed batches inert, which the current-state sink
-    cannot promise after tombstones)."""
+    cannot promise after tombstones). Schema changes and pure ADD COLUMNs
+    reach BOTH tables."""
 
-    def __init__(self, db_path: str, keys: dict[str, list[str]], staging_dir: str | None = None):
-        self.db_path = db_path
-        self.keys = keys
-        self.staging_dir = staging_dir or tempfile.mkdtemp(prefix="etl_stage_")
-        con = self._con()
-        con.execute(
-            "CREATE TABLE IF NOT EXISTS applied_batches ("
-            "  tbl VARCHAR, batch_id BIGINT, PRIMARY KEY (tbl, batch_id))"
-        )
-        con.close()
-
-    def _con(self):
-        return duckdb.connect(self.db_path)
-
-    def _stage(self, table: str, df: DataFrame, tag: str) -> str:
-        out = os.path.join(self.staging_dir, table, tag)
-        df.write.mode("overwrite").parquet(out)
-        return out
+    def _tables(self, table: str) -> list[str]:
+        return [table, f"{table}__events"]
 
     def _derive_sql(self, table: str, keys: list[str], payload: list[str],
                     key_filter: str) -> str:
@@ -344,124 +362,58 @@ class DuckDBScd2Sink(Sink):
             f") WHERE op <> 'DELETE'"
         )
 
-    # -- Sink ----------------------------------------------------------------
-    def write_snapshot(self, table: str, df: DataFrame, snapshot_lsn: int = 0) -> None:
-        staged = self._stage(table, df, "snapshot")
+    def _snapshot_sql(self, table, cols, staged, snapshot_lsn):
         keys = self.keys[table]
-        payload = [c for c in df.columns
-                   if c not in keys + ["op", "commit_lsn", "tx_ordinal", "event_seq"]]
+        payload = [c for c in cols if c not in keys]
         key_list = ", ".join(f'"{k}"' for k in keys)
         pay_list = "".join(f', "{c}"' for c in payload)
-        con = self._con()
-        con.execute(f'DROP TABLE IF EXISTS "{table}"')
-        con.execute(f'DROP TABLE IF EXISTS "{table}__events"')
-        con.execute(
+        return [
             f'CREATE TABLE "{table}__events" AS '
             f"SELECT {key_list}{pay_list}, 'INSERT' AS op,"
             f"       CAST({snapshot_lsn} AS BIGINT) AS commit_lsn,"
             f"       CAST(0 AS BIGINT) AS tx_ordinal,"
             f"       CAST({snapshot_lsn} AS HUGEINT) * 18446744073709551616 AS _etl_seq "
-            f"FROM read_parquet('{staged}/*.parquet')"
-        )
-        con.execute(
+            f"FROM {_scan(staged)}",
             f'CREATE TABLE "{table}" AS '
             f"SELECT {key_list}, op, commit_lsn AS valid_from, tx_ordinal,"
             f"       CAST(NULL AS BIGINT) AS valid_to, TRUE AS is_current"
             f"{pay_list} "
-            f'FROM "{table}__events" WHERE 1 = 0'
-        )
-        con.execute(self._derive_sql(table, keys, payload, ""))
-        con.execute("DELETE FROM applied_batches WHERE tbl = ?", [table])
-        con.close()
+            f'FROM "{table}__events" WHERE 1 = 0',
+            self._derive_sql(table, keys, payload, ""),
+        ]
 
-    def write_changes(self, table: str, df: DataFrame, batch_id: int) -> None:
-        con = self._con()
-        seen = con.execute(
-            "SELECT 1 FROM applied_batches WHERE tbl = ? AND batch_id = ?",
-            [table, batch_id],
-        ).fetchone()
-        if seen:
-            con.close()
-            return
-        staged = self._stage(table, df, f"batch_{batch_id}")
+    def _merge_sql(self, table, cols, staged):
         keys = self.keys[table]
         key_list = ", ".join(f'"{k}"' for k in keys)
         key_eq = " AND ".join(f'e."{k}" = s."{k}"' for k in keys)
-        payload = [c for c in df.columns
-                   if c not in keys + ["op", "commit_lsn", "tx_ordinal", "event_seq"]]
-        ev_cols = keys + payload + ["op", "commit_lsn", "tx_ordinal"]
-        ev_list = ", ".join(f'"{c}"' for c in ev_cols)
-        # pure ADD COLUMN arrives only as a wider batch: add the new
-        # payload column to BOTH the event history and the version table
-        staged_types = _staged_types(con, staged)
-        _ensure_columns(con, f"{table}__events", ev_cols, staged_types)
-        _ensure_columns(con, table, payload, staged_types)
-        con.execute("BEGIN")
-        con.execute(
+        tkey_eq = " AND ".join(f't."{k}" = s."{k}"' for k in keys)
+        payload = [c for c in cols if c not in keys]
+        ev_list = ", ".join(
+            f'"{c}"' for c in keys + payload + ["op", "commit_lsn", "tx_ordinal"]
+        )
+        touched = f"(SELECT DISTINCT {key_list} FROM s) s"
+        return [
             f"CREATE TEMP TABLE s AS "
             f"SELECT * EXCLUDE (event_seq), CAST(event_seq AS HUGEINT) AS _etl_seq "
-            f"FROM read_parquet('{staged}/*.parquet')"
-        )
-        # append only events the history hasn't seen (partial-replay belt
-        # on top of the whole-batch applied_batches ledger)
-        con.execute(
+            f"FROM {_scan(staged)}",
+            # append only events the history hasn't seen (partial-replay
+            # belt on top of the whole-batch applied_batches ledger)
             f'INSERT INTO "{table}__events" ({ev_list}, _etl_seq) '
             f"SELECT {ev_list}, _etl_seq FROM s "
             f"WHERE NOT EXISTS ("
             f'  SELECT 1 FROM "{table}__events" e'
-            f"  WHERE {key_eq} AND e._etl_seq = s._etl_seq)"
-        )
-        # re-derive ONLY the touched keys' version rows
-        tkey_eq = " AND ".join(f't.\"{k}\" = s.\"{k}\"' for k in keys)
-        con.execute(
+            f"  WHERE {key_eq} AND e._etl_seq = s._etl_seq)",
+            # re-derive ONLY the touched keys' version rows
             f'DELETE FROM "{table}" t WHERE EXISTS ('
-            f"  SELECT 1 FROM (SELECT DISTINCT {key_list} FROM s) s "
-            f"  WHERE {tkey_eq})"
-        )
-        con.execute(self._derive_sql(
-            table, keys, payload,
-            f"WHERE EXISTS (SELECT 1 FROM (SELECT DISTINCT {key_list} FROM s) s "
-            f"WHERE {key_eq})",
-        ))
-        con.execute("INSERT INTO applied_batches VALUES (?, ?)", [table, batch_id])
-        con.execute("COMMIT")
-        con.close()
-
-    def reconcile_keys(self, table: str, keys) -> None:
-        self.keys[table] = list(keys)
-
-    def truncate(self, table: str) -> None:
-        con = self._con()
-        for t in (table, f"{table}__events"):
-            exists = con.execute(
-                "SELECT 1 FROM information_schema.tables WHERE table_name = ?", [t]
-            ).fetchone()
-            if exists:
-                con.execute(f'DELETE FROM "{t}"')
-        con.execute("DELETE FROM applied_batches WHERE tbl = ?", [table])
-        con.close()
-
-    def apply_schema_change(self, table, renames=None, drops=None,
-                            defaults=None, nullability=None) -> None:
-        """Apply the SchemaDiff to BOTH the version table and the event
-        history, so later re-derivations see the evolved payload."""
-        con = self._con()
-        _alter_table(con, table, renames, drops, defaults, nullability)
-        _alter_table(con, f"{table}__events", renames, drops, defaults, nullability)
-        ren = dict(renames or [])
-        if table in self.keys:
-            self.keys[table] = [ren.get(k, k) for k in self.keys[table]]
-        con.close()
-
-    def read(self, table: str):
-        """Driver-side read-back (tests): list of dict rows."""
-        con = self._con()
-        out = con.execute(f'SELECT * FROM "{table}"').df().to_dict("records")
-        con.close()
-        return out
+            f"  SELECT 1 FROM {touched} WHERE {tkey_eq})",
+            self._derive_sql(
+                table, keys, payload,
+                f"WHERE EXISTS (SELECT 1 FROM {touched} WHERE {key_eq})",
+            ),
+        ]
 
 
-class DuckDBChangelogSink(Sink):
+class DuckDBChangelogSink(_DuckDBSink):
     """Append-only changelog tables inside a DuckDB database — the
     warehouse twin of the ClickHouse/Iceberg changelog destinations
     (SURVEY D2/D3): every change event lands exactly once, in total
@@ -471,87 +423,25 @@ class DuckDBChangelogSink(Sink):
     above the intra-transaction ordinal)."""
 
     def __init__(self, db_path: str, staging_dir: str | None = None):
-        self.db_path = db_path
-        self.staging_dir = staging_dir or tempfile.mkdtemp(prefix="etl_stage_")
-        con = self._con()
-        con.execute(
-            "CREATE TABLE IF NOT EXISTS applied_batches ("
-            "  tbl VARCHAR, batch_id BIGINT, PRIMARY KEY (tbl, batch_id))"
-        )
-        con.close()
+        super().__init__(db_path, {}, staging_dir)
 
-    def _con(self):
-        return duckdb.connect(self.db_path)
-
-    def _stage(self, table: str, df: DataFrame, tag: str) -> str:
-        out = os.path.join(self.staging_dir, table, tag)
-        df.write.mode("overwrite").parquet(out)
-        return out
-
-    # -- Sink ----------------------------------------------------------------
-    def write_snapshot(self, table: str, df: DataFrame, snapshot_lsn: int = 0) -> None:
-        staged = self._stage(table, df, "snapshot")
-        con = self._con()
-        con.execute(f'DROP TABLE IF EXISTS "{table}"')
-        con.execute(
+    def _snapshot_sql(self, table, cols, staged, snapshot_lsn):
+        return [
             f'CREATE TABLE "{table}" AS '
             f"SELECT *, 'INSERT' AS op, CAST({snapshot_lsn} AS BIGINT) AS commit_lsn,"
             f"       CAST(0 AS BIGINT) AS tx_ordinal,"
             f"       CAST({snapshot_lsn} AS HUGEINT) * 18446744073709551616 AS _etl_seq "
-            f"FROM read_parquet('{staged}/*.parquet')"
-        )
-        con.execute("DELETE FROM applied_batches WHERE tbl = ?", [table])
-        con.close()
+            f"FROM {_scan(staged)}"
+        ]
 
-    def write_changes(self, table: str, df: DataFrame, batch_id: int) -> None:
-        con = self._con()
-        seen = con.execute(
-            "SELECT 1 FROM applied_batches WHERE tbl = ? AND batch_id = ?",
-            [table, batch_id],
-        ).fetchone()
-        if seen:
-            con.close()
-            return
-        staged = self._stage(table, df, f"batch_{batch_id}")
-        data_cols = [c for c in df.columns
-                     if c not in ("op", "commit_lsn", "tx_ordinal", "event_seq")]
-        col_list = ", ".join(f'"{c}"' for c in data_cols)
-        _ensure_columns(con, table, data_cols, _staged_types(con, staged))
-        con.execute("BEGIN")
-        con.execute(
+    def _merge_sql(self, table, cols, staged):
+        col_list = ", ".join(f'"{c}"' for c in cols)
+        return [
             f'INSERT INTO "{table}" ({col_list}, op, commit_lsn, tx_ordinal, _etl_seq) '
             f"SELECT {col_list}, op, commit_lsn, tx_ordinal,"
             f"       CAST(event_seq AS HUGEINT) AS _etl_seq "
-            f"FROM read_parquet('{staged}/*.parquet') s "
+            f"FROM {_scan(staged)} s "
             f"WHERE NOT EXISTS ("
             f'  SELECT 1 FROM "{table}" t'
             f"  WHERE t._etl_seq = CAST(s.event_seq AS HUGEINT))"
-        )
-        con.execute("INSERT INTO applied_batches VALUES (?, ?)", [table, batch_id])
-        con.execute("COMMIT")
-        con.close()
-
-    def reconcile_keys(self, table: str, keys) -> None:
-        pass  # changelog fidelity: no keyed merge, keys irrelevant
-
-    def truncate(self, table: str) -> None:
-        con = self._con()
-        exists = con.execute(
-            "SELECT 1 FROM information_schema.tables WHERE table_name = ?", [table]
-        ).fetchone()
-        if exists:
-            con.execute(f'DELETE FROM "{table}"')
-        con.execute("DELETE FROM applied_batches WHERE tbl = ?", [table])
-        con.close()
-
-    def apply_schema_change(self, table, renames=None, drops=None,
-                            defaults=None, nullability=None) -> None:
-        con = self._con()
-        _alter_table(con, table, renames, drops, defaults, nullability)
-        con.close()
-
-    def read(self, table: str):
-        con = self._con()
-        out = con.execute(f'SELECT * FROM "{table}"').df().to_dict("records")
-        con.close()
-        return out
+        ]

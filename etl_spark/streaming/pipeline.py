@@ -376,11 +376,8 @@ class Pipeline:
             # hoisted; each registry still ADVANCES at its original point
             # (types now, relations/txs deferred to batch success below),
             # so the crash/replay windows are unchanged.
-            self.spark.sparkContext.setJobDescription("pipeline: wire-stats")
-            try:
+            with telemetry.job_scope("pipeline: wire-stats"):
                 wire = collect_wire_stats(batch, max_tx=MAX_TX_PER_WINDOW)
-            finally:
-                self.spark.sparkContext.setJobDescription(None)
             # TYPE names are exempt from the deferral: they are idempotent
             # oid→name metadata (never positional), and _apply_relations
             # needs same-batch TYPE frames visible when naming custom-typed
@@ -453,11 +450,8 @@ class Pipeline:
                     )
                 ).alias("relmeta"),
             )
-            self.spark.sparkContext.setJobDescription("pipeline: batch-stats")
-            try:
+            with telemetry.job_scope("pipeline: batch-stats"):
                 tstats = tstats_agg.collect()
-            finally:
-                self.spark.sparkContext.setJobDescription(None)
             self._apply_relations(
                 [m for r in tstats for m in (r["relmeta"] or ())])
             # FORCE_SCHEMA_CLEANUP: aggressively prune schema versions up to

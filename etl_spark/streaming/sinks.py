@@ -42,7 +42,7 @@ from __future__ import annotations
 import functools
 import json
 import os
-import tempfile
+import shutil
 from abc import ABC, abstractmethod
 
 from pyspark.sql import DataFrame, SparkSession
@@ -50,6 +50,8 @@ from pyspark.sql import functions as F
 
 from etl_spark import failpoints
 from etl_spark.operators import materialize
+from etl_spark.state import write_json_atomic
+from etl_spark.telemetry import job_scope
 
 
 class Sink(ABC):
@@ -107,12 +109,6 @@ class Sink(ABC):
         KeyError. Default no-op: sinks that never index by key name
         (changelog appenders) have nothing to reconcile."""
 
-    def startup(self) -> None:  # pragma: no cover - default noop
-        pass
-
-    def shutdown(self) -> None:  # pragma: no cover - default noop
-        pass
-
 
 class ParquetChangelogSink(Sink):
     """Append-only changelog: every event row with ``cdc_operation`` +
@@ -140,17 +136,9 @@ class ParquetChangelogSink(Sink):
     def _folded(self, table: str) -> dict:
         try:
             with open(os.path.join(self.root, table, "FOLDED")) as f:
-                data = json.load(f)
+                return json.load(f)
         except FileNotFoundError:
             return {"batches": [], "segments": []}
-        # legacy manifests predate the segments list: adopt every existing
-        # segment dir as committed (they were, under the old scheme)
-        if "segments" not in data:
-            tdir = os.path.join(self.root, table)
-            data["segments"] = sorted(
-                d for d in os.listdir(tdir) if d.startswith("segment_")
-            )
-        return data
 
     def write_snapshot(self, table: str, df: DataFrame) -> None:
         out = os.path.join(self.root, table, "snapshot")
@@ -182,44 +170,32 @@ class ParquetChangelogSink(Sink):
                 out.append(full)
         return out
 
-    def read(self, spark: SparkSession, table: str) -> DataFrame:
-        import functools as _ft
-
+    def read(self, *args) -> DataFrame:
+        """``read(table)``: the table's live rows, on the active session
+        like every other sink's ``read``. The older ``read(spark, table)``
+        form (``perfbench/run.py`` calls it) is accepted too."""
+        table = args[-1]
         dirs = self._live_dirs(table)
         if not dirs:
             raise RuntimeError(f"no changelog data for {table}")
-        parts = [
-            spark.read.option("recursiveFileLookup", "true").parquet(d)
-            for d in dirs
-        ]
-        return _ft.reduce(
-            lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
+        reader = SparkSession.active().read.option("recursiveFileLookup", "true")
+        return functools.reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True),
+            [reader.parquet(d) for d in dirs],
         )
 
-    def compact(self, spark: SparkSession, table: str,
-                keep_batches: int = 10) -> list[int]:
+    def compact(self, table: str, keep_batches: int = 10) -> list[int]:
         """Fold every batch dir except the newest ``keep_batches`` into one
         consolidated segment. Returns the folded batch ids."""
-        import shutil as _sh
-
         tdir = os.path.join(self.root, table)
         prev = self._folded(table)
         folded_prev = set(prev["batches"])
         committed_segments = set(prev["segments"])
-        # migrate a legacy (pre-segments) manifest NOW, so a crash after
-        # the upcoming segment write can't be mis-adopted as committed
-        fd, tmp = tempfile.mkstemp(dir=tdir)
-        with os.fdopen(fd, "w") as f:
-            json.dump(
-                {"batches": sorted(folded_prev),
-                 "segments": sorted(committed_segments)}, f,
-            )
-        os.replace(tmp, os.path.join(tdir, "FOLDED"))
         # GC orphan segments first: a crash between a segment write and
         # the manifest commit leaves an unlisted (reader-invisible) dir
         for d in os.listdir(tdir):
             if d.startswith("segment_") and d not in committed_segments:
-                _sh.rmtree(os.path.join(tdir, d), ignore_errors=True)
+                shutil.rmtree(os.path.join(tdir, d), ignore_errors=True)
         ids = sorted(
             int(d.split("=", 1)[1])
             for d in os.listdir(tdir)
@@ -229,8 +205,9 @@ class ParquetChangelogSink(Sink):
         if not doomed:
             return []
         seg_name = f"segment_{max(doomed)}"
-        df = spark.read.option("recursiveFileLookup", "true").parquet(
-            *[os.path.join(tdir, f"batch={b}") for b in doomed]
+        df = (
+            SparkSession.active().read.option("recursiveFileLookup", "true")
+            .parquet(*[os.path.join(tdir, f"batch={b}") for b in doomed])
         )
         # written before the commit, but invisible to readers until the
         # manifest lists it (see _live_dirs)
@@ -240,17 +217,13 @@ class ParquetChangelogSink(Sink):
         # race) — the manifest records only the DOOMED ids, so appended
         # batches stay live regardless of when they land
         failpoints.hit(failpoints.COMPACT_BEFORE_COMMIT)
-        manifest = {
+        write_json_atomic(os.path.join(tdir, "FOLDED"), {  # the atomic commit
             "batches": sorted(folded_prev | set(doomed)),
             "segments": sorted(committed_segments | {seg_name}),
-        }
-        fd, tmp = tempfile.mkstemp(dir=tdir)
-        with os.fdopen(fd, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, os.path.join(tdir, "FOLDED"))  # the atomic commit
+        })
         failpoints.hit(failpoints.COMPACT_AFTER_COMMIT)
         for b in doomed:
-            _sh.rmtree(os.path.join(tdir, f"batch={b}"), ignore_errors=True)
+            shutil.rmtree(os.path.join(tdir, f"batch={b}"), ignore_errors=True)
         return doomed
 
 
@@ -270,9 +243,13 @@ def _stamp_snapshot(df: DataFrame, snapshot_lsn: int) -> DataFrame:
 
 
 class _BucketedVersionedTable:
-    """Shared plumbing for the bucket-manifest state sinks (see module
+    """Shared body of the bucket-manifest state sinks (see module
     docstring): VERSION pointer, per-version manifests, bucket-pruned
-    reads, touched-bucket-only commits."""
+    reads, touched-bucket-only commits, and the ``write_changes`` /
+    ``truncate`` / ``read`` skeleton. A subclass supplies ``_merge(stored,
+    df)``: the rows to commit for the touched buckets, from their stored
+    rows (or the schema anchor when every touched bucket is new; None
+    only for a table with no recorded schema) and the batch."""
 
     #: default key-bucket count; a real deployment sizes this so one
     #: bucket ≈ a few GB (manifest pins it per table after first write)
@@ -304,11 +281,9 @@ class _BucketedVersionedTable:
         return self._current_meta(table)["version"]
 
     def _point(self, table: str, version: int, batch_id: int | None) -> None:
-        os.makedirs(os.path.dirname(self._vpath(table)), exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(self._vpath(table)))
-        with os.fdopen(fd, "w") as f:
-            json.dump({"version": version, "batch_id": batch_id}, f)
-        os.replace(tmp, self._vpath(table))
+        write_json_atomic(
+            self._vpath(table), {"version": version, "batch_id": batch_id}
+        )
 
     def _data_dir(self, table: str, version: int) -> str:
         return os.path.join(self.root, table, f"v{version}")
@@ -493,17 +468,13 @@ class _BucketedVersionedTable:
     def _touched_buckets(self, df: DataFrame, n_buckets: int) -> list[int]:
         """Distinct bucket ids in a batch — bounded by n_buckets, so the
         collect is a small driver-side list (the rollup.py pattern)."""
-        sc = self.spark.sparkContext
-        sc.setJobDescription("sink: touched-buckets")
-        try:
+        with job_scope("sink: touched-buckets"):
             return sorted(
                 r[0]
                 for r in df.select(self._bucket_expr(n_buckets).alias("b"))
                 .distinct()
                 .collect()
             )
-        finally:
-            sc.setJobDescription(None)
 
     # -- read ----------------------------------------------------------------
     def read_version(self, table: str, version: int) -> DataFrame:
@@ -533,18 +504,14 @@ class _BucketedVersionedTable:
         if bucket_ids is not None:
             want = {str(b) for b in bucket_ids}
             buckets = {b: vd for b, vd in buckets.items() if b in want}
-        vschemas = manifest.get("vdir_schema", {})
         if not buckets:
             if bucket_ids is None and manifest.get("empty"):
                 empty_rel = manifest["empty"]
-                reader = self.spark.read
-                if manifest.get("empty_schema"):
-                    # recorded-at-commit schema: skips listing + footer
-                    # inference (~0.1 s of driver time per read-back)
-                    reader = reader.schema(
-                        self._schema_from_json(manifest["empty_schema"])
-                    )
-                df = reader.parquet(os.path.join(self.root, table, empty_rel))
+                # recorded-at-commit schema: skips listing + footer
+                # inference (~0.1 s of driver time per read-back)
+                df = self.spark.read.schema(
+                    self._schema_from_json(manifest["empty_schema"])
+                ).parquet(os.path.join(self.root, table, empty_rel))
                 return self._apply_ddl_ops(
                     df, ddl_log, epochs.get(empty_rel.split("/", 1)[0], 0)
                 )
@@ -556,16 +523,18 @@ class _BucketedVersionedTable:
         for vd, bs in sorted(by_vdir.items()):
             base = os.path.join(self.root, table, vd)
             paths = [os.path.join(base, f"__bucket={b}") for b in sorted(bs, key=int)]
-            reader = self.spark.read.option("basePath", base)
-            if vd in vschemas:
-                # the manifest records each vdir's file schema at commit
-                # time (crash-replay safe: a replayed commit rewrites BOTH
-                # the vdir and its manifest); passing it skips per-read
-                # schema inference. __bucket is the partition column.
-                reader = reader.schema(
-                    self._schema_from_json(vschemas[vd]).add("__bucket", "integer")
-                )
-            part = reader.parquet(*paths)
+            # the manifest records each vdir's file schema at commit time
+            # (crash-replay safe: a replayed commit rewrites BOTH the vdir
+            # and its manifest); passing it skips per-read schema
+            # inference. __bucket is the partition column.
+            schema = self._schema_from_json(
+                manifest["vdir_schema"][vd]
+            ).add("__bucket", "integer")
+            part = (
+                self.spark.read.option("basePath", base)
+                .schema(schema)
+                .parquet(*paths)
+            )
             # remap each dir's physical columns to the CURRENT logical
             # schema (renames/drops it predates) before the by-name union
             parts.append(self._apply_ddl_ops(part, ddl_log, epochs.get(vd, 0)))
@@ -578,67 +547,43 @@ class _BucketedVersionedTable:
 
     def _schema_frame_cached(self, table: str) -> DataFrame | None:
         """Memoized :meth:`_schema_frame`. Every ``write_changes`` needs
-        the anchor (key canonicalization + new-bucket type coercion); the
-        underlying footer read costs ~100 ms per call, so a 3-batch gate
-        pays it 6+ times for an identical answer. Keyed by the CURRENT
-        version — manifests are immutable once written, so a hit can
-        never be stale, and a commit (new version) naturally misses."""
+        the anchor (key canonicalization + new-bucket type coercion), so
+        a 3-batch gate would rebuild it 6+ times for an identical answer.
+        Keyed by the CURRENT version — manifests are immutable once
+        written, so a hit can never be stale, and a commit (new version)
+        naturally misses."""
         key = (table, self._current_meta(table)["version"])
         if key not in self._anchor_cache:
             self._anchor_cache[key] = self._schema_frame(table)
         return self._anchor_cache[key]
 
     def _schema_frame(self, table: str) -> DataFrame | None:
-        """limit(0) frame with the table's STORED schema (a parquet footer
-        read, no data scan). Used as the type anchor when a batch touches
-        only brand-new buckets: the merge union coerces text-decoded batch
-        columns to the stored types, exactly as merging into a populated
-        bucket would."""
-        meta = self._current_meta(table)
-        manifest = self._manifest(table, meta["version"])
-        ddl_log = manifest.get("ddl_log", [])
-        epochs = manifest.get("vdir_epoch", {})
-        vschemas = manifest.get("vdir_schema", {})
+        """Empty frame with the table's STORED schema, built from the
+        schema the manifest recorded at commit time (no file read). Used
+        as the type anchor when a batch touches only brand-new buckets:
+        the merge union coerces text-decoded batch columns to the stored
+        types, exactly as merging into a populated bucket would."""
+        manifest = self._manifest(table, self._current_version(table))
         if manifest["buckets"]:
-            b, vd = min(manifest["buckets"].items(), key=lambda kv: int(kv[0]))
-            if vd in vschemas:
-                # recorded-at-commit schema: the anchor needs no file read
-                # at all (was a listing + footer job per cache miss)
-                anchor = self.spark.createDataFrame(
-                    [], self._schema_from_json(vschemas[vd])
-                )
-                return self._apply_ddl_ops(anchor, ddl_log, epochs.get(vd, 0))
-            base = os.path.join(self.root, table, vd)
-            anchor = (
-                self.spark.read.option("basePath", base)
-                .parquet(os.path.join(base, f"__bucket={b}"))
-                .drop("__bucket")
-                .limit(0)
-            )
-            return self._apply_ddl_ops(anchor, ddl_log, epochs.get(vd, 0))
-        if manifest.get("empty"):
-            empty_rel = manifest["empty"]
-            if manifest.get("empty_schema"):
-                anchor = self.spark.createDataFrame(
-                    [], self._schema_from_json(manifest["empty_schema"])
-                )
-                return self._apply_ddl_ops(
-                    anchor, ddl_log, epochs.get(empty_rel.split("/", 1)[0], 0)
-                )
-            anchor = self.spark.read.parquet(
-                os.path.join(self.root, table, empty_rel)
-            ).limit(0)
-            return self._apply_ddl_ops(
-                anchor, ddl_log, epochs.get(empty_rel.split("/", 1)[0], 0)
-            )
-        return None
+            vd = min(manifest["buckets"].items(), key=lambda kv: int(kv[0]))[1]
+            schema = manifest["vdir_schema"][vd]
+        elif manifest.get("empty"):
+            vd = manifest["empty"].split("/", 1)[0]
+            schema = manifest["empty_schema"]
+        else:
+            return None
+        anchor = self.spark.createDataFrame([], self._schema_from_json(schema))
+        return self._apply_ddl_ops(
+            anchor, manifest.get("ddl_log", []),
+            manifest.get("vdir_epoch", {}).get(vd, 0),
+        )
 
     def _canonicalize_keys(self, table: str, df: DataFrame) -> DataFrame:
         """Cast the batch's key columns to the STORED key types before any
         bucket hashing. ``xxhash64('2' as string) != xxhash64(2 as long)``
         — a text-decoded key would bucket away from its stored row and the
         merge would never see it. The stored schema is the canonical type
-        (one parquet footer read, no data scan)."""
+        (read from the manifest, no data scan)."""
         anchor = self._schema_frame_cached(table)
         if anchor is None:
             return df
@@ -689,8 +634,7 @@ class _BucketedVersionedTable:
         # bare repartition("__bucket")) keeps AQE from re-coalescing the
         # exchange below the bucket count.
         k = len(touched) if touched else n
-        self.spark.sparkContext.setJobDescription(f"sink: commit {table} v{nv}")
-        try:
+        with job_scope(f"sink: commit {table} v{nv}"):
             (
                 out.withColumn("__bucket", self._bucket_expr(n))
                 .repartition(max(k, 1), "__bucket")
@@ -698,8 +642,6 @@ class _BucketedVersionedTable:
                 .partitionBy("__bucket")
                 .parquet(vdir)
             )
-        finally:
-            self.spark.sparkContext.setJobDescription(None)
         present = sorted(
             int(d.split("=", 1)[1])
             for d in os.listdir(vdir)
@@ -751,10 +693,7 @@ class _BucketedVersionedTable:
         if vname in referenced:
             manifest["vdir_epoch"][vname] = len(ddl_log)
             manifest["vdir_schema"][vname] = self._schema_json(out)
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(self._vpath(table)))
-        with os.fdopen(fd, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._mpath(table, nv))
+        write_json_atomic(self._mpath(table, nv), manifest)
         # the ONE atomic commit: readers never see a half-written version
         self._point(table, nv, batch_id)
 
@@ -821,19 +760,46 @@ class _BucketedVersionedTable:
         manifest["ddl_log"] = log + ops
         manifest.setdefault("vdir_epoch", {})
         nv = meta["version"] + 1
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(self._vpath(table)))
-        with os.fdopen(fd, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._mpath(table, nv))
+        write_json_atomic(self._mpath(table, nv), manifest)
         self._point(table, nv, meta.get("batch_id"))
         self.keys = [ren_map.get(k, k) for k in self.keys]
 
-    def _truncate(self, table: str) -> None:
-        cur_v = self._current_version(table)
-        if cur_v < 0:
+    # -- Sink ------------------------------------------------------------------
+    def write_changes(self, table: str, df: DataFrame, batch_id: int) -> None:
+        """Merge one batch into ONLY its touched key buckets and commit a
+        manifest + VERSION swap (see module docstring)."""
+        meta = self._current_meta(table)
+        if meta["version"] < 0:
+            raise RuntimeError(f"no snapshot for {table}; run write_snapshot first")
+        if meta.get("batch_id") == batch_id:
+            # replayed delivery of the already-applied batch (restart between
+            # sink write and checkpoint commit): the merge would converge
+            # anyway — this is the applied-batches fast path
+            # (ducklake/core.rs:74-80)
+            return
+        df = self._canonicalize_keys(table, df)
+        n = self._manifest(table, meta["version"])["n_buckets"]
+        touched = self._touched_buckets(df, n)
+        if not touched:
+            self._point(table, meta["version"], batch_id)
+            return
+        stored = self._read_buckets(table, touched)
+        if stored is None:
+            # brand-new buckets: still merge against the stored SCHEMA so
+            # the union coerces batch columns to the table's types
+            stored = self._schema_frame_cached(table)
+        self._commit(table, self._merge(stored, df), touched, batch_id)
+
+    def truncate(self, table: str) -> None:
+        if self._current_version(table) < 0:
             return  # nothing to drop (fresh table pre-copy)
         cur = self._read_buckets(table)
         self._commit(table, cur.limit(0), touched=None, batch_id=None)
+
+    def read(self, table: str) -> DataFrame:
+        if self._current_version(table) < 0:
+            raise RuntimeError(f"no data for {table}")
+        return self._read_buckets(table)
 
     def compact(self, table: str) -> None:
         """Full rewrite into a single fresh version (the OPTIMIZE analog):
@@ -880,10 +846,7 @@ class _BucketedVersionedTable:
         meta = self._current_meta(table)
         manifest = self._manifest(table, version)  # expired → FileNotFoundError
         nv = meta["version"] + 1
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(self._vpath(table)))
-        with os.fdopen(fd, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._mpath(table, nv))
+        write_json_atomic(self._mpath(table, nv), manifest)
         self._point(table, nv, None)
         return nv
 
@@ -915,40 +878,10 @@ class ParquetCurrentStateSink(_BucketedVersionedTable, Sink):
             table, _stamp_snapshot(df, snapshot_lsn), touched=None, batch_id=None
         )
 
-    def write_changes(self, table: str, df: DataFrame, batch_id: int) -> None:
-        meta = self._current_meta(table)
-        if meta["version"] < 0:
-            raise RuntimeError(f"no snapshot for {table}; run write_snapshot first")
-        if meta.get("batch_id") == batch_id:
-            # replayed delivery of the already-applied batch (restart between
-            # sink write and checkpoint commit): the LWW merge would converge
-            # anyway — this is the applied-batches fast path
-            # (ducklake/core.rs:74-80)
-            return
-        df = self._canonicalize_keys(table, df)
-        n = self._manifest(table, meta["version"])["n_buckets"]
-        touched = self._touched_buckets(df, n)
-        if not touched:
-            self._point(table, meta["version"], batch_id)
-            return
-        stored = self._read_buckets(table, touched)
+    def _merge(self, stored: DataFrame | None, df: DataFrame) -> DataFrame:
         if stored is None:
-            # brand-new buckets: still merge against the stored SCHEMA so
-            # the union coerces batch columns to the table's types
-            stored = self._schema_frame_cached(table)
-        if stored is None:
-            merged = materialize.current_state(df, self.keys)
-        else:
-            merged = materialize.merge_current_state(stored, df, self.keys)
-        self._commit(table, merged, touched, batch_id)
-
-    def truncate(self, table: str) -> None:
-        self._truncate(table)
-
-    def read(self, table: str) -> DataFrame:
-        if self._current_version(table) < 0:
-            raise RuntimeError(f"no data for {table}")
-        return self._read_buckets(table)
+            return materialize.current_state(df, self.keys)
+        return materialize.merge_current_state(stored, df, self.keys)
 
 
 class MemorySink(Sink):
@@ -1085,46 +1018,22 @@ class ParquetScd2Sink(_BucketedVersionedTable, Sink):
             batch_id=None,
         )
 
-    def write_changes(self, table: str, df: DataFrame, batch_id: int) -> None:
-        meta = self._current_meta(table)
-        if meta["version"] < 0:
-            raise RuntimeError(f"no snapshot for {table}; run write_snapshot first")
-        if meta.get("batch_id") == batch_id:
-            return  # applied-batches fast path (replayed delivery)
-        df = self._canonicalize_keys(table, df)
-        n = self._manifest(table, meta["version"])["n_buckets"]
-        touched = self._touched_buckets(df, n)
-        if not touched:
-            self._point(table, meta["version"], batch_id)
-            return
-        stored = self._read_buckets(table, touched)
-        if stored is None:
-            stored = self._schema_frame_cached(table)  # type anchor (see above)
-        if stored is None:
-            merged_events = df
-        else:
+    def _merge(self, stored: DataFrame | None, df: DataFrame) -> DataFrame:
+        events = df
+        if stored is not None:
             event_cols = [
                 c for c in stored.columns if c not in ("valid_to", "is_current")
             ]
-            touched_hist = stored.select(*event_cols)
-            batch_events = df.select(
+            events = stored.select(*event_cols).unionByName(df.select(
                 *[c if c in df.columns else F.lit(None).alias(c) for c in event_cols]
-            )
-            merged_events = touched_hist.unionByName(batch_events)
-        self._commit(
-            table, self._derive(merged_events, dedup=True), touched, batch_id
-        )
-
-    def truncate(self, table: str) -> None:
-        self._truncate(table)
+            ))
+        return self._derive(events, dedup=True)
 
     def read(self, table: str) -> DataFrame:
         """The SCD2 surface: version rows only (tombstones are internal
         closure bookkeeping, not versions)."""
-        if self._current_version(table) < 0:
-            raise RuntimeError(f"no data for {table}")
         return (
-            self._read_buckets(table)
+            super().read(table)
             .filter(F.col("op") != "DELETE")
             .withColumnRenamed("commit_lsn", "valid_from")
         )

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import threading
 from bisect import bisect_left
+from contextlib import contextmanager
 
 # -- the reference's metric inventory (observability.rs:7-50) --------------
 ETL_TABLES_TOTAL = "etl_tables_total"
@@ -195,6 +196,22 @@ def init_metrics(
         labels["destination"] = destination
     DEFAULT = MetricsRegistry(labels)
     return DEFAULT
+
+
+@contextmanager
+def job_scope(desc: str):
+    """Tag every Spark job the block submits with ``desc``
+    (``spark.job.description``, shown per job in the UI and the status
+    tracker) and clear it on exit, raised or not, so the tag can never
+    leak onto later jobs. The description is a thread-local property."""
+    from pyspark import SparkContext
+
+    sc = SparkContext.getOrCreate()
+    sc.setJobDescription(desc)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(None)
 
 
 class MetricsHttpServer:

@@ -210,7 +210,7 @@ def test_lifecycle_with_changelog_sink(spark, tmp_path):
     p = reg.start_pipeline(pid, spark)
     # registry round-trip preserved the sink kind
     assert reg.read_pipeline(pid)["sink"]["kind"] == "parquet_changelog"
-    log = p.sink.read(spark, "users")
+    log = p.sink.read("users")
     ops = [r.cdc_operation for r in log.orderBy("cdc_sequence").collect()
            if r.cdc_operation in ("UPDATE", "DELETE")]
     assert ops == ["UPDATE", "DELETE"]   # every event kept, ordered

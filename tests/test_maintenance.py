@@ -215,6 +215,20 @@ def test_sink_time_travel_read_version(spark, tmp_path):
         sink.read_version("t", 0).collect()
 
 
+def test_changelog_reads_through_table_routing_sink(spark, tmp_path):
+    """The changelog sink's ``read`` takes the table alone, like every
+    other sink's, so a routing sink can read a changelog table back."""
+    from etl_spark.envelope import with_sequence
+    from etl_spark.streaming.sinks import ParquetChangelogSink, TableRoutingSink
+
+    router = TableRoutingSink({"t": ParquetChangelogSink(str(tmp_path / "log"))})
+    router.write_changes("t", with_sequence(spark.createDataFrame(
+        [("INSERT", 10, 0, 10, 1, "v")],
+        "op string, commit_lsn long, tx_ordinal long, start_lsn long, "
+        "pk long, val string")), batch_id=0)
+    assert [(r.pk, r.val) for r in router.read("t").collect()] == [(1, "v")]
+
+
 def test_changelog_compaction_crash_safe(spark, tmp_path):
     """Changelog compaction folds old batch dirs into a segment with a
     FOLDED-manifest commit: content identical before/after, a replayed
@@ -232,22 +246,22 @@ def test_changelog_compaction_crash_safe(spark, tmp_path):
 
     for b in range(6):
         sink.write_changes("t", with_sequence(mk(10 + b, b)), batch_id=b)
-    before = sorted(r.pk for r in sink.read(spark, "t").collect())
-    folded = sink.compact(spark, "t", keep_batches=2)
+    before = sorted(r.pk for r in sink.read("t").collect())
+    folded = sink.compact("t", keep_batches=2)
     assert folded == [0, 1, 2, 3]
-    after = sorted(r.pk for r in sink.read(spark, "t").collect())
+    after = sorted(r.pk for r in sink.read("t").collect())
     assert after == before
     tdir = str(tmp_path / "log" / "t")
     live_batches = [d for d in _os.listdir(tdir) if d.startswith("batch=")]
     assert sorted(live_batches) == ["batch=4", "batch=5"]
     # replayed delivery of a FOLDED batch id: dir reappears, read skips it
     sink.write_changes("t", with_sequence(mk(10, 0)), batch_id=0)
-    assert sorted(r.pk for r in sink.read(spark, "t").collect()) == before
+    assert sorted(r.pk for r in sink.read("t").collect()) == before
     # second compaction folds the remaining old batches incrementally
     sink.write_changes("t", with_sequence(mk(16, 6)), batch_id=6)
-    folded2 = sink.compact(spark, "t", keep_batches=1)
+    folded2 = sink.compact("t", keep_batches=1)
     assert folded2 == [4, 5]
-    got = sorted(r.pk for r in sink.read(spark, "t").collect())
+    got = sorted(r.pk for r in sink.read("t").collect())
     assert got == before + [6]
 
 
@@ -268,7 +282,7 @@ def test_changelog_compact_orphan_segment_invisible_and_gced(spark, tmp_path):
         "op string, commit_lsn long, tx_ordinal long, start_lsn long, pk long, val string")
     for b in range(4):
         sink.write_changes("t", with_sequence(mk(10 + b, b)), batch_id=b)
-    before = sorted(r.pk for r in sink.read(spark, "t").collect())
+    before = sorted(r.pk for r in sink.read("t").collect())
 
     # simulate the crash: segment written, FOLDED commit never happened
     tdir = str(tmp_path / "log" / "t")
@@ -277,46 +291,16 @@ def test_changelog_compact_orphan_segment_invisible_and_gced(spark, tmp_path):
                        _os.path.join(tdir, "batch=1")).write.parquet(orphan)
 
     # reader ignores the orphan — batches 0/1 counted exactly once
-    assert sorted(r.pk for r in sink.read(spark, "t").collect()) == before
+    assert sorted(r.pk for r in sink.read("t").collect()) == before
 
     # new batches arrive, then the compact retry folds 0..3 under a
     # DIFFERENT name (segment_3) — the orphan must be GC'd, not kept
-    folded = sink.compact(spark, "t", keep_batches=0)
+    folded = sink.compact("t", keep_batches=0)
     assert folded == [0, 1, 2, 3]
     assert not _os.path.exists(orphan)
     manifest = _json.load(open(_os.path.join(tdir, "FOLDED")))
     assert manifest["segments"] == ["segment_3"]
-    assert sorted(r.pk for r in sink.read(spark, "t").collect()) == before
-
-
-def test_changelog_legacy_folded_manifest_adopted(spark, tmp_path):
-    """Pre-segments FOLDED manifests (no "segments" key) adopt every
-    existing segment dir as committed, and the first compact migrates the
-    manifest before writing anything new."""
-    import json as _json
-    import os as _os
-
-    from etl_spark.envelope import with_sequence
-    from etl_spark.streaming.sinks import ParquetChangelogSink
-
-    sink = ParquetChangelogSink(str(tmp_path / "log"))
-    mk = lambda lsn, pk: spark.createDataFrame(
-        [("INSERT", lsn, 0, lsn, pk, "v")],
-        "op string, commit_lsn long, tx_ordinal long, start_lsn long, pk long, val string")
-    for b in range(3):
-        sink.write_changes("t", with_sequence(mk(10 + b, b)), batch_id=b)
-    sink.compact(spark, "t", keep_batches=1)
-    tdir = str(tmp_path / "log" / "t")
-    # rewrite FOLDED in the legacy shape (batches only)
-    manifest = _json.load(open(_os.path.join(tdir, "FOLDED")))
-    _json.dump({"batches": manifest["batches"]},
-               open(_os.path.join(tdir, "FOLDED"), "w"))
-    assert sorted(r.pk for r in sink.read(spark, "t").collect()) == [0, 1, 2]
-    sink.write_changes("t", with_sequence(mk(14, 3)), batch_id=3)
-    sink.compact(spark, "t", keep_batches=1)
-    migrated = _json.load(open(_os.path.join(tdir, "FOLDED")))
-    assert "segments" in migrated and len(migrated["segments"]) == 2
-    assert sorted(r.pk for r in sink.read(spark, "t").collect()) == [0, 1, 2, 3]
+    assert sorted(r.pk for r in sink.read("t").collect()) == before
 
 
 def test_expire_versions_anchors_on_live_pointer(spark, tmp_path):
@@ -455,13 +439,13 @@ def test_changelog_compact_with_concurrent_appends(spark, tmp_path):
         lambda: sink.write_changes("t", with_sequence(mk(15, 5)), batch_id=5),
     )
     try:
-        folded = sink.compact(spark, "t", keep_batches=0)
+        folded = sink.compact("t", keep_batches=0)
     finally:
         failpoints.disarm_all()
     assert folded == [0, 1, 2, 3]  # only the pre-fold batches folded
-    got = sorted(r.pk for r in sink.read(spark, "t").collect())
+    got = sorted(r.pk for r in sink.read("t").collect())
     assert got == [0, 1, 2, 3, 4, 5]  # mid-fold appends live, once each
     # next round folds the mid-fold appends incrementally
-    folded2 = sink.compact(spark, "t", keep_batches=0)
+    folded2 = sink.compact("t", keep_batches=0)
     assert folded2 == [4, 5]
-    assert sorted(r.pk for r in sink.read(spark, "t").collect()) == got
+    assert sorted(r.pk for r in sink.read("t").collect()) == got

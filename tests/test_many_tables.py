@@ -71,16 +71,17 @@ def test_hundred_table_pipeline_breadth(spark, tmp_path, monkeypatch):
     from etl_spark import state as state_mod
 
     io_stats = {"writes": 0, "max_bytes": 0}
-    orig_write = state_mod.ControlStore._write_atomic
+    orig_write = state_mod.write_json_atomic
 
-    def counting_write(self, path, payload):
+    def counting_write(path, payload):
         io_stats["writes"] += 1
         io_stats["max_bytes"] = max(io_stats["max_bytes"],
                                     len(json.dumps(payload)))
-        return orig_write(self, path, payload)
+        return orig_write(path, payload)
 
-    monkeypatch.setattr(state_mod.ControlStore, "_write_atomic",
-                        counting_write)
+    # ControlStore resolves the module-level writer at call time; other
+    # modules bind their own name, so only control-store writes count
+    monkeypatch.setattr(state_mod, "write_json_atomic", counting_write)
     source = str(tmp_path / "source")
     os.makedirs(source)
     # two shared snapshots (one per key shape) — the per-table copy still

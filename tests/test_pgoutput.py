@@ -502,29 +502,6 @@ def test_persistent_type_registry_survives_restart(spark, tmp_path):
     assert reg2.snapshot() == {99999: "public.citext"}
 
 
-def test_persistent_relation_registry_migrates_legacy_snapshot(spark, tmp_path):
-    """A newest-only snapshot persisted before versioning migrates as a
-    single version at position 0 (matches every frame), and the next
-    update appends at its own wal position instead of overwriting."""
-    import json as _json
-
-    path = str(tmp_path / "rels.json")
-    legacy = {"1": {"table": "public.t", "columns": ["pk", "v"],
-                    "key_cols": ["pk"], "type_oids": [20, 25],
-                    "key_oids": [20], "replident": "d"}}
-    with open(path, "w") as f:
-        _json.dump(legacy, f)
-    reg = pgo.PersistentRelationRegistry(path)
-    snap = reg.snapshot()
-    assert snap[1][0][0] == 0 and snap[1][0][1]["columns"] == ["pk", "v"]
-    reg.update_from(_frames_df(spark, [
-        (77, -1, pgo.encode_relation(1, "public", "t", "d",
-                                     [(1, "pk", 20, -1), (0, "w", 25, -1)]))]))
-    snap = pgo.PersistentRelationRegistry(path).snapshot()
-    assert [w for w, _s in snap[1]] == [0, 77]
-    assert snap[1][-1][1]["columns"] == ["pk", "w"]
-
-
 def test_persistent_relation_registry_caps_versions(spark, tmp_path):
     """Growth bound: only the newest ``max_versions`` specs survive."""
     path = str(tmp_path / "rels.json")

@@ -399,7 +399,7 @@ def test_changelog_parquet_vs_duckdb_differential(spark, tmp_path, seed):
         from pyspark.sql import functions as F
 
         rows = (
-            pq.read(spark, "t")
+            pq.read("t")
             .select(
                 "pk", "val",
                 F.coalesce(F.col("cdc_operation"), F.lit("INSERT")).alias("op"),
@@ -463,7 +463,7 @@ def test_changelog_parquet_vs_duckdb_differential(spark, tmp_path, seed):
             pq.write_changes("t", b, batch_id)
             dk.write_changes("t", b, batch_id)
         elif action == "compact":
-            pq.compact(spark, "t", keep_batches=rng.choice([0, 2]))
+            pq.compact("t", keep_batches=rng.choice([0, 2]))
         elif action == "restart":
             pq, dk = mk()
         assert norm_pq() == norm_dk(), (seed, step, action)

@@ -517,6 +517,40 @@ def test_duckdb_sink_delivery_contract(spark, tmp_path):
     assert {r["pk"]: r["val"] for r in sink.read("users")} == {1: "a2", 2: "b-old"}
 
 
+def test_duckdb_merge_failure_releases_connection(spark, tmp_path):
+    """A merge statement that raises after BEGIN must close its connection,
+    which rolls the transaction back: while the exception (and so the
+    failed call's frames) is still held, a read-only connection — a
+    different configuration, which DuckDB refuses while a read-write one
+    is open on the same file — must open and see the table unchanged."""
+    import duckdb
+
+    from etl_spark.streaming.duckdb_sink import DuckDBCurrentStateSink
+
+    db = str(tmp_path / "wh.duckdb")
+    # the key names a column the batch lacks: the merge's window binds it
+    sink = DuckDBCurrentStateSink(db, keys={"users": ["no_such_col"]},
+                                  staging_dir=str(tmp_path / "stage"))
+    sink.write_snapshot("users", spark.createDataFrame([(1, "a")], PAYLOAD))
+    batch = spark.createDataFrame(
+        [("UPDATE", 1, "a1", 10, 0)],
+        "op string, pk long, val string, commit_lsn long, tx_ordinal long",
+    ).selectExpr(
+        "op", "pk", "val", "commit_lsn", "tx_ordinal",
+        "CAST(commit_lsn AS DECIMAL(38,0)) * 18446744073709551616"
+        " + tx_ordinal AS event_seq",
+    )
+    with pytest.raises(duckdb.Error) as excinfo:
+        sink.write_changes("users", batch, batch_id=0)
+    con = duckdb.connect(db, read_only=True)
+    try:
+        assert con.execute('SELECT pk, val FROM "users"').fetchall() == [(1, "a")]
+        assert con.execute("SELECT count(*) FROM applied_batches").fetchone() == (0,)
+    finally:
+        con.close()
+    assert excinfo.value is not None  # held until the read-only checks ran
+
+
 def test_duckdb_scd2_sink(spark, tmp_path):
     """SCD2 at the SQL warehouse: event history + touched-key re-derive
     in one transaction, whole-batch replays absorbed by the ledger and
