@@ -318,7 +318,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cdc_scd2_schema_evolution": workload.cdc_scd2_schema_evolution,
         "cdc_schema_evolution": workload.cdc_schema_evolution,
         "cdc_state_asof": workload.cdc_state_asof,
-        "cdc_xbatch_recovery": workload.cdc_xbatch_recovery,
         "corpus_drop_audit": workload_text.corpus_drop_audit,
         "corpus_pack_sequences": workload_text.corpus_pack_sequences,
         "corpus_temperature_mix": workload_text.corpus_temperature_mix,

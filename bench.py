@@ -120,10 +120,7 @@ HEADLINE = [
     "docs_quality_calibration",
     "docs_ngram_novelty",
     "events_ks_drift",
-    # round-6 additions (first timed here). cdc_xbatch_recovery is
-    # gate-tested but excluded like cdc_scd2_incremental: it drives sink
-    # parquet write/read cycles plus a simulated crash-recovery, so its
-    # timing measures harness I/O, not operator cost
+    # round-6 additions (first timed here)
     "lineitem_rollup_metrics",
     "events_regression",
     "events_markov_transitions",
@@ -285,7 +282,6 @@ STREAMING = [
     "stream_session_window",
     "stream_static_enrich",
     "stream_stateful_dedup",
-    "cdc_xbatch_recovery",
     "cdc_scd2_incremental",
 ]
 
@@ -600,7 +596,7 @@ def main() -> None:
     for n in ordered:
         entry_len = len(n) + len(json.dumps(all_secs[n])) + 7
         if used + entry_len > LINE_BUDGET:
-            break
+            continue
         summary["queries"][n] = all_secs[n]
         used += entry_len
     print(json.dumps(summary))

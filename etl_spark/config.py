@@ -22,11 +22,11 @@ Reference parity (`crates/etl-config/src`):
   (`PgConnectionConfigWithoutSecrets`, pipeline.rs:436) drop them
   entirely.
 - shared types + validation (`shared/pipeline.rs`, `shared/connection.rs`):
-  BatchConfig, MemoryBackpressureConfig, TableSyncCopyConfig,
-  InvalidatedSlotBehavior, TcpKeepaliveConfig, TlsConfig,
-  PgConnectionConfig, PipelineConfig — same fields, same defaults, same
-  constraint messages (``field`` + ``constraint``) so operators see the
-  errors they know.
+  BatchConfig, TableSyncCopyConfig, InvalidatedSlotBehavior, TlsConfig,
+  PgConnectionConfig, PipelineConfig — the fields this engine reads, with
+  the reference's defaults and constraint messages (``field`` +
+  ``constraint``) so operators see the errors they know. Reference keys
+  the engine does not read are ignored on load (see ``_build_dataclass``).
 
 Integration: ``PgConnectionConfig.to_source_kwargs()`` maps onto
 ``SocketReplicationSource`` (ssl-mode ladder per connection.rs:303-311 —
@@ -145,49 +145,13 @@ class SecretString:
 class BatchConfig:
     """Stream-batching knobs (pipeline.rs:11-99)."""
 
-    DEFAULT_MAX_FILL_MS = 10_000
-    DEFAULT_MEMORY_BUDGET_RATIO = 0.2
     DEFAULT_MAX_BYTES = 8 * 1024 * 1024
 
-    max_fill_ms: int = DEFAULT_MAX_FILL_MS
-    memory_budget_ratio: float = DEFAULT_MEMORY_BUDGET_RATIO
     max_bytes: int = DEFAULT_MAX_BYTES
 
     def validate(self) -> None:
-        if not (0.0 < self.memory_budget_ratio <= 1.0):
-            raise ValidationError(
-                "batch.memory_budget_ratio", "must be in the (0.0, 1.0] interval"
-            )
         if self.max_bytes <= 0:
             raise ValidationError("batch.max_bytes", "must be greater than 0")
-
-
-@dataclass
-class MemoryBackpressureConfig:
-    """Activate/resume memory-ratio thresholds (pipeline.rs:183-237)."""
-
-    DEFAULT_ACTIVATE_THRESHOLD = 0.85
-    DEFAULT_RESUME_THRESHOLD = 0.75
-
-    activate_threshold: float = DEFAULT_ACTIVATE_THRESHOLD
-    resume_threshold: float = DEFAULT_RESUME_THRESHOLD
-
-    def validate(self) -> None:
-        if not (0.0 < self.activate_threshold <= 1.0):
-            raise ValidationError(
-                "memory_backpressure.activate_threshold",
-                "must be in the (0.0, 1.0] interval",
-            )
-        if not (0.0 <= self.resume_threshold < 1.0):
-            raise ValidationError(
-                "memory_backpressure.resume_threshold",
-                "must be in the [0.0, 1.0) interval",
-            )
-        if self.resume_threshold >= self.activate_threshold:
-            raise ValidationError(
-                "memory_backpressure.resume_threshold",
-                "must be lower than memory_backpressure.activate_threshold",
-            )
 
 
 @dataclass
@@ -227,15 +191,6 @@ INVALIDATED_SLOT_BEHAVIORS = ("error", "recreate")
 
 
 @dataclass
-class TcpKeepaliveConfig:
-    """connection.rs:259-274."""
-
-    idle_secs: int = 30
-    interval_secs: int = 10
-    retries: int = 3
-
-
-@dataclass
 class TlsConfig:
     """connection.rs:243-257: PEM roots + an on/off switch."""
 
@@ -258,7 +213,6 @@ class PgConnectionConfig:
     password: SecretString | None = None
     hostaddr: str | None = None
     tls: TlsConfig = field(default_factory=TlsConfig)
-    keepalive: TcpKeepaliveConfig = field(default_factory=TcpKeepaliveConfig)
 
     def without_secrets(self) -> dict:
         """PgConnectionConfigWithoutSecrets (connection.rs:208-239):
@@ -304,45 +258,25 @@ class PipelineConfig:
 
     DEFAULT_TABLE_ERROR_RETRY_DELAY_MS = 10_000
     DEFAULT_TABLE_ERROR_RETRY_MAX_ATTEMPTS = 5
-    DEFAULT_MAX_TABLE_SYNC_WORKERS = 4
     DEFAULT_MAX_COPY_CONNECTIONS_PER_TABLE = 4
-    DEFAULT_MEMORY_REFRESH_INTERVAL_MS = 100
-    DEFAULT_REPLICATION_LAG_REFRESH_INTERVAL_MS = 10_000
 
     id: int = 0
     publication_name: str = "etl"
     pg_connection: PgConnectionConfig = field(default_factory=PgConnectionConfig)
-    #: optional separate state-store endpoint (replicate from a standby,
-    #: keep state on a writable primary); None = reuse pg_connection
-    store_pg_connection: PgConnectionConfig | None = None
     batch: BatchConfig = field(default_factory=BatchConfig)
     table_error_retry_delay_ms: int = DEFAULT_TABLE_ERROR_RETRY_DELAY_MS
     table_error_retry_max_attempts: int = DEFAULT_TABLE_ERROR_RETRY_MAX_ATTEMPTS
-    max_table_sync_workers: int = DEFAULT_MAX_TABLE_SYNC_WORKERS
     max_copy_connections_per_table: int = DEFAULT_MAX_COPY_CONNECTIONS_PER_TABLE
-    memory_refresh_interval_ms: int = DEFAULT_MEMORY_REFRESH_INTERVAL_MS
-    replication_lag_refresh_interval_ms: int = (
-        DEFAULT_REPLICATION_LAG_REFRESH_INTERVAL_MS
-    )
-    #: None disables backpressure (the reference's Option::None)
-    memory_backpressure: MemoryBackpressureConfig | None = field(
-        default_factory=MemoryBackpressureConfig
-    )
     table_sync_copy: TableSyncCopyConfig = field(
         default_factory=TableSyncCopyConfig
     )
     invalidated_slot_behavior: str = "error"
-    run_source_migrations: bool = True
 
     LIST_PARSE_KEYS = ("table_sync_copy.table_ids",)
 
     def validate(self) -> None:
         """pipeline.rs:349-398, same order, same constraint text."""
         self.batch.validate()
-        if self.max_table_sync_workers <= 0:
-            raise ValidationError(
-                "max_table_sync_workers", "must be greater than 0"
-            )
         if self.table_error_retry_max_attempts <= 0:
             raise ValidationError(
                 "table_error_retry_max_attempts", "must be greater than 0"
@@ -351,27 +285,12 @@ class PipelineConfig:
             raise ValidationError(
                 "max_copy_connections_per_table", "must be greater than 0"
             )
-        if self.memory_backpressure is not None:
-            self.memory_backpressure.validate()
-        if self.memory_refresh_interval_ms <= 0:
-            raise ValidationError(
-                "memory_refresh_interval_ms", "must be greater than 0"
-            )
-        if self.replication_lag_refresh_interval_ms <= 0:
-            raise ValidationError(
-                "replication_lag_refresh_interval_ms", "must be greater than 0"
-            )
         if self.invalidated_slot_behavior not in INVALIDATED_SLOT_BEHAVIORS:
             raise ValidationError(
                 "invalidated_slot_behavior",
                 f"must be one of {', '.join(INVALIDATED_SLOT_BEHAVIORS)}",
             )
         self.table_sync_copy.validate()
-
-    def state_store_connection(self) -> PgConnectionConfig:
-        """pipeline.rs:259-266: the standby-read / primary-write split —
-        state storage falls back to the replication endpoint."""
-        return self.store_pg_connection or self.pg_connection
 
 
 # ---------------------------------------------------------------------------
@@ -479,12 +398,9 @@ def _field_dataclass(f) -> type | None:
     shared types (string annotations keep this lookup explicit)."""
     mapping = {
         "BatchConfig": BatchConfig,
-        "MemoryBackpressureConfig | None": MemoryBackpressureConfig,
         "TableSyncCopyConfig": TableSyncCopyConfig,
-        "TcpKeepaliveConfig": TcpKeepaliveConfig,
         "TlsConfig": TlsConfig,
         "PgConnectionConfig": PgConnectionConfig,
-        "PgConnectionConfig | None": PgConnectionConfig,
     }
     ann = f.type if isinstance(f.type, str) else getattr(f.type, "__name__", "")
     return mapping.get(ann)

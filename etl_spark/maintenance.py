@@ -1,73 +1,22 @@
-"""Table maintenance: compaction and retention for parquet sink output.
+"""Table maintenance: version retention for parquet sink output.
 
 The reference runs external maintenance against DuckLake destinations —
 compaction of small files and snapshot/version expiry
 (crates/etl-destinations/src/ducklake/external_maintenance.rs, 932 LoC;
 "external maintenance (compaction, snapshot expiry)" SURVEY §2.10 D4).
-Streaming sinks fragment storage by construction: every micro-batch writes
-its own files, and a current-state table accumulates superseded versions.
-
-Spark shape: compaction is a read→repartition-to-byte-budget→rewrite of the
-live version directory (the OPTIMIZE analog), with an optional sort column
-so row groups cluster by access key (the Z-ORDER-lite analog — parquet
-min/max stats then prune key lookups). Version expiry deletes superseded
-current-state version dirs, keeping the newest N for time travel/rollback
-(the reference's rollback-tables verb needs at least one prior version).
-Both operate on directories the engine owns — never the source data.
+Here compaction belongs to each sink: ``ParquetChangelogSink.compact``
+folds old batch dirs into one segment, and a bucket table's ``compact``
+rewrites its manifest chain into one version (``rebucket`` re-lays it).
+This module holds the expiry half: it deletes superseded current-state
+version dirs, keeping the newest N for time travel/rollback (the
+reference's rollback-tables verb needs at least one prior version). It
+operates on directories the engine owns — never the source data.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-
-from pyspark.sql import DataFrame, SparkSession
-
-
-def plan_compaction_partitions(total_bytes: int, target_mb: int = 128) -> int:
-    """File count sized to a byte budget (ceil of bytes / target)."""
-    target = target_mb * 1024 * 1024
-    return max(1, -(-total_bytes // target))
-
-
-def dir_bytes(path: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-    return total
-
-
-def compact_parquet_dir(
-    spark: SparkSession,
-    path: str,
-    target_mb: int = 128,
-    sort_col: str | None = None,
-) -> dict:
-    """Rewrite a parquet directory into ~target_mb files (atomic swap).
-
-    Returns ``{files_before, files_after, bytes}``. With ``sort_col``,
-    rows are range-repartitioned then sorted within each output file, so
-    parquet column stats make point/range reads on that column prune
-    files — the poor-man's Z-ORDER for the single-key case.
-    """
-    files_before = sum(
-        1 for f in os.listdir(path) if f.endswith(".parquet")
-    )
-    total = dir_bytes(path)
-    n = plan_compaction_partitions(total, target_mb)
-    df: DataFrame = spark.read.parquet(path)
-    if sort_col is not None:
-        df = df.repartitionByRange(n, sort_col).sortWithinPartitions(sort_col)
-    else:
-        df = df.coalesce(n)
-    tmp = path.rstrip("/") + ".__compact__"
-    df.write.mode("overwrite").parquet(tmp)
-    old = path.rstrip("/") + ".__old__"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    files_after = sum(1 for f in os.listdir(path) if f.endswith(".parquet"))
-    return {"files_before": files_before, "files_after": files_after, "bytes": total}
 
 
 def expire_versions(table_root: str, keep: int = 2) -> list[str]:

@@ -2740,10 +2740,6 @@ SELECT pk, op, commit_lsn, tx_ordinal, value AS amount,
 FROM ranked WHERE rn = 1 AND op <> 'DELETE'
 """
 
-# crash-recovered cross-batch flush must land on exactly the one-shot
-# batch LWW state — the same oracle as cdc_current_state by construction
-ORACLES["cdc_xbatch_recovery"] = ORACLES["cdc_current_state"]
-
 # --- round-6 operators -------------------------------------------------------
 
 ORACLES["lineitem_rollup_metrics"] = """

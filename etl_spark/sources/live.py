@@ -618,9 +618,10 @@ def compute_tx_spans(frames, frame_col: str = "frame",
     ``(begin_coord, begin_wal, close_coord)`` — the driver-side lookup
     table :func:`assign_xids` bisects per frame. Factored out so the
     frame DECODER can compute xids inside its own Python stage
-    (``decode_frames(..., xid_spans=...)``) instead of paying a separate
-    ArrowEvalPython pass + a full materialization of the xid'd frames
-    (guide §4: one fewer JVM↔Python boundary over the whole stream).
+    (``decode_frames`` over frames with no ``xid`` column) instead of
+    paying a separate ArrowEvalPython pass + a full materialization of
+    the xid'd frames (guide §4: one fewer JVM↔Python boundary over the
+    whole stream).
 
     ``coord_col`` defaults to ``lsn_col`` (position mode); delivery mode
     passes its packed delivery ordinal. The collect is limit-fenced by

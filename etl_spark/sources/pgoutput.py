@@ -749,9 +749,8 @@ class PersistentRelationRegistry:
         write_json_atomic(self.path, {str(k): v for k, v in self._reg.items()})
 
     def snapshot(self) -> dict[int, list[tuple[int, dict]]]:
-        """Versioned view: ``{rel_id: [(wal_start, spec), ...]}`` sorted.
-        :func:`decode_frames` accepts this directly (and still accepts
-        the flat newest-only shape for callers that build one by hand)."""
+        """Versioned view: ``{rel_id: [(wal_start, spec), ...]}`` sorted —
+        the ``relations`` shape :func:`decode_frames` takes."""
         return {
             rid: [(w, dict(s)) for w, s in specs]
             for rid, specs in self._reg.items()
@@ -1104,19 +1103,19 @@ def decode_frames(
     xid_col: str = "xid",
     carry_tx: dict[int, dict] | None = None,
     assemble_partitions: int | None = None,
-    xid_spans=None,
 ) -> DataFrame:
     """pgoutput frames → GENERIC_ENVELOPE rows (distributed F11 decode).
 
-    ``xid_spans``: optional ``(begin_coord, begin_wal, close_coord)``
-    sorted int64 arrays from :func:`etl_spark.sources.live.
-    compute_tx_spans` (position mode). When given, ``frames`` needs no
-    ``xid`` column: each frame's xid is derived INSIDE this decoder's
-    Python stage by the same vectorized searchsorted ``assign_xids``
-    applies — which removes assign_xids' separate ArrowEvalPython pass
-    (and the checkpoint materialization of the xid'd frames) from wire
-    decode paths (guide §4: one fewer JVM↔Python boundary over the full
-    stream, same O(log n_tx) per frame).
+    Frames without an ``xid_col`` column get their xids INSIDE this
+    decoder's Python stage: the BEGIN..COMMIT spans are collected once
+    (:func:`etl_spark.sources.live.compute_tx_spans`, position mode —
+    the span coordinates are ``lsn_col`` values, which is what the
+    per-frame bisect compares against) and each frame takes the same
+    vectorized searchsorted ``assign_xids`` applies. That removes
+    assign_xids' separate ArrowEvalPython pass (and the checkpoint
+    materialization of the xid'd frames) from wire decode paths (guide
+    §4: one fewer JVM↔Python boundary over the full stream, same
+    O(log n_tx) per frame).
 
     Input: one row per frame with ``(wal_start, xid, frame)`` — the
     XLogData context every frame arrives wrapped in. Relation metadata is
@@ -1142,10 +1141,9 @@ def decode_frames(
     per-frame selection is also deterministic under any partitioning
     (the overlay is driver-collected, never mutated executor-side).
 
-    ``relations`` may be flat (``{rel_id: spec}`` — every frame resolves
-    to that spec) or versioned (``{rel_id: [(wal_start, spec), ...]}`` —
-    the :class:`PersistentRelationRegistry` snapshot): the versioned base
-    gets the same bisect selection as the overlay, so a replayed batch
+    ``relations`` is versioned (``{rel_id: [(wal_start, spec), ...]}`` —
+    the :class:`PersistentRelationRegistry` snapshot) and gets the same
+    bisect selection as the overlay, so a replayed batch
     whose registry already advanced past a DDL still decodes its pre-DDL
     frames against the pre-DDL spec. A frame older than every retained
     base version uses the OLDEST retained spec (never worse than the
@@ -1154,12 +1152,9 @@ def decode_frames(
     base: dict[int, tuple[list[int], list[dict]]] = {}
     if relations:
         for _rid, _v in relations.items():
-            if isinstance(_v, dict):  # flat newest-only shape
-                base[_rid] = ([0], [_v])
-            else:
-                _pairs = sorted(_v, key=lambda t: t[0])
-                base[_rid] = ([int(w) for w, _s in _pairs],
-                              [_s for _w, _s in _pairs])
+            _pairs = sorted(_v, key=lambda t: t[0])
+            base[_rid] = ([int(w) for w, _s in _pairs],
+                          [_s for _w, _s in _pairs])
     versioned = relation_registry_versioned(frames, frame_col, lsn_col)
     # per-rel parallel arrays for bisect selection in the hot loop
     _sel: dict[int, tuple[list[int], list[dict]]] = {
@@ -1168,14 +1163,10 @@ def decode_frames(
     }
 
     spans = None
-    if xid_spans is not None:
-        import numpy as _np
+    if xid_col not in frames.columns:
+        from etl_spark.sources.live import compute_tx_spans
 
-        spans = (
-            _np.asarray(xid_spans[0], dtype=_np.int64),
-            _np.asarray(xid_spans[1], dtype=_np.int64),
-            _np.asarray(xid_spans[2], dtype=_np.int64),
-        )
+        spans = compute_tx_spans(frames, frame_col, lsn_col)
 
     def run(batches: Iterator) -> Iterator:
         import struct as _struct

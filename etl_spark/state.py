@@ -122,8 +122,8 @@ class ControlStore:
     def __post_init__(self):
         import threading
 
-        # cross-batch flush acks advance the LSN from the flush thread
-        # while the driver thread runs table transitions — mutations
+        # a store may be shared by threads (e.g. a loop run on a worker
+        # thread while another thread transitions tables) — mutations
         # serialize on this lock (each _save is already atomic via
         # temp+rename; the lock prevents lost updates between them)
         self._mu = threading.Lock()
@@ -206,7 +206,7 @@ class ControlStore:
                    error: str | None = None,
                    retry_policy: RetryPolicy | None = None) -> TableEntry:
         # hold the lock for the WHOLE mutation + save, not just the save:
-        # advance_flush_lsn on the flush thread serializes behind it, so a
+        # advance_flush_lsn on another thread serializes behind it, so a
         # half-applied transition (new state, stale attempts) can never be
         # persisted to disk
         with self._mu:
@@ -292,7 +292,7 @@ class ControlStore:
     # -- progress ----------------------------------------------------------
     def advance_flush_lsn(self, lsn: int) -> int:
         """Monotonic upsert (store/state/base.rs:81-89): never regresses.
-        Thread-safe: may be called from the cross-batch flush thread."""
+        Thread-safe: serializes with transitions on other threads."""
         with self._mu:
             if lsn > self.flush_lsn:
                 self.flush_lsn = lsn

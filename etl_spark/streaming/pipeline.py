@@ -331,19 +331,11 @@ class Pipeline:
         """foreachBatch body — the reference's apply loop for one
         micro-batch (SURVEY §3.2 steps 3-6).
 
-        Two apply paths. Synchronous (every sink but the cross-batch
-        one): each table's write completes inside this method, so the
-        flush LSN advances only after the destination has the batch —
-        Spark's commit log marks the batch done at return, and a replay
-        after a crash re-merges idempotently (apply.rs ack-gated restart
-        LSN). With a
-        :class:`~etl_spark.streaming.cross_batch_flush.CrossBatchFlushSink`
-        (T5 full form): the batch opens in the sink's ledger, writes
-        dispatch to its flush thread, and the flush LSN advances on the
-        destination ack, after this method has returned.
+        Each table's write completes inside this method, so the flush LSN
+        advances only after the destination has the batch — Spark's
+        commit log marks the batch done at return, and a replay after a
+        crash re-merges idempotently (apply.rs ack-gated restart LSN).
         """
-        from etl_spark.streaming.cross_batch_flush import CrossBatchFlushSink
-
         wire = None
         if self.source_fmt == "pgoutput":
             # binary WAL frames → envelope: learn relations first (persisted
@@ -399,7 +391,6 @@ class Pipeline:
             )
         batch = with_sequence(batch) if "event_seq" not in batch.columns else batch
         batch = batch.persist()
-        cross_mode = isinstance(self.sink, CrossBatchFlushSink)
         try:
             # one agg also feeds telemetry (events + transactions per
             # batch ride the same job as the max-LSN read). Only ROW ops
@@ -473,11 +464,6 @@ class Pipeline:
                 "n": sum(r["n"] for r in tstats),
                 "ntx": sum(r["ntx"] for r in tstats),
             }
-            if cross_mode:
-                # settle batch N-1 (one in flight — apply.rs
-                # pending_flush_result), then open batch N in the ledger
-                # before any op is dispatched
-                self.sink.begin_batch(batch_id, max_lsn_row["m"])
             for name, _cfg in self.tables.items():
                 entry = self.control.get(name)
                 if entry.state == TableState.ERRORED:
@@ -511,13 +497,7 @@ class Pipeline:
             # recorded flush LSN lags; replay from the stale LSN must
             # converge to the same state
             lost = failpoints.should_skip(failpoints.SEND_STATUS_UPDATE)
-            if cross_mode:
-                # do NOT settle: foreachBatch returns while the flush
-                # continues; the flush LSN advances on the destination ack
-                # (ledger marker job), and a crash before ack replays the
-                # batch from the ledger's staged payloads (sink.recover)
-                self.sink.end_batch(advance_lsn=not lost)
-            elif max_lsn is not None and not lost:
+            if max_lsn is not None and not lost:
                 # durable progress: every sink write above has completed
                 self.control.advance_flush_lsn(int(max_lsn))
             self.metrics.inc(
@@ -963,21 +943,6 @@ class Pipeline:
     def start(self, available_now: bool = True):
         """Backfill, then start the stream. ``available_now=True`` drains
         what exists and stops (test/batch mode); False runs continuously."""
-        from etl_spark.streaming.cross_batch_flush import CrossBatchFlushSink
-
-        if isinstance(self.sink, CrossBatchFlushSink):
-            # ack-gated restart (apply.rs:1956-2023): wire the flush LSN to
-            # the destination ack, then replay any dispatched-but-unacked
-            # batch from the ledger BEFORE consuming new input — the commit
-            # log may have run ahead of the destination across the crash
-            self.sink.on_acked = self.control.advance_flush_lsn
-            replayed = self.sink.recover()
-            if replayed:
-                import logging
-
-                logging.getLogger(__name__).warning(
-                    "cross-batch flush recovery replayed batches %s", replayed
-                )
         self.backfill()
         failpoints.hit(failpoints.BEFORE_STREAMING)
         if self.source_fmt == "pgoutput":
@@ -1004,12 +969,6 @@ class Pipeline:
         processed — the deterministic test/batch entry point."""
         q = self.start(available_now=True)
         q.awaitTermination()
-        from etl_spark.streaming.cross_batch_flush import CrossBatchFlushSink
-
-        if isinstance(self.sink, CrossBatchFlushSink):
-            # drain the LAST batch's in-flight flush so "drained" means
-            # destination-acked, not merely commit-logged
-            self.sink.settle_previous()
 
     def stop(self) -> None:
         """Graceful stop (POST /pipelines/{id}/stop analog): halt the

@@ -84,8 +84,8 @@ def _fmt_value(v: float) -> str:
 class MetricsRegistry:
     """Counters, gauges and histograms with label sets + global labels.
 
-    Thread-safe (the async/cross-batch flush sinks dispatch from worker
-    threads). ``render()`` emits the Prometheus text exposition format:
+    Thread-safe (the ``/metrics`` HTTP server renders from its own
+    thread while the apply loop records). ``render()`` emits the Prometheus text exposition format:
     ``# TYPE`` headers, one ``name{labels} value`` sample per series,
     ``_bucket``/``_sum``/``_count`` for histograms.
     """

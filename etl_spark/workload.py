@@ -424,7 +424,7 @@ def pgoutput_wire_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunks = dml_chunks.unionByName(begin_chunks).unionByName(rel_chunk)
     # cut point: unwrap once; reused by the BEGIN-span collect, the
     # relation pre-pass, and the decode. xid recovery is FUSED into the
-    # decoder's own Python stage (decode_frames(xid_spans=...)): the
+    # decoder's own Python stage (decode_frames over xid-less frames): the
     # former assign_xids ArrowEvalPython pass + the full checkpoint
     # materialization of the xid'd frames are gone — one Python stage
     # decodes AND attributes transactions in a single traversal
@@ -433,7 +433,6 @@ def pgoutput_wire_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     env = pgo.decode_frames(
         frames,
         assemble_partitions=spark.sparkContext.defaultParallelism,
-        xid_spans=live.compute_tx_spans(frames),
     )
     rows = env.filter(F.col("op").isin("INSERT", "UPDATE", "DELETE"))
     return rows.select(
@@ -1469,86 +1468,6 @@ def cdc_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return sink.read("users").select(
         "pk", "op", "commit_lsn", "tx_ordinal", "amount", "tier"
-    )
-
-
-def cdc_xbatch_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-batch pipelined flush under a crash between dispatch and
-    destination ack (T5 full form, reference apply.rs:1956-2023): the sim
-    envelope drives a :class:`~etl_spark.streaming.cross_batch_flush.
-    CrossBatchFlushSink` over three LSN-range micro-batches; the MIDDLE
-    batch's destination write fails AFTER its payload is staged and the
-    sink instance is abandoned — the simulated crash where Spark's commit
-    log has run ahead of the destination. A FRESH sink over the same work
-    dir replays the unacked batch from the ledger's staged payloads
-    (``recover``, the settle-previous path), then the final batch applies
-    normally. The recovered current-state table must hash-equal the
-    one-shot batch LWW materialization — same oracle as
-    ``cdc_current_state``, so the gate proves crash-recovery == batch.
-    """
-    import os
-    import tempfile
-
-    from etl_spark.streaming.cross_batch_flush import CrossBatchFlushSink
-    from etl_spark.streaming.sinks import ParquetCurrentStateSink, Sink
-
-    env = envelope_from_events(spark, sf_dir).select(
-        "op", "commit_lsn", "tx_ordinal", "event_seq", "pk", "value", "props"
-    )
-    b = env.agg(
-        F.min("commit_lsn").alias("lo"), F.max("commit_lsn").alias("hi")
-    ).collect()[0]
-    cut1 = b["lo"] + (b["hi"] - b["lo"]) // 3
-    cut2 = b["lo"] + (b["hi"] - b["lo"]) * 2 // 3
-    ranges = [(b["lo"], cut1), (cut1 + 1, cut2), (cut2 + 1, b["hi"])]
-    work = tempfile.mkdtemp(prefix="xbatch_")
-    inner = ParquetCurrentStateSink(
-        os.path.join(work, "dest"), keys=["pk"], spark=spark
-    )
-
-    class _DownSink(Sink):
-        """Destination down: every write fails, so staged ops never ack."""
-
-        def write_snapshot(self, table, df):  # pragma: no cover - unused
-            raise RuntimeError("destination down")
-
-        def write_changes(self, table, df, batch_id):
-            raise RuntimeError("destination down")
-
-    ledger_dir = os.path.join(work, "ledger")
-    sink = CrossBatchFlushSink(inner, ledger_dir, spark)
-    sink.write_snapshot("users", env.limit(0))
-
-    def _batch(i):
-        lo, hi = ranges[i]
-        return env.filter(F.col("commit_lsn").between(lo, hi))
-
-    # batch 0: normal dispatch + ack
-    sink.begin_batch(0, ranges[0][1])
-    sink.write_changes("users", _batch(0), 0)
-    sink.end_batch()
-    sink.settle_previous()
-
-    # batch 1: payload staged, destination DOWN, instance abandoned —
-    # the crash between dispatch and ack
-    crashed = CrossBatchFlushSink(_DownSink(), ledger_dir, spark)
-    crashed.begin_batch(1, ranges[1][1])
-    crashed.write_changes("users", _batch(1), 1)
-    crashed.end_batch()
-    crashed._pool.shutdown(wait=True)  # drain, do NOT settle (simulated crash)
-
-    # restart: fresh sink over the same ledger replays batch 1, then
-    # batch 2 applies normally
-    sink2 = CrossBatchFlushSink(inner, ledger_dir, spark)
-    replayed = sink2.recover()
-    if replayed != [1]:
-        raise AssertionError(f"ledger replay expected [1], got {replayed}")
-    sink2.begin_batch(2, ranges[2][1])
-    sink2.write_changes("users", _batch(2), 2)
-    sink2.end_batch()
-    sink2.settle_previous()
-    return inner.read("users").select(
-        "pk", "op", "commit_lsn", "tx_ordinal", "value", "props"
     )
 
 

@@ -14,7 +14,6 @@ from etl_spark.config import (
     BatchConfig,
     Environment,
     LoadConfigError,
-    MemoryBackpressureConfig,
     PgConnectionConfig,
     PipelineConfig,
     SecretString,
@@ -66,26 +65,8 @@ def test_connection_repr_and_without_secrets_hide_password():
 def test_batch_validation_bounds():
     BatchConfig().validate()  # defaults pass
     with pytest.raises(ValidationError) as e:
-        BatchConfig(memory_budget_ratio=0.0).validate()
-    assert e.value.field == "batch.memory_budget_ratio"
-    with pytest.raises(ValidationError):
-        BatchConfig(memory_budget_ratio=1.5).validate()
-    with pytest.raises(ValidationError) as e:
         BatchConfig(max_bytes=0).validate()
     assert e.value.field == "batch.max_bytes"
-
-
-def test_backpressure_validation():
-    MemoryBackpressureConfig().validate()
-    with pytest.raises(ValidationError):
-        MemoryBackpressureConfig(activate_threshold=0.0).validate()
-    with pytest.raises(ValidationError):
-        MemoryBackpressureConfig(resume_threshold=1.0).validate()
-    with pytest.raises(ValidationError) as e:
-        MemoryBackpressureConfig(
-            activate_threshold=0.5, resume_threshold=0.5
-        ).validate()
-    assert "lower than" in e.value.constraint
 
 
 def test_table_sync_copy_truth_table():
@@ -102,11 +83,8 @@ def test_table_sync_copy_truth_table():
 def test_pipeline_validation_matrix():
     PipelineConfig().validate()
     for field_name, bad in [
-        ("max_table_sync_workers", 0),
         ("table_error_retry_max_attempts", 0),
         ("max_copy_connections_per_table", 0),
-        ("memory_refresh_interval_ms", 0),
-        ("replication_lag_refresh_interval_ms", 0),
     ]:
         cfg = PipelineConfig(**{field_name: bad})
         with pytest.raises(ValidationError) as e:
@@ -114,18 +92,6 @@ def test_pipeline_validation_matrix():
         assert e.value.field == field_name
     with pytest.raises(ValidationError):
         PipelineConfig(invalidated_slot_behavior="panic").validate()
-    # None disables backpressure entirely (reference Option::None)
-    PipelineConfig(memory_backpressure=None).validate()
-
-
-def test_state_store_falls_back_to_replication_endpoint():
-    cfg = PipelineConfig()
-    assert cfg.state_store_connection() is cfg.pg_connection
-    store = PgConnectionConfig(host="primary")
-    assert (
-        PipelineConfig(store_pg_connection=store).state_store_connection()
-        is store
-    )
 
 
 # --- ssl-mode ladder + source integration ---------------------------------
@@ -177,15 +143,16 @@ def test_load_config_layers_env_file_over_base(tmp_path):
     d = _write_config_dir(
         tmp_path,
         {"id": 7, "publication_name": "pub",
-         "batch": {"max_fill_ms": 1000, "max_bytes": 1024}},
+         "max_copy_connections_per_table": 2, "batch": {"max_bytes": 1024}},
         "dev",
         {"batch": {"max_bytes": 2048}},
     )
     cfg = load_config(environ={"APP_CONFIG_DIR": d, "APP_ENVIRONMENT": "dev"})
     assert cfg.id == 7
-    assert cfg.batch.max_fill_ms == 1000  # from base
+    assert cfg.max_copy_connections_per_table == 2  # from base
     assert cfg.batch.max_bytes == 2048  # dev override
-    assert cfg.batch.memory_budget_ratio == BatchConfig.DEFAULT_MEMORY_BUDGET_RATIO
+    assert (cfg.table_error_retry_max_attempts
+            == PipelineConfig.DEFAULT_TABLE_ERROR_RETRY_MAX_ATTEMPTS)
 
 
 def test_load_config_env_vars_override_files(tmp_path):
@@ -210,7 +177,10 @@ def test_load_config_wraps_secret_and_tolerates_unknown_keys(tmp_path):
         {"id": 1, "publication_name": "p",
          "pg_connection": {"host": "h", "password": "s3cret",
                            "future_field": True},
-         "future_top_level": {"x": 1}},
+         "future_top_level": {"x": 1},
+         # settings the engine never read, still present in older files
+         "batch": {"max_fill_ms": 1000},
+         "memory_backpressure": {"activate_threshold": 0.85}},
         "prod",
         {},
     )
@@ -233,12 +203,12 @@ def test_load_config_missing_pieces_error(tmp_path):
 def test_load_config_validates_merged_result(tmp_path):
     d = _write_config_dir(
         tmp_path, {"id": 1, "publication_name": "p"}, "prod",
-        {"max_table_sync_workers": 0},
+        {"max_copy_connections_per_table": 0},
     )
     with pytest.raises(ValidationError):
         load_config(environ={"APP_CONFIG_DIR": d})
     cfg = load_config(environ={"APP_CONFIG_DIR": d}, validate=False)
-    assert cfg.max_table_sync_workers == 0
+    assert cfg.max_copy_connections_per_table == 0
 
 
 def test_invalidated_slot_policy_names_match_live_source():

@@ -201,7 +201,9 @@ def test_recorded_source_max_bytes_budget():
 def test_distributed_unwrap_matches_sequential_source(spark):
     """The distributed chunk unwrap + BEGIN-span xid recovery produces the
     same frames as the sequential RecordedReplicationSource, and the
-    decoded envelope matches decoding the sequential rows directly."""
+    decoded envelope matches decoding the sequential rows directly —
+    whether the xids come from assign_xids or from the decoder itself
+    (unwrapped frames with no xid column)."""
     stream = _recorded_two_tx_stream()
     src = live.RecordedReplicationSource(stream)
     src.start("slot", 0)
@@ -217,11 +219,14 @@ def test_distributed_unwrap_matches_sequential_source(spark):
         [(w, x, bytearray(f)) for w, x, f in seq_rows], pgo.FRAME_SCHEMA)
     env_a = pgo.decode_frames(dist).filter("op != 'RELATION'")
     env_b = pgo.decode_frames(seq_df).filter("op != 'RELATION'")
-    ka = sorted((r.op, r.commit_lsn, r.tx_ordinal, r.start_lsn, r.after)
-                for r in env_a.collect())
-    kb = sorted((r.op, r.commit_lsn, r.tx_ordinal, r.start_lsn, r.after)
-                for r in env_b.collect())
-    assert ka == kb and len(ka) == 3
+    unwrapped = live.unwrap_xlog_chunks(chunks)
+    assert "xid" not in unwrapped.columns
+    env_c = pgo.decode_frames(unwrapped).filter("op != 'RELATION'")
+    ka, kb, kc = (
+        sorted((r.op, r.commit_lsn, r.tx_ordinal, r.start_lsn, r.after)
+               for r in e.collect())
+        for e in (env_a, env_b, env_c))
+    assert ka == kb == kc and len(ka) == 3
 
 
 def test_frame_pump_recorded_stream_to_pipeline_end_to_end(spark, tmp_path):

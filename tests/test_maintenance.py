@@ -5,36 +5,7 @@ import os
 
 import pytest
 
-from etl_spark.maintenance import compact_parquet_dir, expire_versions, plan_compaction_partitions
-
-
-def test_plan_compaction_partitions():
-    mb = 1024 * 1024
-    assert plan_compaction_partitions(10 * mb, target_mb=128) == 1
-    assert plan_compaction_partitions(300 * mb, target_mb=128) == 3
-    assert plan_compaction_partitions(0, target_mb=128) == 1
-
-
-def test_compact_fragmented_dir(spark, tmp_path):
-    path = str(tmp_path / "frag")
-    df = spark.range(0, 10000).withColumnRenamed("id", "k")
-    df.repartition(64).write.parquet(path)  # 64 tiny files
-    before = spark.read.parquet(path).groupBy().sum("k").collect()[0][0]
-    stats = compact_parquet_dir(spark, path, target_mb=128, sort_col="k")
-    assert stats["files_before"] >= 32
-    assert stats["files_after"] == 1  # tiny data → one 128MB-budget file
-    after_df = spark.read.parquet(path)
-    assert after_df.groupBy().sum("k").collect()[0][0] == before
-    assert after_df.count() == 10000
-
-
-def test_compact_is_atomic_swap(spark, tmp_path):
-    # no leftover temp dirs after success
-    path = str(tmp_path / "t")
-    spark.range(0, 100).write.parquet(path)
-    compact_parquet_dir(spark, path, target_mb=64)
-    siblings = os.listdir(str(tmp_path))
-    assert siblings == ["t"], siblings
+from etl_spark.maintenance import expire_versions
 
 
 def test_expire_versions_keeps_live(spark, tmp_path):

@@ -280,9 +280,9 @@ def test_cross_batch_transaction_carries_begin_state(spark, tmp_path):
         (15, 5, pgo.encode_commit(500, 501)),
     ])
     env2 = pgo.decode_frames(
-        batch2, relations={1: {"table": "public.users",
-                               "columns": ["pk", "val"],
-                               "key_cols": ["pk"], "replident": "d"}},
+        batch2, relations={1: [(0, {"table": "public.users",
+                                    "columns": ["pk", "val"],
+                                    "key_cols": ["pk"], "replident": "d"})]},
         carry_tx=reg2.snapshot())
     got2 = {r.start_lsn: (r.commit_lsn, r.tx_ordinal)
             for r in env2.filter("op != 'RELATION'").collect()}

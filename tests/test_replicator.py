@@ -127,4 +127,4 @@ def test_run_threads_policy_and_retry_budget():
 
 def test_invalid_config_rejected_at_construction():
     with pytest.raises(Exception):
-        Replicator(None, _cfg(max_table_sync_workers=0), "/tmp/unused")
+        Replicator(None, _cfg(max_copy_connections_per_table=0), "/tmp/unused")

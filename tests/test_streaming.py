@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from etl_spark.envelope import GENERIC_ENVELOPE
 from etl_spark.state import TableState
 from etl_spark.streaming.pipeline import Pipeline, TableConfig
-from etl_spark.streaming.sinks import ParquetCurrentStateSink
+from etl_spark.streaming.sinks import ParquetCurrentStateSink, TableRoutingSink
 
 PAYLOAD = "pk long, val string"
 
@@ -768,15 +768,70 @@ def test_replication_status_and_restart(spark, env):
     assert p.replication_status()["flush_lsn"] == 41
 
 
-def test_flush_ledger_batch_returns_snapshot(tmp_path):
-    """FlushLedger.batch() hands out a deep copy: consuming the ops list
-    outside the lock must not observe concurrent mark_op_acked mutations."""
-    from etl_spark.streaming.cross_batch_flush import FlushLedger
+def test_multi_table_pipeline_per_table_keys(spark, tmp_path):
+    """Tables that declare DIFFERENT replica-identity keys merge each on
+    ITS OWN keys — one keyed sink per table behind a router (a round-5
+    bug merged every non-first table on table[0]'s keys)."""
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    snap_u = str(tmp_path / "snap_u")
+    snap_o = str(tmp_path / "snap_o")
+    orders_schema = "oid long, line long, amt double"
+    spark.createDataFrame([(1, "a")], PAYLOAD).write.parquet(snap_u)
+    spark.createDataFrame([(1, 2, 5.0), (1, 3, 7.0)],
+                          orders_schema).write.parquet(snap_o)
+    write_events(spark, src, [
+        ev("UPDATE", "users", 10, 0, after={"pk": 1, "val": "a1"}),
+        # composite-key upsert: replaces (1,2) ONLY — with the wrong keys
+        # (pk absent → users' keys) this would corrupt or collapse rows
+        ev("UPDATE", "orders", 11, 0, after={"oid": 1, "line": 2, "amt": 9.0}),
+        ev("INSERT", "orders", 12, 0, after={"oid": 2, "line": 1, "amt": 1.0}),
+    ], "b1")
+    root = str(tmp_path / "sink")
+    sink = TableRoutingSink({
+        "users": ParquetCurrentStateSink(root, keys=["pk"], spark=spark),
+        "orders": ParquetCurrentStateSink(root, keys=["oid", "line"],
+                                          spark=spark),
+    })
+    tables = [
+        TableConfig(name="users", snapshot_path=snap_u, keys=["pk"],
+                    payload_schema=PAYLOAD),
+        TableConfig(name="orders", snapshot_path=snap_o, keys=["oid", "line"],
+                    payload_schema=orders_schema),
+    ]
+    Pipeline(spark, src, tables, sink, str(tmp_path / "work")).run_until_drained()
+    users = {r.pk: r.val for r in sink.read("users").select("pk", "val").collect()}
+    orders = {(r.oid, r.line): r.amt
+              for r in sink.read("orders").select("oid", "line", "amt").collect()}
+    assert users == {1: "a1"}
+    assert orders == {(1, 2): 9.0, (1, 3): 7.0, (2, 1): 1.0}
 
-    led = FlushLedger(str(tmp_path / "ledger.json"))
-    led.open_batch(1, max_lsn=10)
-    led.add_op(1, "write", "users", "/p")
-    snap = led.batch(1)
-    led.mark_op_acked(1, 0)
-    assert snap["ops"][0]["acked"] is False  # snapshot, not the live dict
-    assert led.batch(1)["ops"][0]["acked"] is True
+
+def test_rollback_destination_verb(spark, tmp_path):
+    """rollback_to re-points a parquet-state table at a prior version as a
+    metadata-only re-commit (version numbers stay linear) and refuses
+    expired/never-existed versions."""
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    snap = str(tmp_path / "snap")
+    spark.createDataFrame([(1, "a")], PAYLOAD).write.parquet(snap)
+    write_events(spark, src, [
+        ev("INSERT", "users", 10, 0, after={"pk": 2, "val": "b"}),
+    ], "b1")
+    sink = ParquetCurrentStateSink(str(tmp_path / "sink"), keys=["pk"], spark=spark)
+    p = make_pipeline(spark, {"source": src, "snap": snap,
+                              "work": str(tmp_path / "work"), "sink": sink})
+    p.run_until_drained()
+    p.stop()
+    v_cur = sink._current_version("users")
+    assert v_cur >= 1
+    before = {r.pk: r.val for r in sink.read("users").select("pk", "val").collect()}
+    assert before == {1: "a", 2: "b"}
+
+    nv = sink.rollback_to("users", 0)
+    assert nv == v_cur + 1  # linear, never rewinds
+    after = {r.pk: r.val for r in sink.read("users").select("pk", "val").collect()}
+    assert after == {1: "a"}  # the pre-stream snapshot state
+
+    with pytest.raises(FileNotFoundError):
+        sink.rollback_to("users", 99)

@@ -125,7 +125,6 @@ QUERIES = [
     "stream_native_dedup",
     "stream_incremental_rollup",
     "stream_stateful_dedup",
-    "cdc_xbatch_recovery",
     "cdc_scd2_incremental",
     "cdc_schema_evolution",
     "sketch_hll_users",
