@@ -49,8 +49,8 @@ class ReplicationFrameSource(ABC):
     """Transport interface: live twin of the sim's frame files.
 
     An implementation delivers each XLogData message as one
-    ``(wal_start, xid, frame)`` row — micro-batched into whatever
-    file/queue the pipeline's structured stream reads — and forwards
+    ``(wal_start, xid, frame)`` row — micro-batched into the
+    pipeline's frame-file queue — and forwards
     flush-LSN acks as standby status updates. The engine never calls
     anything else."""
 
@@ -764,6 +764,91 @@ def assign_xids(frames, frame_col: str = "frame", lsn_col: str = "wal_start",
     return out.drop("__ord") if order_cols is not None else out
 
 
+class FrameQueue:
+    """The pipeline's side of the frame-file queue: which files a batch
+    holds and which batches are done — the roles of a file-stream
+    source's seen-file log, offset log and commit log, kept in one JSON
+    record (``state.write_json_atomic``).
+
+    - A pending file is a non-hidden ``*.parquet`` file in ``source_dir``
+      (names starting with ``.`` or ``_`` are ignored) that no committed
+      batch holds, in (modification time, name) order.
+    - :meth:`pin` records ``{id, files}`` BEFORE the batch applies (the
+      write-ahead role of the offset log); :meth:`commit` marks it done
+      after it applied. A pin without a commit (a crash mid-apply) is the
+      next batch again, with the same id and the same files even if more
+      files arrived since: a drain can end mid-transaction, so the batch
+      re-sent after a crash is not the same batch, and the sinks'
+      batch-id ledgers must see the exact batch they may already hold.
+    - Batch ids start at 0 and count up; :meth:`reset` (resync) forgets
+      the applied files and keeps counting, so a replay never reuses an
+      id for different frames.
+
+    The record lists every applied file name, so it grows with the
+    number of files the queue has seen, as Spark's seen-file log does.
+    """
+
+    def __init__(self, source_dir: str, path: str):
+        import json
+
+        self.source_dir = source_dir
+        self.path = path
+        try:
+            with open(path) as f:
+                rec = json.load(f)
+        except FileNotFoundError:
+            rec = {"next_id": 0, "applied": [], "pinned": None}
+        self.next_id: int = rec["next_id"]
+        self.applied: set[str] = set(rec["applied"])
+        #: ``{"id": int, "files": [name, ...]}`` of the uncommitted batch
+        self.pinned: dict | None = rec["pinned"]
+
+    def _save(self) -> None:
+        from etl_spark.state import write_json_atomic
+
+        write_json_atomic(self.path, {"next_id": self.next_id,
+                                      "applied": sorted(self.applied),
+                                      "pinned": self.pinned})
+
+    def pending(self) -> list[str]:
+        """Names of the files no batch holds yet, in queue order."""
+        import os
+
+        if not os.path.isdir(self.source_dir):
+            return []
+        held = self.applied | set(self.pinned["files"] if self.pinned else ())
+        names = [f for f in os.listdir(self.source_dir)
+                 if f.endswith(".parquet") and f[0] not in "._"
+                 and f not in held]
+        return sorted(names, key=lambda f: (
+            os.path.getmtime(os.path.join(self.source_dir, f)), f))
+
+    def pin(self, files: list[str]) -> None:
+        self.pinned = {"id": self.next_id, "files": list(files)}
+        self._save()
+
+    def paths(self) -> list[str]:
+        """Absolute paths of the pinned batch's files."""
+        import os
+
+        return [os.path.join(self.source_dir, f) for f in self.pinned["files"]]
+
+    def commit(self) -> None:
+        self.applied.update(self.pinned["files"])
+        self.next_id = self.pinned["id"] + 1
+        self.pinned = None
+        self._save()
+
+    def reset(self) -> None:
+        """Forget every applied file and any pin: the retained files
+        replay from the first one, under new batch ids."""
+        if self.pinned is not None:
+            self.next_id = self.pinned["id"] + 1
+        self.applied.clear()
+        self.pinned = None
+        self._save()
+
+
 #: :meth:`FrameFilePump.run_live` keepalive policy (apply.rs:96-116): the
 #: client self-sends a status update at this fraction of
 #: ``wal_sender_timeout`` since its last send...
@@ -777,24 +862,27 @@ IDLE_NAP_S = 0.02
 
 class FrameFilePump:
     """Bridge a :class:`ReplicationFrameSource` into the pipeline's
-    micro-batched file queue — the piece LIVE_SOURCE.md's component map
+    frame-file queue — the piece LIVE_SOURCE.md's component map
     describes as "ship each XLogData message as one (wal_start, xid,
     frame) row into the same micro-batched file/queue the sim writes".
 
     Each :meth:`drain_once` polls the transport, writes one flat
-    FRAME_SCHEMA parquet file into the pipeline's source directory
-    (atomic move — the file stream never sees a partial file), and — the
-    ack-gated half — reports the ENGINE's durable flush LSN back to the
-    transport as a standby status update. The write position (how far
-    the pump has shipped) and the flush position (how far the
-    destination has acked, read from the pipeline's ControlStore) are
-    deliberately different numbers: a crash between them replays from
-    the slot, and the engine's at-least-once machinery absorbs it.
+    FRAME_SCHEMA parquet file into the pipeline's source directory with
+    pyarrow on the driver (a hidden temp file renamed into place, so the
+    queue never sees a partial file), and — the ack-gated half — reports
+    the ENGINE's durable flush LSN back to the transport as a standby
+    status update. The write position (how far the pump has shipped) and
+    the flush position (how far the destination has acked, read from the
+    pipeline's ControlStore) are deliberately different numbers: a crash
+    between them replays from the slot, and the engine's at-least-once
+    machinery absorbs it. The pipeline consumes the files through
+    :class:`FrameQueue`.
 
     Driver-side by design: one replication connection is a single
     serialized byte stream (the reference's apply worker consumes it on
     one task too, worker.rs:366-430); Spark parallelism begins at the
-    decode, not the transport.
+    decode, not the transport. ``spark`` is accepted for call
+    compatibility and not used.
     """
 
     def __init__(self, source: ReplicationFrameSource, spark, source_dir: str,
@@ -803,7 +891,6 @@ class FrameFilePump:
         import re
 
         self.source = source
-        self.spark = spark
         self.source_dir = source_dir
         self.control = control  # ControlStore-like: .flush_lsn
         self.batch_bytes = batch_bytes
@@ -814,8 +901,8 @@ class FrameFilePump:
         if metrics is not None and hasattr(source, "metrics"):
             source.metrics = metrics
         # Resume numbering AFTER any file a previous incarnation shipped:
-        # Spark's file-stream checkpoint marks paths as seen, so a restart
-        # that reused pump000001.parquet would have its replayed frames
+        # the queue records applied files by name, so a restart that
+        # reused pump000001.parquet would have its replayed frames
         # silently ignored (the at-least-once replay would be LOST). Names
         # must be unique across incarnations of the same queue.
         existing = [
@@ -830,34 +917,23 @@ class FrameFilePump:
         """Poll one transport batch into one frame file; returns the row
         count (0 = transport idle, nothing written)."""
         import os
-        import shutil
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from etl_spark.sources.pgoutput import FRAME_ARROW_SCHEMA
 
         rows = self.source.poll_frames(self.batch_bytes)
         if not rows:
             return 0
         self._write_pos = max(self._write_pos, max(w for w, _, _ in rows))
         self._n += 1
-        name = f"pump{self._n:06d}"
-        staging = os.path.join(self.source_dir, f".__pump_stage_{name}")
-        # Arrow-batched ship: a pandas frame crosses to the JVM as Arrow
-        # record batches (one memcpy-ish hop), where a list of Python
-        # tuples would pickle row-at-a-time — 6x measured on a 120k-frame
-        # batch at sf0.1
-        import pandas as pd
-
-        df = self.spark.createDataFrame(
-            pd.DataFrame({
-                "wal_start": pd.Series((w for w, _, _ in rows), dtype="int64"),
-                "xid": pd.Series((x for _, x, _ in rows), dtype="int64"),
-                "frame": pd.Series(bytes(f) for _, _, f in rows),
-            }),
-            schema="wal_start long, xid long, frame binary",
-        )
-        df.coalesce(1).write.mode("overwrite").parquet(staging)
-        part = next(p for p in os.listdir(staging) if p.endswith(".parquet"))
-        shutil.move(os.path.join(staging, part),
-                    os.path.join(self.source_dir, f"{name}.parquet"))
-        shutil.rmtree(staging)
+        name = f"pump{self._n:06d}.parquet"
+        wal, xid, frame = zip(*rows)
+        staging = os.path.join(self.source_dir, f".{name}")
+        pq.write_table(pa.table([list(wal), list(xid), list(frame)],
+                                schema=FRAME_ARROW_SCHEMA), staging)
+        os.replace(staging, os.path.join(self.source_dir, name))
         return len(rows)
 
     def report_progress(self) -> None:

@@ -34,7 +34,10 @@ import struct
 import uuid as _uuid_mod
 from collections.abc import Iterator
 
-from pyspark.sql import DataFrame, Window
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_spark.envelope import with_sequence
@@ -684,6 +687,9 @@ def type_registry(frames: DataFrame, frame_col: str = "frame") -> dict[int, str]
 
 #: raw frame-file schema: what a binary WAL shipper writes per frame
 FRAME_SCHEMA = "wal_start long, xid long, frame binary"
+#: the same schema in Arrow, for frame files written and read on the driver
+FRAME_ARROW_SCHEMA = pa.schema([("wal_start", pa.int64()), ("xid", pa.int64()),
+                                ("frame", pa.binary())])
 
 
 class PersistentRelationRegistry:
@@ -691,14 +697,15 @@ class PersistentRelationRegistry:
     VERSIONED by the RELATION frame's ``wal_start``.
 
     Relation messages arrive once per (table, schema version) — a restart
-    with an intact checkpoint will NOT re-deliver old frames, so the
+    that finds its applied batches recorded will NOT re-deliver old
+    frames, so the
     registry must outlive the stream (the reference stores table schemas
     in its store for exactly this reason, store/schema/base.rs).
 
     Versioning makes the carried decode base LSN-exact, which makes the
     *advance order* insensitive to crashes: the pipeline defers
-    ``update_from`` to batch success, but Spark's commit log is written
-    only after foreachBatch RETURNS — a crash in that residual window
+    ``update_from`` to batch success, but the batch's commit mark is
+    written only after the apply RETURNS — a crash in that residual window
     replays a batch whose registry already advanced. With a newest-only
     base the replay's pre-DDL frames (RELATION learned in an earlier
     batch) would fall back to the post-DDL spec and mis-decode; with the
@@ -761,8 +768,8 @@ class PersistentTypeRegistry:
     """Custom-type names persisted across micro-batches and restarts.
 
     TYPE ('Y') frames arrive once per custom type per connection — like
-    RELATION frames, a restart with an intact checkpoint will not
-    re-deliver them, so ``{type_oid: "ns.name"}`` must outlive the
+    RELATION frames, a restart that finds its applied batches recorded
+    will not re-deliver them, so ``{type_oid: "ns.name"}`` must outlive the
     stream. Same storage pattern as :class:`PersistentRelationRegistry`."""
 
     def __init__(self, path: str):
@@ -804,8 +811,8 @@ class PersistentTxRegistry:
     2311-2321). Same storage pattern as :class:`PersistentRelationRegistry`.
 
     Generations close the same residual replay window the relation
-    registry's versioning closes: Spark writes the batch's commit log
-    only after foreachBatch RETURNS, so a crash after ``advance_from``
+    registry's versioning closes: the batch's commit mark is written
+    only after the apply RETURNS, so a crash after ``advance_from``
     replays a batch whose tx state already advanced. Against the
     advanced state, a replayed continuation batch would (a) shift its
     ``tx_ordinal`` by the already-folded count — the same events
@@ -997,8 +1004,8 @@ class PersistentTxRegistry:
 
 
 class WireBatchStats:
-    """Driver-side summary of one raw-frame micro-batch, gathered by
-    :func:`collect_wire_stats` in a single Spark job."""
+    """Driver-side summary of one batch of raw frames, gathered by
+    :func:`collect_wire_stats` without a Spark job."""
 
     __slots__ = ("bounds", "relations", "types", "bc", "env_counts")
 
@@ -1015,73 +1022,60 @@ class WireBatchStats:
         self.env_counts: dict[int, int] = env_counts
 
 
-def collect_wire_stats(
-    frames: DataFrame,
-    frame_col: str = "frame",
-    lsn_col: str = "wal_start",
-    xid_col: str = "xid",
-    max_tx: int | None = None,
-) -> WireBatchStats:
-    """Everything the pipeline's driver needs from a raw pgoutput
-    micro-batch, in ONE Spark job.
+#: first bytes of the frames that emit an envelope row and take part in
+#: tx_ordinal numbering (DML + RELATION/TRUNCATE/MESSAGE)
+_ENV_TAGS = (b"I", b"U", b"D", b"R", b"T", b"M")
 
-    Replaces five separate jobs per micro-batch (guide §1.2: small-batch
-    pipeline wall time is job-count-bound, each driver collect pays a full
-    scheduler + py4j round trip): the wal-bounds agg, the TYPE collect,
-    the RELATION collect, the BEGIN/COMMIT collect, and the per-xid
-    envelope-row counts. The aggregation groups by xid, so the driver
-    materializes one row per transaction (plus the out-of-tx metadata
-    group) with that group's catalog-sized metadata frames attached —
-    bounded by transaction count and DDL volume, never by DML frame
-    volume. ``max_tx`` keeps the loud driver-collect ceiling the fenced
-    B/C collect had: the grouped result is LIMIT-capped at ``max_tx + 2``
-    rows (txs + the xid=-1 sentinel group) and hitting the cap raises
-    with the same remediation text.
+
+def collect_wire_stats(frames: list[str],
+                       max_tx: int | None = None) -> WireBatchStats:
+    """Everything the pipeline's driver needs from a batch of frame files
+    (``frames``: their paths): wal bounds, the RELATION and TYPE
+    metadata, the BEGIN/COMMIT frames and the per-xid envelope-row
+    counts.
+
+    The files are read once with pyarrow on the driver — the frames are
+    the bytes the pump already held there — so no Spark job runs. Only
+    the metadata frames become Python objects; the counts and bounds are
+    Arrow kernels. ``max_tx`` keeps the loud driver ceiling: a batch
+    with ``max_tx + 2`` or more distinct xids (transactions plus the
+    xid = -1 sentinel) raises with the remediation text of
+    :func:`etl_spark.sources.live._check_tx_budget`.
     """
-    first = F.substring(F.col(frame_col).cast("binary"), 1, 1)
-    agg = frames.groupBy(xid_col).agg(
-        F.min(lsn_col).alias("mn"),
-        F.max(lsn_col).alias("mx"),
-        F.count(
-            F.when(first.isin([b"I", b"U", b"D", b"R", b"T", b"M"]), 1)
-        ).alias("n_env"),
-        F.collect_list(
-            F.when(
-                first.isin([b"R", b"Y", b"B", b"C"]),
-                F.struct(F.col(lsn_col).alias("w"), F.col(frame_col).alias("f")),
-            )
-        ).alias("meta"),
-    )
-    fence = (max_tx + 2) if max_tx is not None else None
-    rows = (agg.limit(fence) if fence is not None else agg).collect()
-    if fence is not None and len(rows) >= fence:
+    # a file that lacks a FRAME_SCHEMA column reads it as NULL, as
+    # Spark's reader does under an explicit schema
+    t = ds.dataset(list(frames), format="parquet",
+                   schema=FRAME_ARROW_SCHEMA).to_table()
+    if max_tx is not None and pc.count_distinct(t["xid"]).as_py() >= max_tx + 2:
         from etl_spark.sources.live import _check_tx_budget
 
         _check_tx_budget(max_tx + 1, max_tx, "collect_wire_stats")
-    mns = [r["mn"] for r in rows if r["mn"] is not None]
-    bounds = (
-        (min(mns), max(r["mx"] for r in rows if r["mx"] is not None))
-        if mns
-        else (None, None)
-    )
+    if t.num_rows == 0:
+        return WireBatchStats((None, None), {}, {}, [], {})
+    mm = pc.min_max(t["wal_start"])
+    bounds = (mm["min"].as_py(), mm["max"].as_py())
+    first = pc.binary_slice(t["frame"], 0, 1)
+    env = t.filter(pc.is_in(first, value_set=pa.array(_ENV_TAGS, pa.binary())))
+    counts = {
+        r["xid"]: r["xid_count"]
+        for r in env.group_by("xid").aggregate([("xid", "count")]).to_pylist()
+    }
+    meta = t.filter(pc.is_in(first, value_set=pa.array(
+        [b"R", b"Y", b"B", b"C"], pa.binary())))
     rel: dict[int, list[tuple[int, dict]]] = {}
     typ: dict[int, str] = {}
     bc: list[tuple[int, bytes]] = []
-    counts: dict[int, int] = {}
-    for r in rows:
-        if r["n_env"]:
-            counts[r[xid_col]] = r["n_env"]
-        for m in r["meta"] or ():
-            buf = bytes(m["f"])
-            tag = buf[0]
-            if tag == 82:  # 'R'
-                p = parse_frame(buf)
-                rel.setdefault(p["rel_id"], []).append((m["w"], _rel_spec(p)))
-            elif tag == 89:  # 'Y'
-                p = parse_frame(buf)
-                typ[p["type_oid"]] = f"{p['namespace']}.{p['name']}"
-            else:  # 'B' / 'C'
-                bc.append((int(r[xid_col]), buf))
+    for r in meta.to_pylist():
+        buf = r["frame"]
+        tag = buf[0]
+        if tag == 82:  # 'R'
+            p = parse_frame(buf)
+            rel.setdefault(p["rel_id"], []).append((r["wal_start"], _rel_spec(p)))
+        elif tag == 89:  # 'Y'
+            p = parse_frame(buf)
+            typ[p["type_oid"]] = f"{p['namespace']}.{p['name']}"
+        else:  # 'B' / 'C'
+            bc.append((r["xid"], buf))
     for specs in rel.values():
         specs.sort(key=lambda t: t[0])
     return WireBatchStats(bounds, rel, typ, bc, counts)
@@ -1103,6 +1097,7 @@ def decode_frames(
     xid_col: str = "xid",
     carry_tx: dict[int, dict] | None = None,
     assemble_partitions: int | None = None,
+    overlay: dict[int, list[tuple[int, dict]]] | None = None,
 ) -> DataFrame:
     """pgoutput frames → GENERIC_ENVELOPE rows (distributed F11 decode).
 
@@ -1148,6 +1143,11 @@ def decode_frames(
     frames against the pre-DDL spec. A frame older than every retained
     base version uses the OLDEST retained spec (never worse than the
     newest-only fallback it replaces).
+
+    ``overlay``: this batch's versioned RELATION frames, if the caller
+    already has them (the pipeline takes them from
+    :func:`collect_wire_stats`); omitted → one collect of the frames'
+    RELATION rows here.
     """
     base: dict[int, tuple[list[int], list[dict]]] = {}
     if relations:
@@ -1155,7 +1155,8 @@ def decode_frames(
             _pairs = sorted(_v, key=lambda t: t[0])
             base[_rid] = ([int(w) for w, _s in _pairs],
                           [_s for _w, _s in _pairs])
-    versioned = relation_registry_versioned(frames, frame_col, lsn_col)
+    versioned = (overlay if overlay is not None
+                 else relation_registry_versioned(frames, frame_col, lsn_col))
     # per-rel parallel arrays for bisect selection in the hot loop
     _sel: dict[int, tuple[list[int], list[dict]]] = {
         rid: ([w for w, _s in specs], [s for _w, s in specs])
@@ -1419,9 +1420,6 @@ def decode_frames(
     # from the wrong numbering domain (the old ``coalesce(..., xid)``
     # fallback) silently corrupts LWW ordering exactly when WAL volume
     # forces multi-batch transactions — i.e. exactly at scale.
-    wp = Window.partitionBy("xid")
-    wo = wp.orderBy(F.col("wal_start").asc())
-    env = decoded.withColumn("commit_lsn", F.max("begin_final_lsn").over(wp))
     if carry_tx:
         carried = frames.sparkSession.createDataFrame(
             [
@@ -1430,42 +1428,34 @@ def decode_frames(
             ],
             "xid long, __carry_final_lsn long, __carry_offset long",
         )
-        env = (
-            env.join(F.broadcast(carried), "xid", "left")
-            .withColumn(
-                "commit_lsn", F.coalesce("commit_lsn", "__carry_final_lsn")
-            )
-        )
-        offset = F.coalesce(F.col("__carry_offset"), F.lit(0))
+        decoded = decoded.join(F.broadcast(carried), "xid", "left")
+        carry_lsn, offset = "__carry_final_lsn", "coalesce(__carry_offset, 0)"
     else:
-        offset = F.lit(0)
+        carry_lsn, offset = "CAST(NULL AS BIGINT)", "0"
+    # SQL text rather than Column builders: each builder is a py4j round
+    # trip, and this plan is rebuilt for every batch
     env = (
-        env.filter(~F.col("op").isin("BEGIN", "COMMIT"))
-        .withColumn("tx_ordinal", F.row_number().over(wo) - 1 + offset)
-        .withColumn(
-            "commit_lsn",
+        decoded.selectExpr(
+            "*",
+            "coalesce(max(begin_final_lsn) OVER (PARTITION BY xid), "
+            f"{carry_lsn}) AS __commit_lsn",
+        )
+        .where("op NOT IN ('BEGIN', 'COMMIT')")
+        .selectExpr(
+            "op", "`table`",
             # Strictness applies to transactional DML only: RELATION /
             # MESSAGE frames legitimately arrive outside any transaction
             # (xid sentinel) and keep a NULL commit_lsn — never a value
             # borrowed from the xid domain.
-            F.when(
-                F.col("commit_lsn").isNotNull()
-                | ~F.col("op").isin("INSERT", "UPDATE", "DELETE", "TRUNCATE"),
-                F.col("commit_lsn"),
-            ).otherwise(
-                F.raise_error(
-                    F.concat(
-                        F.lit("pgoutput: no BEGIN state (batch or carried) for xid "),
-                        F.col("xid").cast("string"),
-                    )
-                )
-            ),
-        )
-        .select(
-            "op", "table", "commit_lsn",
-            F.col("wal_start").alias("start_lsn"),
-            "tx_ordinal", "after", "before", "before_kind", "missing_cols",
-            F.lit(None).cast("long").alias("schema_snapshot_lsn"),
+            "CASE WHEN __commit_lsn IS NOT NULL OR op NOT IN "
+            "('INSERT', 'UPDATE', 'DELETE', 'TRUNCATE') THEN __commit_lsn "
+            "ELSE raise_error(concat('pgoutput: no BEGIN state (batch or "
+            "carried) for xid ', CAST(xid AS STRING))) END AS commit_lsn",
+            "wal_start AS start_lsn",
+            "row_number() OVER (PARTITION BY xid ORDER BY wal_start) - 1 + "
+            f"{offset} AS tx_ordinal",
+            "`after`", "`before`", "before_kind", "missing_cols",
+            "CAST(NULL AS BIGINT) AS schema_snapshot_lsn",
         )
     )
     return with_sequence(env)

@@ -1,7 +1,7 @@
 """Pipeline orchestrator: snapshot backfill → change stream → sinks.
 
 The reference's ``Pipeline::start()`` (crates/etl/src/pipeline.rs:142-234)
-re-expressed on Structured Streaming:
+re-expressed on Spark:
 
 1. hydrate control state; apply restart semantics (tables not yet
    SyncDone/Ready re-copy from a fresh snapshot — lifecycle.rs:241-255);
@@ -11,13 +11,20 @@ re-expressed on Structured Streaming:
    ``event_seq`` makes snapshot/stream overlap harmless (SURVEY T6), which
    is what lets us skip the reference's SyncWait/Catchup pause protocol
    (that exists because its destinations apply events in arrival order);
-4. start the change stream with ``foreachBatch``: per-table routing (P3),
-   truncate splitting (T8), TOAST-partial NULL marking (J1), idempotent
-   sink write, then durable progress advance (T4: flush LSN only moves
-   after the sink confirms — foreachBatch is synchronous so completion IS
-   the Durable signal) and SyncDone→Ready transitions;
-5. the stream checkpoint directory is the replication slot (S4): deleting
-   it = slot invalidation = full re-sync.
+4. apply the change stream one batch at a time (:meth:`_apply_batch`):
+   per-table routing (P3), truncate splitting (T8), TOAST-partial NULL
+   marking (J1), idempotent sink write, then durable progress advance
+   (T4: the flush LSN only moves after the sink confirms — the apply is
+   synchronous, so its completion IS the Durable signal) and
+   SyncDone→Ready transitions. Envelope files (``source_fmt="envelope"``)
+   arrive through a Structured Streaming ``foreachBatch`` query; pgoutput
+   frame files (``source_fmt="pgoutput"``) are drained on the driver
+   (:meth:`run_until_drained` over a
+   :class:`~etl_spark.sources.live.FrameQueue`), one Spark scan of the
+   frames per batch and no streaming query;
+5. the record of applied batches is the replication slot (S4): the
+   stream checkpoint directory for envelope files, the frame queue's
+   record for pgoutput. Deleting it = slot invalidation = full re-sync.
 
 Per-table errors quarantine the table (Errored + retry policy, T10)
 without stopping the pipeline — other tables keep flowing.
@@ -26,6 +33,7 @@ without stopping the pipeline — other tables keep flowing.
 from __future__ import annotations
 
 import os
+import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -122,7 +130,9 @@ class Pipeline:
         self.relations = None
         self.txs = None
         self.types = None
+        self.frame_queue = None
         if source_fmt == "pgoutput":
+            from etl_spark.sources.live import FrameQueue
             from etl_spark.sources.pgoutput import (
                 PersistentRelationRegistry,
                 PersistentTxRegistry,
@@ -145,6 +155,10 @@ class Pipeline:
             self.txs = PersistentTxRegistry(
                 os.path.join(work_dir, "pgoutput_txs.json")
             )
+            # which frame files each batch holds, pinned before it
+            # applies and marked done after (the offset + commit logs)
+            self.frame_queue = FrameQueue(
+                source_dir, os.path.join(work_dir, "frame_queue.json"))
 
     # ------------------------------------------------------------------
     def hydrate_schemas(self) -> list[str]:
@@ -327,15 +341,19 @@ class Pipeline:
                 )
 
     # ------------------------------------------------------------------
-    def _apply_batch(self, batch: DataFrame, batch_id: int) -> None:
-        """foreachBatch body — the reference's apply loop for one
-        micro-batch (SURVEY §3.2 steps 3-6).
+    def _apply_batch(self, batch, batch_id: int) -> None:
+        """The reference's apply loop for one micro-batch (SURVEY §3.2
+        steps 3-6). ``batch``: the envelope DataFrame (the streaming
+        query's ``foreachBatch`` body), or, for pgoutput, the paths of
+        the batch's frame files.
 
         Each table's write completes inside this method, so the flush LSN
-        advances only after the destination has the batch — Spark's
-        commit log marks the batch done at return, and a replay after a
-        crash re-merges idempotently (apply.rs ack-gated restart LSN).
+        advances only after the destination has the batch — the commit
+        log (or the frame queue's commit mark) marks the batch done at
+        return, and a replay after a crash re-merges idempotently
+        (apply.rs ack-gated restart LSN).
         """
+        t_start = time.monotonic()
         wire = None
         if self.source_fmt == "pgoutput":
             # binary WAL frames → envelope: learn relations first (persisted
@@ -343,6 +361,7 @@ class Pipeline:
             # in-flight transaction state (BEGINs from earlier batches)
             from etl_spark.sources.live import MAX_TX_PER_WINDOW
             from etl_spark.sources.pgoutput import (
+                FRAME_SCHEMA,
                 collect_wire_stats,
                 decode_frames,
             )
@@ -360,34 +379,37 @@ class Pipeline:
             # overlay) would fall back to the already-advanced post-DDL
             # base, mis-keying renames and misaligning cells after a drop.
             carried_relations = self.relations.snapshot()
-            # ONE Spark job gathers everything the driver needs from the
-            # raw batch — wal bounds, RELATION/TYPE metadata frames,
-            # BEGIN/COMMIT frames, per-xid envelope counts — where five
-            # separate collect jobs ran before (guide §1.2: small-batch
-            # pipeline wall time is job-count-bound). Only the COLLECT is
-            # hoisted; each registry still ADVANCES at its original point
-            # (types now, relations/txs deferred to batch success below),
-            # so the crash/replay windows are unchanged.
-            with telemetry.job_scope("pipeline: wire-stats"):
-                wire = collect_wire_stats(batch, max_tx=MAX_TX_PER_WINDOW)
+            # Everything the driver needs from the raw batch — wal bounds,
+            # RELATION/TYPE metadata frames, BEGIN/COMMIT frames, per-xid
+            # envelope counts — comes from one pyarrow read of the frame
+            # files on the driver, with no Spark job (guide §1.2: small-
+            # batch pipeline wall time is job-count-bound). Each registry
+            # still ADVANCES at its original point (types now,
+            # relations/txs deferred to batch success below), so the
+            # crash/replay windows are unchanged.
+            wire = collect_wire_stats(batch, max_tx=MAX_TX_PER_WINDOW)
             # TYPE names are exempt from the deferral: they are idempotent
             # oid→name metadata (never positional), and _apply_relations
             # needs same-batch TYPE frames visible when naming custom-typed
             # columns mid-batch.
             self.types.ingest(wire.types)
             # LSN-exact tx carry (mirrors the versioned relation base): a
-            # crash after txs.advance_from but before Spark's commit log
-            # replays this batch against the ADVANCED tx state — shifted
-            # continuation ordinals (dedup-defeating duplicate sequence
-            # numbers) and popped committed xids (strict-decode crash
-            # loop). snapshot_for(first frame's wal) returns the state the
-            # FIRST attempt decoded with, whether or not the advance ran.
+            # crash after txs.advance_from but before the batch's commit
+            # mark replays this batch against the ADVANCED tx state —
+            # shifted continuation ordinals (dedup-defeating duplicate
+            # sequence numbers) and popped committed xids (strict-decode
+            # crash loop). snapshot_for(first frame's wal) returns the
+            # state the FIRST attempt decoded with, whether or not the
+            # advance ran.
+            carry_tx = self.txs.snapshot_for(
+                int(wire.bounds[0]) if wire.bounds[0] is not None else None)
+            # the one Spark scan of the frames: decode, then the persist
+            # below materializes it for every later consumer
             batch = decode_frames(
-                batch,
+                self.spark.read.schema(FRAME_SCHEMA).parquet(*batch),
                 relations=carried_relations,
-                carry_tx=self.txs.snapshot_for(
-                    int(wire.bounds[0]) if wire.bounds[0] is not None else None
-                ),
+                carry_tx=carry_tx,
+                overlay=wire.relations,
             )
         batch = with_sequence(batch) if "event_seq" not in batch.columns else batch
         batch = batch.persist()
@@ -504,6 +526,15 @@ class Pipeline:
                 telemetry.ETL_EVENTS_PROCESSED_TOTAL, int(max_lsn_row["n"]))
             self.metrics.inc(
                 telemetry.ETL_TRANSACTIONS_TOTAL, int(max_lsn_row["ntx"]))
+            if wire is not None:
+                # size of each transaction that COMMITs in this batch: its
+                # envelope rows here plus those carried from earlier batches
+                for xid, raw in wire.bc:
+                    if raw[:1] == b"C":
+                        self.metrics.observe(
+                            telemetry.ETL_TRANSACTION_SIZE,
+                            carry_tx.get(xid, {}).get("ordinal_offset", 0)
+                            + wire.env_counts.get(xid, 0))
             if lost:
                 self.metrics.inc(telemetry.ETL_STATUS_UPDATES_SKIPPED_TOTAL)
             if max_lsn is not None:
@@ -518,8 +549,8 @@ class Pipeline:
                 # a batch that fails above replays on restart, and the
                 # replayed decode must see the same carried state it saw
                 # the first time. For relations the deferral alone is not
-                # sufficient — Spark writes the batch's commit log only
-                # after foreachBatch RETURNS, so a crash after this line
+                # sufficient — the batch's commit mark is written only
+                # after this method RETURNS, so a crash after this line
                 # still replays the batch against the advanced registry.
                 # The registry is therefore persisted VERSIONED by
                 # wal_start (ADVICE r9): the replay's pre-DDL frames
@@ -527,16 +558,18 @@ class Pipeline:
                 # the advance order is crash-insensitive either way.
                 self.relations.ingest(wire.relations)
                 # ADVANCE_RELATION_REGISTRY: crash in exactly that
-                # residual window (registry advanced, commit log not yet
+                # residual window (registry advanced, commit mark not yet
                 # written) — the restart must replay with correct decode
                 failpoints.hit(failpoints.ADVANCE_RELATION_REGISTRY)
                 self.txs.advance_parsed(wire.bc, wire.env_counts,
                                         wire.bounds)
                 # ADVANCE_TX_REGISTRY: crash after BOTH registries
-                # advanced, commit log still unwritten — the widest
+                # advanced, commit mark still unwritten — the widest
                 # replay window; the generational tx carry above makes
                 # the replayed decode identical to the first attempt
                 failpoints.hit(failpoints.ADVANCE_TX_REGISTRY)
+            self.metrics.observe(telemetry.ETL_BATCH_APPLY_DURATION_SECONDS,
+                                 time.monotonic() - t_start)
         finally:
             batch.unpersist()
 
@@ -942,16 +975,15 @@ class Pipeline:
     # ------------------------------------------------------------------
     def start(self, available_now: bool = True):
         """Backfill, then start the stream. ``available_now=True`` drains
-        what exists and stops (test/batch mode); False runs continuously."""
+        what exists and stops (test/batch mode); False runs continuously.
+
+        pgoutput starts no query: its frame files are applied on the
+        driver by :meth:`run_until_drained`, and this returns None."""
         self.backfill()
         failpoints.hit(failpoints.BEFORE_STREAMING)
         if self.source_fmt == "pgoutput":
-            from etl_spark.sources.pgoutput import FRAME_SCHEMA
-
-            stream = self.spark.readStream.schema(FRAME_SCHEMA).parquet(
-                self.source_dir)
-        else:
-            stream = stream_changes(self.spark, self.source_dir)
+            return None
+        stream = stream_changes(self.spark, self.source_dir)
         writer = (
             stream.writeStream.foreachBatch(self._apply_batch)
             .option("checkpointLocation", self.checkpoint_dir)
@@ -966,15 +998,33 @@ class Pipeline:
 
     def run_until_drained(self) -> None:
         """Start in availableNow mode and block until every pending file is
-        processed — the deterministic test/batch entry point."""
+        processed — the deterministic test/batch entry point.
+
+        pgoutput: a batch pinned by an earlier run and never committed (a
+        crash mid-apply) is applied first, with its own id and files; then
+        every file pending on entry forms one batch, as ``availableNow``
+        does."""
         q = self.start(available_now=True)
-        q.awaitTermination()
+        if self.frame_queue is None:
+            q.awaitTermination()
+            return
+        fresh = self.frame_queue.pending()
+        if self.frame_queue.pinned is not None:
+            self._apply_pinned()
+        if fresh:
+            self.frame_queue.pin(fresh)
+            self._apply_pinned()
+
+    def _apply_pinned(self) -> None:
+        """Apply the frame queue's pinned batch, then mark it done."""
+        self._apply_batch(self.frame_queue.paths(), self.frame_queue.pinned["id"])
+        self.frame_queue.commit()
 
     def stop(self) -> None:
         """Graceful stop (POST /pipelines/{id}/stop analog): halt the
         stream after the in-flight micro-batch; progress is already
         durable per batch, so a later start() resumes from the
-        checkpoint."""
+        checkpoint. pgoutput runs no query, so there is nothing to halt."""
         if self.query is not None and self.query.isActive:
             self.query.stop()
             self.query.awaitTermination()
@@ -1021,17 +1071,21 @@ class Pipeline:
         from the copied LSN through the still-retained slot
         (pipeline_with_faulty_destination.rs: drop → recopy → retry until
         durable). The Spark analog: reset eligible Errored tables to Init
-        (:meth:`retry_errored`) and invalidate the stream checkpoint so the
-        retained change log replays from the start. Replay is convergent:
-        healthy tables skip already-applied batches (sink batch-id dedup)
-        or re-merge idempotently (LWW by event_seq) — at-least-once in,
-        exactly-once-looking out (SURVEY T7).
+        (:meth:`retry_errored`) and forget which batches were applied — the
+        stream checkpoint for envelope files, the frame queue's record for
+        pgoutput — so the retained change log replays from the start.
+        Replay is convergent: healthy tables skip already-applied batches
+        (sink batch-id dedup) or re-merge idempotently (LWW by event_seq)
+        — at-least-once in, exactly-once-looking out (SURVEY T7).
         """
         import shutil as _shutil
 
         retried = self.retry_errored(force=force, **kwargs)
-        if retried and os.path.isdir(self.checkpoint_dir):
-            _shutil.rmtree(self.checkpoint_dir)
+        if retried:
+            if self.frame_queue is not None:
+                self.frame_queue.reset()
+            elif os.path.isdir(self.checkpoint_dir):
+                _shutil.rmtree(self.checkpoint_dir)
         return retried
 
     def status(self) -> dict:
@@ -1048,10 +1102,11 @@ class Pipeline:
     def restart(self, **start_kwargs):
         """POST /pipelines/{id}/restart analog: graceful stop, then start.
 
-        Progress is durable per batch (flush LSN + checkpoint), so the
-        restarted stream resumes where the stopped one left off; tables in
-        ``KEEPS_DATA_ON_RESTART`` states skip re-copy (state.rs semantics
-        via :meth:`backfill`), everything else re-syncs."""
+        Progress is durable per batch (flush LSN + the record of applied
+        batches), so the restarted stream resumes where the stopped one
+        left off; tables in ``KEEPS_DATA_ON_RESTART`` states skip re-copy
+        (state.rs semantics via :meth:`backfill`), everything else
+        re-syncs."""
         self.stop()
         return self.start(**start_kwargs)
 
@@ -1059,7 +1114,7 @@ class Pipeline:
         """GET /pipelines/{id}/replication-status analog: per-table
         replication posture — the operator's lag/health view.
 
-        ``apply_lag``: a Ready table rides the shared stream — foreachBatch
+        ``apply_lag``: a Ready table rides the shared stream — each batch
         applies every table before the flush LSN advances, so its lag at
         the durable flush point is 0 by construction. For a quarantined or
         still-copying table the lag is the WAL span it has MISSED since

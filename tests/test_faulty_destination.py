@@ -72,7 +72,27 @@ EVENTS = [
 EXPECTED = {1: "a", 2: "b2", 4: "d"}
 
 
-def _setup(spark, tmp_path, tag, fail_n=0, after_write=False):
+def _write_frames(path):
+    """EVENTS as one pgoutput frame file (table ``public.users``)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etl_spark.sources import pgoutput as pgo
+
+    frames = [
+        (1, -1, pgo.encode_relation(1, "public", "users", "d",
+                                    [(1, "pk", 20, -1), (0, "val", 25, -1)])),
+        (9, 9, pgo.encode_begin(final_lsn=13, xid=1)),
+        (10, 9, pgo.encode_insert(1, ["4", "d"])),
+        (11, 9, pgo.encode_update(1, ["2", "b2"])),
+        (12, 9, pgo.encode_delete(1, key=["3"])),
+        (13, 9, pgo.encode_commit(13, 14)),
+    ]
+    pq.write_table(pa.table([list(c) for c in zip(*frames)],
+                            schema=pgo.FRAME_ARROW_SCHEMA), path)
+
+
+def _setup(spark, tmp_path, tag, fail_n=0, after_write=False, fmt="envelope"):
     from etl_spark.envelope import GENERIC_ENVELOPE
 
     source = str(tmp_path / f"src_{tag}")
@@ -80,22 +100,27 @@ def _setup(spark, tmp_path, tag, fail_n=0, after_write=False):
     os.makedirs(source, exist_ok=True)
     spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], PAYLOAD) \
         .write.mode("overwrite").parquet(snap)
-    staging = os.path.join(source, ".__stage")
-    spark.createDataFrame(EVENTS, schema=GENERIC_ENVELOPE) \
-        .coalesce(1).write.mode("overwrite").parquet(staging)
-    part = next(f for f in os.listdir(staging) if f.endswith(".parquet"))
-    shutil.move(os.path.join(staging, part), os.path.join(source, "b1.parquet"))
-    shutil.rmtree(staging)
+    if fmt == "pgoutput":
+        _write_frames(os.path.join(source, "b1.parquet"))
+    else:
+        staging = os.path.join(source, ".__stage")
+        spark.createDataFrame(EVENTS, schema=GENERIC_ENVELOPE) \
+            .coalesce(1).write.mode("overwrite").parquet(staging)
+        part = next(f for f in os.listdir(staging) if f.endswith(".parquet"))
+        shutil.move(os.path.join(staging, part), os.path.join(source, "b1.parquet"))
+        shutil.rmtree(staging)
 
     inner = ParquetCurrentStateSink(str(tmp_path / f"sink_{tag}"), keys=["pk"], spark=spark)
     sink = FlakySink(inner, fail_n=fail_n, after_write=after_write)
-    cfg = TableConfig(name="users", snapshot_path=snap, keys=["pk"], payload_schema=PAYLOAD)
-    pipe = lambda: Pipeline(spark, source, [cfg], sink, str(tmp_path / f"work_{tag}"))  # noqa: E731
+    name = "public.users" if fmt == "pgoutput" else "users"
+    cfg = TableConfig(name=name, snapshot_path=snap, keys=["pk"], payload_schema=PAYLOAD)
+    pipe = lambda: Pipeline(spark, source, [cfg], sink, str(tmp_path / f"work_{tag}"),  # noqa: E731
+                            source_fmt=fmt)
     return sink, pipe
 
 
-def _state(sink):
-    return {r.pk: r.val for r in sink.read("users").select("pk", "val").collect()}
+def _state(sink, table="users"):
+    return {r.pk: r.val for r in sink.read(table).select("pk", "val").collect()}
 
 
 def test_fault_free_baseline(spark, tmp_path):
@@ -106,18 +131,21 @@ def test_fault_free_baseline(spark, tmp_path):
 
 def test_reject_then_retry_converges(spark, tmp_path):
     """First change write rejected → Errored; resync retries until the
-    final state equals the fault-free run."""
-    sink, pipe = _setup(spark, tmp_path, "rej", fail_n=1)
-    p = pipe()
-    p.run_until_drained()
-    assert p.status()["tables"]["users"]["state"] == "Errored"
-    assert _state(sink) == {1: "a", 2: "b", 3: "c"}  # snapshot only
+    final state equals the fault-free run. Envelope files replay because
+    the stream checkpoint is dropped, pgoutput frame files because the
+    frame queue's record is reset."""
+    for fmt, table in (("envelope", "users"), ("pgoutput", "public.users")):
+        sink, pipe = _setup(spark, tmp_path, f"rej_{fmt}", fail_n=1, fmt=fmt)
+        p = pipe()
+        p.run_until_drained()
+        assert p.status()["tables"][table]["state"] == "Errored"
+        assert _state(sink, table) == {1: "a", 2: "b", 3: "c"}  # snapshot only
 
-    p2 = pipe()
-    assert p2.resync_errored(force=True) == ["users"]
-    p2.run_until_drained()
-    assert p2.status()["tables"]["users"]["state"] == "Ready"
-    assert _state(sink) == EXPECTED
+        p2 = pipe()
+        assert p2.resync_errored(force=True) == [table]
+        p2.run_until_drained()
+        assert p2.status()["tables"][table]["state"] == "Ready"
+        assert _state(sink, table) == EXPECTED
 
 
 def test_fail_after_write_converges(spark, tmp_path):

@@ -563,6 +563,68 @@ def test_frame_pump_ddl_republish_across_crash_boundary(spark, tmp_path):
     assert got == {1: ("a2", "x1"), 2: ("b", "x2")}
 
 
+def test_pinned_batch_replays_alone_after_crash(spark, tmp_path):
+    """A crash after the DuckDB commit and before the flush advance
+    leaves batch 0 pinned but not committed. The restarted pump writes a
+    second file holding the re-sent transaction plus a new one. The
+    pinned batch must re-apply alone, under its own id (the DuckDB
+    ledger skips it), and the new file as the next batch: folded into
+    batch 0, the ledger would skip the new transaction too."""
+    import os
+
+    from etl_spark import failpoints as fp
+    from etl_spark.streaming.duckdb_sink import DuckDBCurrentStateSink
+    from etl_spark.streaming.pipeline import Pipeline, TableConfig
+
+    rel = live.encode_xlog_data(5, 6, 0, pgo.encode_relation(
+        1, "public", "t", "d", [(1, "pk", 20, -1), (0, "val", 25, -1)]))
+
+    def tx(lsn, pk, val):
+        return [
+            live.encode_xlog_data(lsn, lsn + 1, 0,
+                                  pgo.encode_begin(final_lsn=lsn + 2, xid=1)),
+            live.encode_xlog_data(lsn + 1, lsn + 2, 0,
+                                  pgo.encode_insert(1, [str(pk), val])),
+            live.encode_xlog_data(lsn + 2, lsn + 3, 0,
+                                  pgo.encode_commit(lsn + 2, lsn + 3)),
+        ]
+
+    src_dir = str(tmp_path / "frames")
+    os.makedirs(src_dir)
+    snap = str(tmp_path / "snap")
+    spark.createDataFrame([], "pk long, val string").write.parquet(snap)
+    sink = DuckDBCurrentStateSink(str(tmp_path / "wh.duckdb"),
+                                  keys={"public.t": ["pk"]},
+                                  staging_dir=str(tmp_path / "stage"))
+    cfg = TableConfig(name="public.t", snapshot_path=snap, keys=["pk"],
+                      payload_schema="pk long, val string")
+    work = str(tmp_path / "work")
+
+    pipe = Pipeline(spark, src_dir, [cfg], sink, work, source_fmt="pgoutput")
+    s1 = live.RecordedReplicationSource(
+        live.encode_copy_stream([rel] + tx(10, 1, "a")))
+    s1.start("slot", 0)
+    live.FrameFilePump(s1, spark, src_dir, control=pipe.control).drain_once()
+    fp.arm(fp.STORE_REPLICATION_PROGRESS)
+    try:
+        with pytest.raises(Exception):
+            pipe.run_until_drained()
+    finally:
+        fp.disarm_all()
+    assert {r["pk"]: r["val"] for r in sink.read("public.t")} == {1: "a"}
+    assert int(pipe.control.flush_lsn) == 0
+
+    # restart: the slot re-sends the unacknowledged transaction + a new one
+    pipe2 = Pipeline(spark, src_dir, [cfg], sink, work, source_fmt="pgoutput")
+    s2 = live.RecordedReplicationSource(
+        live.encode_copy_stream([rel] + tx(10, 1, "a") + tx(20, 2, "b")))
+    s2.start("slot", int(pipe2.control.flush_lsn))
+    live.FrameFilePump(s2, spark, src_dir, control=pipe2.control).drain_once()
+    pipe2.run_until_drained()
+    assert {r["pk"]: r["val"] for r in sink.read("public.t")} == {1: "a", 2: "b"}
+    assert int(pipe2.control.flush_lsn) == 22
+
+
 # ---------------------------------------------------------------------------
 # Round-12: xid recovery parity (ADVICE r11 medium) + tx-window ceiling
 # ---------------------------------------------------------------------------

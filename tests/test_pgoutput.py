@@ -163,6 +163,7 @@ def test_pipeline_pgoutput_source_end_to_end(spark, tmp_path):
     got = {r.pk: r.val for r in sink.read("public.users").select("pk", "val").collect()}
     assert got == {1: "a", 2: "b"}
     assert p.status()["flush_lsn"] == 100
+    assert not os.path.exists(os.path.join(work, "checkpoint"))
 
     # restart: new frames, no relation frame — persisted registry resolves
     _write_frames(spark, source, [
@@ -176,6 +177,54 @@ def test_pipeline_pgoutput_source_end_to_end(spark, tmp_path):
     got = {r.pk: r.val for r in sink.read("public.users").select("pk", "val").collect()}
     assert got == {1: "a2"}
     assert p2.status()["flush_lsn"] == 200
+
+
+def test_collect_wire_stats_matches_spark_collects(spark, tmp_path):
+    """The driver-side wire stats equal the Spark collects they replace,
+    on a batch with a mid-batch RELATION republish, a TYPE frame and an
+    open trailing transaction."""
+    import os
+    from collections import Counter
+
+    rel_v1 = pgo.encode_relation(1, "public", "users", "d",
+                                 [(1, "pk", 20, -1), (0, "val", 25, -1)])
+    rel_v2 = pgo.encode_relation(1, "public", "users", "d",
+                                 [(1, "pk", 20, -1), (0, "val", 25, -1),
+                                  (0, "mood", 9000, -1)])
+    rows = [
+        (5, -1, rel_v1),
+        (6, -1, pgo.encode_type(9000, "public", "mood")),
+        (10, 10, pgo.encode_begin(final_lsn=13, xid=1)),
+        (11, 10, pgo.encode_insert(1, ["1", "a"])),
+        (12, 10, pgo.encode_update(1, ["1", "a2"])),
+        (13, 10, pgo.encode_commit(13, 14)),
+        (15, -1, rel_v2),
+        (20, 20, pgo.encode_begin(final_lsn=23, xid=2)),
+        (21, 20, pgo.encode_insert(1, ["2", "b", "happy"])),
+        (22, 20, pgo.encode_delete(1, key=["1"])),
+        (23, 20, pgo.encode_commit(23, 24)),
+        (30, 30, pgo.encode_begin(final_lsn=40, xid=3)),
+        (31, 30, pgo.encode_insert(1, ["3", "c", "sad"])),
+    ]
+    source = str(tmp_path / "frames")
+    os.makedirs(source)
+    _write_frames(spark, source, rows, "b1")
+    path = os.path.join(source, "b1.parquet")
+    df = spark.read.schema(pgo.FRAME_SCHEMA).parquet(path)
+
+    w = pgo.collect_wire_stats([path], max_tx=100)
+    assert len(w.relations[1]) == 2
+    assert w.relations == pgo.relation_registry_versioned(df)
+    assert w.types == pgo.type_registry(df) == {9000: "public.mood"}
+    lo, hi = df.agg(F.min("wal_start"), F.max("wal_start")).first()
+    assert w.bounds == (lo, hi) == (5, 31)
+    assert w.env_counts == dict(Counter(
+        x for _w, x, f in rows if f[:1] in (b"I", b"U", b"D", b"R", b"T", b"M")))
+    assert sorted(w.bc) == sorted(
+        (x, f) for _w, x, f in rows if f[:1] in (b"B", b"C"))
+    # four distinct xids (-1, 10, 20, 30) reach the ceiling of max_tx = 2
+    with pytest.raises(RuntimeError, match="driver-collect budget"):
+        pgo.collect_wire_stats([path], max_tx=2)
 
 
 def test_decode_registry(spark):

@@ -226,6 +226,11 @@ def test_transactions_counter_exact_across_split_transaction(spark, tmp_path):
     assert n_files >= 2, "transaction did not split across triggers"
     assert reg.value(telemetry.ETL_TRANSACTIONS_TOTAL) == 1
     assert reg.value(telemetry.ETL_EVENTS_PROCESSED_TOTAL) == 3
+    # one transaction of size 3; one apply-duration sample per batch
+    text = reg.render()
+    assert "etl_transaction_size_count 1\n" in text
+    assert "etl_transaction_size_sum 3\n" in text
+    assert reg.value(telemetry.ETL_BATCH_APPLY_DURATION_SECONDS) == n_files
 
 
 def _job_description(spark):
