@@ -227,6 +227,25 @@ HEADLINE = [
     "cdc_socket_parallel_sync",
 ]
 
+#: The round-2 headline, frozen: the 42 queries ``r2_comparable_sec``
+#: sums, so that total stays comparable with round 2's record.
+R2_HEADLINE = (
+    "cdc_current_state", "cdc_changelog", "cdc_toast_lww",
+    "cdc_snapshot_handoff", "cdc_pk_change", "q1_pricing_summary",
+    "q3_shipping_priority", "q5_local_supplier_volume", "q6_revenue_forecast",
+    "q10_returned_items", "q18_large_volume_customers",
+    "topk_orders_per_customer", "sessionize_events", "events_hourly_rollup",
+    "events_rollup_multidim", "asof_click_attribution", "mm_features",
+    "dedup_exact", "dedup_minhash_lsh", "dedup_simhash_pairs", "text_quality",
+    "ann_cosine_topk", "embed_near_dup", "q9_product_profit", "docs_top_terms",
+    "sample_stratified", "events_value_percentiles", "events_funnel",
+    "events_retention_cohorts", "q12_priority_shipmix", "events_value_zscores",
+    "ann_lsh_topk", "cdc_replica_identity", "cdc_partition_root",
+    "pgoutput_decode", "pg_copy_roundtrip", "corpus_pack_sequences",
+    "events_gapfill_locf", "corpus_token_mixture", "docs_pii_redact",
+    "docs_repetition", "docs_contamination",
+)
+
 #: Per-query contract subset for the FINAL summary line (round 14,
 #: VERDICT r13 "Next round" #1): the driver parses the LAST stdout line
 #: out of a ~2000-char tail window (BENCH_r04 recorded ``parsed: null``
@@ -407,80 +426,11 @@ def main() -> None:
         if timings.get("cdc_snapshot_handoff") else None
     )
 
-    # Cross-round comparability: the headline GROWS every round (25 new
-    # round-4 queries have no earlier baseline), so the grand total is not
-    # comparable across rounds. r2_comparable_sec sums only the queries
-    # that were in the round-2 headline — compare THAT against r2's 29.86s.
-    r4_new = {
-        "docs_bm25_top_terms", "docs_rag_chunks", "events_promo_range_join",
-        "cdc_scd2_history", "cdc_state_asof", "docs_unigram_logprob",
-        "mm_resize", "docs_exact_jaccard_join", "corpus_temperature_mix",
-        "events_zorder_stats", "cdc_gap_audit", "dedup_minhash_incremental",
-        "cdc_changelog_compact", "events_rolling_1h", "ann_pq_codes",
-        "ann_pq_adc_topk", "cdc_table_diff", "docs_profile",
-        "events_quality_checks", "cdc_state_diff", "ann_ivfpq_topk",
-        "sketch_merge_global", "bloom_prune_probe", "events_winsorize",
-        "cdc_changed_columns",
-    }
-    r5_new = {"dedup_simhash_clusters", "vocab_topk_coverage",
-              "docs_length_histogram", "ann_kmeans_step", "ann_ivfpq_rerank",
-              "docs_bigram_logprob",
-              "events_anomaly_mad", "docs_quality_calibration",
-              "docs_ngram_novelty", "events_ks_drift"}
-    r6_new = {"lineitem_rollup_metrics", "events_regression",
-              "events_markov_transitions", "orders_decile_bands",
-              "customer_fuzzy_name_join", "docs_char_pair_merge",
-              "nation_top_customers_agg", "lineitem_metrics_unpivot",
-              "events_time_weighted_value"}
-    r7_new = {"cdc_schema_evolution", "sketch_hll_users",
-              "sketch_count_min_users", "lineitem_basket_lift",
-              "events_cusum_alerts", "docs_gopher_rules",
-              "order_graph_pagerank", "lineitem_skyline",
-              "mm_audio_vad", "events_changepoint", "docs_winnowing",
-              "orders_abc_class", "docs_train_split", "corpus_dsir_weights",
-              "events_feature_mi", "customer_balance_gini",
-              "parts_triangle_count", "events_sax_daily",
-              "orders_rfm_segments", "events_lag_autocorr",
-              "events_kanon_audit", "embeddings_covariance",
-              "orders_cohort_ltv", "embeddings_quantize_int8",
-              "stream_sliding_topk", "lineitem_benford_audit",
-              "supplier_share_hhi", "orders_tail_index_hill",
-              "docs_zipf_slope", "events_welch_ttest", "events_burstiness",
-              "orders_survival_km", "docs_pmi_pairs",
-              "events_gapfill_interp", "nation_revenue_yoy",
-              "docs_readability_fk", "cdc_hot_keys", "ann_recall_eval",
-              "events_forecast_backtest", "lineitem_latency_quantiles",
-              "events_dau_mau", "lineitem_metric_correlations",
-              "mm_image_tiles", "mm_video_scene_cuts",
-              "cdc_rebucket_migration", "events_haar_wavelet",
-              "customer_feature_store", "orders_backlog_curve",
-              "corpus_heaps_law", "events_entropy_rate",
-              "embeddings_centroid_separation"}
-    r8_new = {"cdc_ddl_rebucket_compact", "cdc_scd2_schema_evolution",
-              "parts_triangle_sample", "cdc_duckdb_current_state"}
-    r9_new = {"cdc_crash_replay_ddl", "cdc_duckdb_scd2", "cdc_duckdb_changelog"}
-    r10_new = {"docs_exact_jaccard_clusters", "docs_source_caps",
-               "docs_source_js_divergence", "docs_dup_rate_by_source"}
-    r11_new = {"pgoutput_wire_decode", "events_dau_mau_hll",
-               "docs_profile_hll", "docs_boilerplate_coverage",
-               "events_quantile_sketch"}
-    r12_new = {"pgoutput_socket_decode", "events_session_paths",
-               "orders_seasonal_decompose", "docs_containment_dedup",
-               "corpus_dedup_best_quality"}
-    r13_new = {"pgoutput_socket_tls_decode", "cdc_socket_copy_sync",
-               "lineitem_theil_index", "orders_runs_test",
-               "docs_simpson_diversity", "docs_containment_audit",
-               "events_chisq_independence", "orders_mann_whitney",
-               "lineitem_spearman_correlations", "events_heavy_hitters_mg",
-               "dedup_minhash_accuracy", "corpus_dedup_threshold_curve",
-               "lineitem_kendall_tau", "docs_source_vocab_overlap",
-               "cdc_socket_parallel_sync"}
+    # Cross-round comparability: the headline grows every round, so the
+    # grand total is not comparable across rounds. r2_comparable_sec sums
+    # only the round-2 headline — compare THAT against r2's 29.86s.
     r2_comparable = round(
-        sum(v for k, v in timings.items()
-            if k not in r4_new | r5_new | r6_new | r7_new | r8_new | r9_new
-            | r10_new | r11_new | r12_new | r13_new),
-        3,
-    )
+        sum(timings[k] for k in R2_HEADLINE if k in timings), 3)
 
     # Isolated headline analogs (standing protocol since r10, BASELINE.md):
     # the in-suite events/s / copy-rows/s numbers carry suite pressure (GC

@@ -14,10 +14,10 @@ logical-replication / CDC pipeline framework) on Apache Spark:
   materialization, changelog, TOAST partial-row resolution, as-of lookups,
   plus large-scale training-data operators (dedup, similarity search,
   text analysis, multimodal plumbing).
-- **Sources** (:mod:`etl_spark.sources`): partitioned snapshot scan and the
-  change-stream reader (batch + Structured Streaming).
+- **Sources** (:mod:`etl_spark.sources`): snapshot COPY, the replication
+  transport and pgoutput decode, and the sim-harness change envelopes.
 - **Streaming** (:mod:`etl_spark.streaming`): the pipeline orchestrator —
-  snapshot→stream handoff, per-table lifecycle state, foreachBatch sinks.
+  snapshot→stream handoff, per-table lifecycle state, idempotent sinks.
 
 Design stance: everything is declared with the DataFrame/SQL API so Catalyst
 handles pushdown, pruning, join strategy and AQE; Python UDFs appear only

@@ -10,7 +10,7 @@ same rationale as the reference shipping failpoints behind a feature
 flag.
 
 Failpoints live on the DRIVER only: every injection site sits in pipeline
-control flow (backfill, foreachBatch body, stream start), which executes
+control flow (backfill, batch apply, stream start), which executes
 driver-side. Executor tasks never consult the registry, so there is no
 serialization concern.
 
@@ -42,11 +42,11 @@ FORCE_SCHEMA_CLEANUP = "force_schema_cleanup"
 COMPACT_BEFORE_COMMIT = "changelog_compact.before_manifest_commit"
 COMPACT_AFTER_COMMIT = "changelog_compact.after_manifest_commit"
 # the residual registry-advance window: the relation registry persisted
-# its advance but Spark's commit log has not marked the batch done — a
+# its advance but the frame queue has not marked the batch done — a
 # crash here replays the batch against the ADVANCED registry (the
 # versioned base makes that safe; see PersistentRelationRegistry)
 ADVANCE_RELATION_REGISTRY = "advance_relation_registry"
-# widest residual window: BOTH registries advanced, commit log unwritten
+# widest residual window: BOTH registries advanced, commit mark unwritten
 ADVANCE_TX_REGISTRY = "advance_tx_registry"
 
 ALL = (

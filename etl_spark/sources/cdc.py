@@ -1,19 +1,13 @@
-"""Change-stream reader: the Structured Streaming envelope source.
+"""Sim-harness change envelopes derived from the driver's tables.
 
-The reference's WAL streaming source (SURVEY §2.1 S3: pgoutput frames →
-typed events, crates/etl/src/postgres/stream/replication_message.rs) maps
-to a Structured Streaming source over an append-only change log. This
-module provides:
-
-- :func:`stream_changes` — the streaming reader over an envelope parquet
-  directory (checkpoint directory = replication slot, SURVEY S4);
-- :func:`envelope_from_events` — the deterministic sim-harness derivation
-  of a CDC envelope from the driver's ``events`` table, used by tests,
-  bench, and the correctness gate (its DuckDB-SQL mirror lives in
-  ``__spark_entry__.oracle_sql``).
-
-Per-table routing (P3 ``should_apply_changes``, apply.rs:2626-2639) is a
-plain ``filter`` call — Catalyst pushes it into the scan.
+The reference's WAL stream (SURVEY §2.1 S3: pgoutput frames → typed
+events, crates/etl/src/postgres/stream/replication_message.rs) reaches
+the engine as files in a source directory, which
+:meth:`~etl_spark.streaming.pipeline.Pipeline.run_until_drained` applies
+batch by batch. This module derives such envelopes deterministically
+from the driver's ``events`` table — :func:`envelope_from_events` and
+:func:`envelope_with_identity` — for tests, bench, and the correctness
+gate (their DuckDB-SQL mirror lives in ``__spark_entry__.oracle_sql``).
 """
 
 from __future__ import annotations
@@ -21,21 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_spark.envelope import GENERIC_ENVELOPE, with_sequence
+from etl_spark.envelope import with_sequence
 from etl_spark.io import read_table
-
-
-def stream_changes(
-    spark: SparkSession, path: str, table: str | None = None
-) -> DataFrame:
-    """Streaming envelope source. The checkpoint dir (set on the writer)
-    plays the replication slot's role: offsets = progress, deleting it =
-    slot invalidation → full re-sync (SURVEY S4)."""
-    df = spark.readStream.schema(GENERIC_ENVELOPE).parquet(path)
-    df = with_sequence(df)
-    if table:
-        df = df.filter(F.col("table") == table)
-    return df
 
 
 # ---------------------------------------------------------------------------

@@ -522,8 +522,8 @@ class RecordedReplicationSource(CopyBothConsumer, ReplicationFrameSource):
 # non-streamed) never interleaves transactions: every frame between a
 # BEGIN and the next BEGIN belongs to the earlier one. So xid assignment
 # is "latest BEGIN at wal_start <= mine": a driver-side collect of the
-# BEGIN frames (bounded by transaction count, the TxRegistry pattern —
-# pgoutput.py PersistentTxRegistry.advance_from) + a vectorized
+# BEGIN frames (bounded by transaction count, as pgoutput.py
+# collect_wire_stats bounds its BEGIN/COMMIT frames) + a vectorized
 # searchsorted over the broadcast begin positions. No global sort, no
 # single-partition window.
 # ---------------------------------------------------------------------------
@@ -765,10 +765,10 @@ def assign_xids(frames, frame_col: str = "frame", lsn_col: str = "wal_start",
 
 
 class FrameQueue:
-    """The pipeline's side of the frame-file queue: which files a batch
-    holds and which batches are done — the roles of a file-stream
-    source's seen-file log, offset log and commit log, kept in one JSON
-    record (``state.write_json_atomic``).
+    """The pipeline's queue of source files, envelope parquet or pgoutput
+    frames alike: which files a batch holds and which batches are done —
+    the roles of a file-stream source's seen-file log, offset log and
+    commit log, kept in one JSON record (``state.write_json_atomic``).
 
     - A pending file is a non-hidden ``*.parquet`` file in ``source_dir``
       (names starting with ``.`` or ``_`` are ignored) that no committed
@@ -782,7 +782,7 @@ class FrameQueue:
       batch-id ledgers must see the exact batch they may already hold.
     - Batch ids start at 0 and count up; :meth:`reset` (resync) forgets
       the applied files and keeps counting, so a replay never reuses an
-      id for different frames.
+      id for different files.
 
     The record lists every applied file name, so it grows with the
     number of files the queue has seen, as Spark's seen-file log does.

@@ -704,7 +704,7 @@ class PersistentRelationRegistry:
 
     Versioning makes the carried decode base LSN-exact, which makes the
     *advance order* insensitive to crashes: the pipeline defers
-    ``update_from`` to batch success, but the batch's commit mark is
+    ``ingest`` to batch success, but the batch's commit mark is
     written only after the apply RETURNS — a crash in that residual window
     replays a batch whose registry already advanced. With a newest-only
     base the replay's pre-DDL frames (RELATION learned in an earlier
@@ -736,14 +736,10 @@ class PersistentRelationRegistry:
         except FileNotFoundError:
             pass
 
-    def update_from(self, frames: DataFrame, frame_col: str = "frame") -> None:
-        self.ingest(relation_registry_versioned(frames, frame_col))
-
     def ingest(self, new: dict[int, list[tuple[int, dict]]]) -> None:
-        """Fold an already-collected versioned registry delta (the shape
-        :func:`relation_registry_versioned` / :func:`collect_wire_stats`
-        produce) — the non-Spark half of :meth:`update_from`, so a caller
-        that already paid one batch-stats job never pays a second scan."""
+        """Fold a versioned registry delta — the ``relations`` shape
+        :func:`collect_wire_stats` and
+        :func:`relation_registry_versioned` produce."""
         if not new:
             return
         for rid, specs in new.items():
@@ -781,13 +777,9 @@ class PersistentTypeRegistry:
         except FileNotFoundError:
             pass
 
-    def update_from(self, frames: DataFrame, frame_col: str = "frame") -> None:
-        self.ingest(type_registry(frames, frame_col))
-
     def ingest(self, new: dict[int, str]) -> None:
-        """Fold an already-collected ``{oid: "ns.name"}`` delta — the
-        non-Spark half of :meth:`update_from` (see
-        :meth:`PersistentRelationRegistry.ingest`)."""
+        """Fold a ``{oid: "ns.name"}`` delta — the ``types`` shape
+        :func:`collect_wire_stats` and :func:`type_registry` produce."""
         if new:
             self._reg.update(new)
             write_json_atomic(
@@ -812,7 +804,7 @@ class PersistentTxRegistry:
 
     Generations close the same residual replay window the relation
     registry's versioning closes: the batch's commit mark is written
-    only after the apply RETURNS, so a crash after ``advance_from``
+    only after the apply RETURNS, so a crash after ``advance_parsed``
     replays a batch whose tx state already advanced. Against the
     advanced state, a replayed continuation batch would (a) shift its
     ``tx_ordinal`` by the already-folded count — the same events
@@ -823,7 +815,7 @@ class PersistentTxRegistry:
     batch's first frame — the exact state the first attempt decoded
     with. WAL positions are strictly increasing in delivery order, so
     TWO generations (current + previous) cover the one-uncommitted-batch
-    replay window; a replayed ``advance_from`` is idempotent — it
+    replay window; a replayed ``advance_parsed`` is idempotent — it
     re-folds from the same base and REPLACES the stale generation.
 
     Entry shape per generation: ``{xid: {"final_lsn": int,
@@ -872,82 +864,20 @@ class PersistentTxRegistry:
                 break
         return {k: dict(v) for k, v in base.items()}
 
-    def advance_from(
-        self,
-        frames: DataFrame,
-        frame_col: str = "frame",
-        lsn_col: str = "wal_start",
-        xid_col: str = "xid",
-        bounds: tuple[int | None, int | None] | None = None,
-    ) -> None:
-        """Fold one micro-batch of raw frames into a NEW generation.
-
-        BEGIN/COMMIT frames are catalog-sized (one each per transaction in
-        the batch) → collected and parsed driver-side, like
-        :func:`relation_registry`. Per-xid envelope-row counts and the
-        batch's wal bounds come from distributed aggregations whose
-        results are one row per transaction / one row total — never
-        proportional to frame volume. Idempotent under whole-batch
-        replay: generations at/after the batch's first frame are replaced
-        by the re-fold from the same pre-batch base.
-
-        ``bounds``: the batch's ``(min, max)`` wal_start, if the caller
-        already computed them (the pipeline computes them once per trigger
-        and shares them with :meth:`snapshot_for` — ADVICE r10: avoid a
-        second uncached scan of the raw micro-batch). Omitted → one agg
-        here.
-        """
-        first = F.substring(F.col(frame_col).cast("binary"), 1, 1)
-        if bounds is None:
-            b = frames.agg(
-                F.min(lsn_col).alias("mn"), F.max(lsn_col).alias("mx")
-            ).collect()[0]
-            bounds = (b["mn"], b["mx"])
-        if bounds[0] is None:
-            return  # empty batch: nothing to fold
-        # limit-fenced collect (VERDICT r11 #3): B/C frames are bounded by
-        # TRANSACTION count, and the fence caps what the driver
-        # materializes — a pathological window of millions of tiny
-        # transactions raises with remediation instead of ballooning
-        # driver memory (ceiling shared with live.assign_xids)
-        from etl_spark.sources.live import MAX_TX_PER_WINDOW, _check_tx_budget
-
-        fence = 2 * MAX_TX_PER_WINDOW + 1
-        bc = (
-            frames.filter(first.isin([b"B", b"C"]))
-            .select(xid_col, frame_col)
-            .limit(fence)
-            .collect()
-        )
-        if len(bc) >= fence:
-            _check_tx_budget(MAX_TX_PER_WINDOW + 1, MAX_TX_PER_WINDOW,
-                             "PersistentTxRegistry.advance_from")
-        # Envelope-row counts: every frame that emits an envelope row and
-        # participates in tx_ordinal numbering (DML + R/T/M; B/C/Y/O do not).
-        counts = {
-            r[0]: r[1]
-            for r in frames.filter(first.isin([b"I", b"U", b"D", b"R", b"T", b"M"]))
-            .groupBy(xid_col)
-            .count()
-            .collect()
-        }
-        self.advance_parsed(
-            [(int(r[0]), bytes(r[1])) for r in bc], counts, bounds
-        )
-
     def advance_parsed(
         self,
         bc: list[tuple[int, bytes]],
         counts: dict[int, int],
         bounds: tuple[int | None, int | None],
     ) -> None:
-        """Fold already-collected BEGIN/COMMIT frames + per-xid envelope
-        counts into a new generation — the non-Spark half of
-        :meth:`advance_from`, fed directly by
-        :func:`collect_wire_stats` so the pipeline's one batch-stats job
-        covers the advance too. ``bc`` order is immaterial: a xid sees at
-        most one BEGIN per batch (sets its entry) and COMMITs only mark
-        the xid for removal after counts fold."""
+        """Fold one batch into a NEW generation: its BEGIN/COMMIT frames,
+        per-xid envelope counts and ``(min, max)`` wal_start, as
+        :func:`collect_wire_stats` gathers them. Idempotent under
+        whole-batch replay: generations at/after the batch's first frame
+        are replaced by the re-fold from the same pre-batch base. ``bc``
+        order is immaterial: a xid sees at most one BEGIN per batch (sets
+        its entry) and COMMITs only mark the xid for removal after counts
+        fold."""
         if bounds[0] is None:
             return  # empty batch: nothing to fold
         mn, mx = int(bounds[0]), int(bounds[1])

@@ -105,12 +105,6 @@ def snapshot_via_copy(
     driver holds at most one ``batch_bytes`` batch in memory.
     """
     import os
-    import shutil
-
-    import pandas as pd
-
-    from etl_spark import codec
-    from etl_spark.publication import _split_schema_fields
 
     os.makedirs(out_dir, exist_ok=True)
     source.simple_command("BEGIN READ ONLY ISOLATION LEVEL REPEATABLE READ")
@@ -118,37 +112,31 @@ def snapshot_via_copy(
         source.simple_command(f"SET TRANSACTION SNAPSHOT '{snapshot_name}'")
     for i, rng in enumerate(ctid_ranges or [None]):
         sql = build_copy_query(table, column_list, row_filter, rng)
-        _relay_copy(spark, source, sql, out_dir, f"w0p{i:03d}", batch_bytes)
+        _relay_copy(source, sql, out_dir, f"w0p{i:03d}", batch_bytes)
     source.simple_command("COMMIT")
     return decode_copy_lines(spark, out_dir, payload_schema)
 
 
-def _relay_copy(spark, source, sql: str, out_dir: str, prefix: str,
+def _relay_copy(source, sql: str, out_dir: str, prefix: str,
                 batch_bytes: int) -> int:
     """Relay one ``copy_out`` stream into ``line string`` parquet files
-    named ``{prefix}_NNNNNN.parquet`` (atomic move; prefixes keep
-    parallel workers collision-free). Returns the file count."""
+    named ``{prefix}_NNNNNN.parquet`` (prefixes keep parallel workers
+    collision-free). Each batch is written on the driver with pyarrow to
+    a hidden temp name and renamed into place, so a reader never sees a
+    partial file and no Spark job runs. Returns the file count."""
     import os
-    import shutil
 
-    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     n = 0
     for batch in source.copy_out(sql, max_bytes=batch_bytes):
         n += 1
-        name = f"{prefix}_{n:06d}"
-        staging = os.path.join(out_dir, f".__copy_stage_{name}")
-        df = spark.createDataFrame(
-            pd.DataFrame({"line": pd.Series(
-                (b.decode("utf-8") for b in batch), dtype="object")}),
-            schema="line string",
-        )
-        df.coalesce(1).write.mode("overwrite").parquet(staging)
-        part = next(p for p in os.listdir(staging)
-                    if p.endswith(".parquet"))
-        shutil.move(os.path.join(staging, part),
-                    os.path.join(out_dir, f"{name}.parquet"))
-        shutil.rmtree(staging)
+        name = f"{prefix}_{n:06d}.parquet"
+        staging = os.path.join(out_dir, f".{name}")
+        pq.write_table(pa.table({"line": pa.array(
+            [b.decode("utf-8") for b in batch], pa.string())}), staging)
+        os.replace(staging, os.path.join(out_dir, name))
     return n
 
 
@@ -221,8 +209,7 @@ def snapshot_via_copy_parallel(
                 src.simple_command(
                     f"SET TRANSACTION SNAPSHOT '{snapshot_name}'")
             sql = build_copy_query(table, column_list, row_filter, rng)
-            n = _relay_copy(spark, src, sql, out_dir, f"w{i:03d}",
-                            batch_bytes)
+            n = _relay_copy(src, sql, out_dir, f"w{i:03d}", batch_bytes)
             src.simple_command("COMMIT")
             return n
         finally:

@@ -1,1 +1,1 @@
-"""Structured Streaming pipeline: sources → foreachBatch → sinks."""
+"""Change pipeline: source files → per-batch apply → sinks."""

@@ -163,7 +163,7 @@ class _DuckDBSink(Sink):
     the reference's warehouse destinations — stage the batch, merge it,
     and record its batch id in ``applied_batches`` in the SAME
     transaction, so a replayed batch is a no-op (ducklake/core.rs:74-80;
-    the contract Structured Streaming's foreachBatch relies on).
+    the contract the pipeline's whole-batch replay relies on).
 
     The base owns the ledger, staging, the ``write_changes`` skeleton
     (replay check → stage → widen → BEGIN → merge → ledger row →
@@ -277,8 +277,8 @@ class DuckDBCurrentStateSink(_DuckDBSink):
     destination (ducklake/core.rs:1133-1216) and deliberately weaker than
     BigQuery's persisted ``_CHANGE_SEQUENCE_NUMBER``
     (bigquery/core.rs:1391-1407), which survives reordering by keeping
-    the sequence in the destination table even through deletes. Spark's
-    checkpointed foreachBatch guarantees ordered delivery + whole-batch
+    the sequence in the destination table even through deletes. The
+    pipeline's frame queue guarantees ordered delivery + whole-batch
     replay, so the stronger contract is unnecessary here; pinned by
     ``tests/test_streaming.py::test_duckdb_sink_delivery_contract``."""
 

@@ -16,15 +16,16 @@ re-expressed on Spark:
    marking (J1), idempotent sink write, then durable progress advance
    (T4: the flush LSN only moves after the sink confirms — the apply is
    synchronous, so its completion IS the Durable signal) and
-   SyncDone→Ready transitions. Envelope files (``source_fmt="envelope"``)
-   arrive through a Structured Streaming ``foreachBatch`` query; pgoutput
-   frame files (``source_fmt="pgoutput"``) are drained on the driver
-   (:meth:`run_until_drained` over a
-   :class:`~etl_spark.sources.live.FrameQueue`), one Spark scan of the
-   frames per batch and no streaming query;
-5. the record of applied batches is the replication slot (S4): the
-   stream checkpoint directory for envelope files, the frame queue's
-   record for pgoutput. Deleting it = slot invalidation = full re-sync.
+   SyncDone→Ready transitions. One drain loop serves both source
+   formats: :meth:`run_until_drained` takes every pending source file —
+   envelope parquet (``source_fmt="envelope"``) or pgoutput frames
+   (``source_fmt="pgoutput"``) — as one batch from a
+   :class:`~etl_spark.sources.live.FrameQueue` and applies it on the
+   driver, with no streaming query; the formats differ only in how the
+   batch's files are read;
+5. the frame queue's record (``work_dir/frame_queue.json``) is the
+   replication slot (S4): it holds which files are applied and pins the
+   batch in flight. Deleting it = slot invalidation = full re-sync.
 
 Per-table errors quarantine the table (Errored + retry policy, T10)
 without stopping the pipeline — other tables keep flowing.
@@ -40,9 +41,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_spark import errors, failpoints, telemetry
-from etl_spark.envelope import ROW_OPS, with_sequence
+from etl_spark.envelope import GENERIC_ENVELOPE, ROW_OPS, with_sequence
 from etl_spark.schema_registry import ColumnDef, SchemaRegistry, diff_schemas
-from etl_spark.sources.cdc import stream_changes
+from etl_spark.sources.live import FrameQueue
 from etl_spark.state import (
     KEEPS_DATA_ON_RESTART,
     ControlStore,
@@ -103,7 +104,6 @@ class Pipeline:
         #: shipper, decoded per micro-batch through sources/pgoutput.py
         self.source_fmt = source_fmt
         self.spark = spark
-        self.source_dir = source_dir
         self.tables = {t.name: t for t in tables}
         #: the USER-declared column types, captured before any RELATION
         #: frame rewrites payload_schema — declared types win for their
@@ -125,14 +125,14 @@ class Pipeline:
         self.metrics.set_gauge(telemetry.ETL_TABLES_TOTAL, len(self.tables))
         self.control = ControlStore(os.path.join(work_dir, "control"))
         self.schemas = SchemaRegistry(os.path.join(work_dir, "schemas"))
-        self.checkpoint_dir = os.path.join(work_dir, "checkpoint")
-        self.query = None
+        # which source files each batch holds, pinned before it applies
+        # and marked done after (the offset + commit logs)
+        self.frame_queue = FrameQueue(
+            source_dir, os.path.join(work_dir, "frame_queue.json"))
         self.relations = None
         self.txs = None
         self.types = None
-        self.frame_queue = None
         if source_fmt == "pgoutput":
-            from etl_spark.sources.live import FrameQueue
             from etl_spark.sources.pgoutput import (
                 PersistentRelationRegistry,
                 PersistentTxRegistry,
@@ -155,10 +155,6 @@ class Pipeline:
             self.txs = PersistentTxRegistry(
                 os.path.join(work_dir, "pgoutput_txs.json")
             )
-            # which frame files each batch holds, pinned before it
-            # applies and marked done after (the offset + commit logs)
-            self.frame_queue = FrameQueue(
-                source_dir, os.path.join(work_dir, "frame_queue.json"))
 
     # ------------------------------------------------------------------
     def hydrate_schemas(self) -> list[str]:
@@ -341,17 +337,18 @@ class Pipeline:
                 )
 
     # ------------------------------------------------------------------
-    def _apply_batch(self, batch, batch_id: int) -> None:
+    def _apply_batch(self, files: list[str], batch_id: int) -> None:
         """The reference's apply loop for one micro-batch (SURVEY §3.2
-        steps 3-6). ``batch``: the envelope DataFrame (the streaming
-        query's ``foreachBatch`` body), or, for pgoutput, the paths of
-        the batch's frame files.
+        steps 3-6). ``files``: the paths of the batch's source files.
+        Only the read differs by format: envelope files are read with
+        the ``GENERIC_ENVELOPE`` schema, pgoutput frames are decoded
+        through their wire stats and :func:`decode_frames`.
 
         Each table's write completes inside this method, so the flush LSN
-        advances only after the destination has the batch — the commit
-        log (or the frame queue's commit mark) marks the batch done at
-        return, and a replay after a crash re-merges idempotently
-        (apply.rs ack-gated restart LSN).
+        advances only after the destination has the batch — the frame
+        queue's commit mark records the batch done at return, and a
+        replay after a crash re-merges idempotently (apply.rs ack-gated
+        restart LSN).
         """
         t_start = time.monotonic()
         wire = None
@@ -371,7 +368,7 @@ class Pipeline:
             # frames per-position itself — handing it the post-update
             # snapshot would decode pre-DDL frames against post-DDL specs
             # The registry ADVANCE is deferred to batch success (below,
-            # with txs.advance_from): persisting the newest-only spec
+            # with txs.advance_parsed): persisting the newest-only spec
             # before the batch is applied would reopen the same hazard in
             # the at-least-once replay window — a crash mid-apply replays
             # the batch, and its pre-DDL frames (whose RELATION was
@@ -387,14 +384,14 @@ class Pipeline:
             # still ADVANCES at its original point (types now,
             # relations/txs deferred to batch success below), so the
             # crash/replay windows are unchanged.
-            wire = collect_wire_stats(batch, max_tx=MAX_TX_PER_WINDOW)
+            wire = collect_wire_stats(files, max_tx=MAX_TX_PER_WINDOW)
             # TYPE names are exempt from the deferral: they are idempotent
             # oid→name metadata (never positional), and _apply_relations
             # needs same-batch TYPE frames visible when naming custom-typed
             # columns mid-batch.
             self.types.ingest(wire.types)
             # LSN-exact tx carry (mirrors the versioned relation base): a
-            # crash after txs.advance_from but before the batch's commit
+            # crash after txs.advance_parsed but before the batch's commit
             # mark replays this batch against the ADVANCED tx state —
             # shifted continuation ordinals (dedup-defeating duplicate
             # sequence numbers) and popped committed xids (strict-decode
@@ -406,12 +403,14 @@ class Pipeline:
             # the one Spark scan of the frames: decode, then the persist
             # below materializes it for every later consumer
             batch = decode_frames(
-                self.spark.read.schema(FRAME_SCHEMA).parquet(*batch),
+                self.spark.read.schema(FRAME_SCHEMA).parquet(*files),
                 relations=carried_relations,
                 carry_tx=carry_tx,
                 overlay=wire.relations,
             )
-        batch = with_sequence(batch) if "event_seq" not in batch.columns else batch
+        else:
+            batch = with_sequence(
+                self.spark.read.schema(GENERIC_ENVELOPE).parquet(*files))
         batch = batch.persist()
         try:
             # one agg also feeds telemetry (events + transactions per
@@ -973,41 +972,19 @@ class Pipeline:
         self.sink.write_changes(name, self._decode(cfg, rows), batch_id)
 
     # ------------------------------------------------------------------
-    def start(self, available_now: bool = True):
-        """Backfill, then start the stream. ``available_now=True`` drains
-        what exists and stops (test/batch mode); False runs continuously.
-
-        pgoutput starts no query: its frame files are applied on the
-        driver by :meth:`run_until_drained`, and this returns None."""
+    def start(self) -> None:
+        """Backfill every table not yet streaming. The change stream is
+        applied by :meth:`run_until_drained`, which calls this first."""
         self.backfill()
         failpoints.hit(failpoints.BEFORE_STREAMING)
-        if self.source_fmt == "pgoutput":
-            return None
-        stream = stream_changes(self.spark, self.source_dir)
-        writer = (
-            stream.writeStream.foreachBatch(self._apply_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .queryName("etl_spark_pipeline")
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        else:
-            writer = writer.trigger(processingTime="2 seconds")
-        self.query = writer.start()
-        return self.query
 
     def run_until_drained(self) -> None:
-        """Start in availableNow mode and block until every pending file is
-        processed — the deterministic test/batch entry point.
-
-        pgoutput: a batch pinned by an earlier run and never committed (a
-        crash mid-apply) is applied first, with its own id and files; then
-        every file pending on entry forms one batch, as ``availableNow``
-        does."""
-        q = self.start(available_now=True)
-        if self.frame_queue is None:
-            q.awaitTermination()
-            return
+        """Start, then apply every pending source file — the one way any
+        batch is applied. A batch pinned by an earlier run and never
+        committed (a crash mid-apply) is applied first, with its own id
+        and files; then every file pending on entry forms one batch, as
+        an ``availableNow`` trigger does."""
+        self.start()
         fresh = self.frame_queue.pending()
         if self.frame_queue.pinned is not None:
             self._apply_pinned()
@@ -1019,15 +996,6 @@ class Pipeline:
         """Apply the frame queue's pinned batch, then mark it done."""
         self._apply_batch(self.frame_queue.paths(), self.frame_queue.pinned["id"])
         self.frame_queue.commit()
-
-    def stop(self) -> None:
-        """Graceful stop (POST /pipelines/{id}/stop analog): halt the
-        stream after the in-flight micro-batch; progress is already
-        durable per batch, so a later start() resumes from the
-        checkpoint. pgoutput runs no query, so there is nothing to halt."""
-        if self.query is not None and self.query.isActive:
-            self.query.stop()
-            self.query.awaitTermination()
 
     def retry_errored(
         self,
@@ -1071,21 +1039,15 @@ class Pipeline:
         from the copied LSN through the still-retained slot
         (pipeline_with_faulty_destination.rs: drop → recopy → retry until
         durable). The Spark analog: reset eligible Errored tables to Init
-        (:meth:`retry_errored`) and forget which batches were applied — the
-        stream checkpoint for envelope files, the frame queue's record for
-        pgoutput — so the retained change log replays from the start.
+        (:meth:`retry_errored`) and reset the frame queue's record of
+        applied files, so the retained change log replays from the start.
         Replay is convergent: healthy tables skip already-applied batches
         (sink batch-id dedup) or re-merge idempotently (LWW by event_seq)
         — at-least-once in, exactly-once-looking out (SURVEY T7).
         """
-        import shutil as _shutil
-
         retried = self.retry_errored(force=force, **kwargs)
         if retried:
-            if self.frame_queue is not None:
-                self.frame_queue.reset()
-            elif os.path.isdir(self.checkpoint_dir):
-                _shutil.rmtree(self.checkpoint_dir)
+            self.frame_queue.reset()
         return retried
 
     def status(self) -> dict:
@@ -1098,17 +1060,6 @@ class Pipeline:
                 for e in self.control.tables.values()
             },
         }
-
-    def restart(self, **start_kwargs):
-        """POST /pipelines/{id}/restart analog: graceful stop, then start.
-
-        Progress is durable per batch (flush LSN + the record of applied
-        batches), so the restarted stream resumes where the stopped one
-        left off; tables in ``KEEPS_DATA_ON_RESTART`` states skip re-copy
-        (state.rs semantics via :meth:`backfill`), everything else
-        re-syncs."""
-        self.stop()
-        return self.start(**start_kwargs)
 
     def replication_status(self) -> dict:
         """GET /pipelines/{id}/replication-status analog: per-table

@@ -3,7 +3,7 @@
 Contract (crates/etl/src/destination/base.rs:27-213):
 ``write_snapshot`` ≈ ``write_table_rows`` (initial copy batches),
 ``write_changes`` ≈ ``write_events`` (streamed change batches),
-``truncate`` ≈ ``drop_table_for_copy``. foreachBatch is synchronous, so
+``truncate`` ≈ ``drop_table_for_copy``. The batch apply is synchronous, so
 every write is the reference's ``Durable`` result — the ``Accepted``
 (deferred durability) mode is a sink-internal optimization we intentionally
 drop (SURVEY T5: "simplest correct port is synchronous Durable-only").
@@ -818,7 +818,7 @@ class _BucketedVersionedTable:
         snapshot-isolated through the swap; incremental writes pick the
         new count up from the manifest on their next batch. Like
         ``compact``, run it from the maintenance seam, not concurrently
-        with a live stream's foreachBatch."""
+        with a running pipeline drain."""
         if new_n_buckets < 1:
             raise ValueError(f"n_buckets must be >= 1, got {new_n_buckets}")
         self.n_buckets = new_n_buckets  # seeds fresh tables too

@@ -132,7 +132,7 @@ def test_before_streaming_fault_preserves_durable_copy(spark, env):
     fp.arm(fp.BEFORE_STREAMING)
     p = make_pipeline(spark, env)
     with pytest.raises(fp.FailpointError):
-        p.start(available_now=True)
+        p.start()
     # backfill survived the stream-start fault
     assert p.control.get("users").state == TableState.SYNC_DONE
     assert current(env) == {1: "a", 2: "b", 3: "c"}
@@ -156,9 +156,9 @@ def test_lost_status_update_then_replay_converges(spark, env):
     assert current(env) == {1: "A", 2: "b", 3: "c", 4: "d"}
     assert p.control.flush_lsn == 0
     fp.disarm_all()
-    # restart from the stale LSN: wipe the checkpoint so the retained log
-    # replays from the beginning — idempotent merge absorbs the rerun
-    shutil.rmtree(p.checkpoint_dir)
+    # restart from the stale LSN: delete the queue record so the retained
+    # log replays from the beginning — idempotent merge absorbs the rerun
+    os.remove(p.frame_queue.path)
     p2 = make_pipeline(spark, env)
     p2.run_until_drained()
     assert current(env) == {1: "A", 2: "b", 3: "c", 4: "d"}
@@ -172,7 +172,7 @@ def test_durable_progress_prevents_replay(spark, env):
     p = make_pipeline(spark, env)
     p.run_until_drained()
     assert p.control.flush_lsn == 10
-    # restart with the checkpoint intact: the processed file is NOT re-read
+    # restart with the queue record intact: the processed file is NOT re-read
     applied = []
     orig = p.sink.write_changes
     p2 = make_pipeline(spark, env)
@@ -196,9 +196,57 @@ def test_store_progress_failure_fails_batch_then_restart_converges(spark, env):
     assert p.control.flush_lsn == 0
     fp.disarm_all()
     p2 = make_pipeline(spark, env)
-    p2.run_until_drained()  # same checkpoint: uncommitted batch replays
+    p2.run_until_drained()  # same queue record: uncommitted batch replays
     assert current(env) == {1: "a", 2: "b", 3: "c", 4: "d"}
     assert p2.control.flush_lsn == 10
+
+
+def test_pinned_envelope_batch_replays_alone_after_crash(spark, tmp_path):
+    """Envelope twin of the pgoutput pinned-batch test: a crash after the
+    DuckDB commit and before the flush advance leaves batch 0 pinned but
+    not committed. A second file then lands holding the re-sent event
+    plus a new one. The pinned batch must re-apply alone, under its own
+    id (the DuckDB ledger skips it), and the new file as the next batch:
+    folded into batch 0, the ledger would skip the new event too."""
+    from etl_spark.streaming.duckdb_sink import DuckDBCurrentStateSink
+
+    source = str(tmp_path / "source")
+    os.makedirs(source)
+    snap = str(tmp_path / "snap")
+    spark.createDataFrame([], PAYLOAD).write.parquet(snap)
+    sink = DuckDBCurrentStateSink(str(tmp_path / "wh.duckdb"),
+                                  keys={"users": ["pk"]},
+                                  staging_dir=str(tmp_path / "stage"))
+    cfg = TableConfig(name="users", snapshot_path=snap, keys=["pk"],
+                      payload_schema=PAYLOAD)
+    work = str(tmp_path / "work")
+    sent = ev("INSERT", "users", 10, 0, after={"pk": 1, "val": "a"})
+    write_events(spark, source, [sent], "b1")
+    fp.arm(fp.STORE_REPLICATION_PROGRESS)
+    p = Pipeline(spark, source, [cfg], sink, work)
+    with pytest.raises(fp.FailpointError):
+        p.run_until_drained()
+    fp.disarm_all()
+    assert {r["pk"]: r["val"] for r in sink.read("users")} == {1: "a"}
+    assert p.control.flush_lsn == 0
+    assert p.frame_queue.pinned == {"id": 0, "files": ["b1.parquet"]}
+
+    # restart: the source re-sends the unacknowledged event + a new one
+    write_events(spark, source,
+                 [sent, ev("INSERT", "users", 20, 0, after={"pk": 2, "val": "b"})],
+                 "b2")
+    p2 = Pipeline(spark, source, [cfg], sink, work)
+    batches = []
+    apply = p2._apply_batch
+
+    def record(files, batch_id):
+        batches.append(([os.path.basename(f) for f in files], batch_id))
+        apply(files, batch_id)
+    p2._apply_batch = record
+    p2.run_until_drained()
+    assert batches == [(["b1.parquet"], 0), (["b2.parquet"], 1)]
+    assert {r["pk"]: r["val"] for r in sink.read("users")} == {1: "a", 2: "b"}
+    assert p2.control.flush_lsn == 20
 
 
 # schema_snapshots_are_pruned_after_confirmed_progress (rs:1581): forced
@@ -266,7 +314,7 @@ def test_replication_mask_consistent_after_restart(spark, env):
 # ---------------------------------------------------------------------------
 
 #: stream-level faults: a failed/stalled batch is replayed from the
-#: checkpoint on restart, so convergence is guaranteed end-to-end. The
+#: frame queue's pin on restart, so convergence is guaranteed end-to-end. The
 #: copy-phase faults (BEFORE/DURING_DATA_SYNC, AFTER_FINISHED_COPY) are
 #: deliberately excluded here: they quarantine the table, the shared
 #: stream then legitimately drops its events (P3), and recovery relies

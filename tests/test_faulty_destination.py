@@ -131,9 +131,8 @@ def test_fault_free_baseline(spark, tmp_path):
 
 def test_reject_then_retry_converges(spark, tmp_path):
     """First change write rejected → Errored; resync retries until the
-    final state equals the fault-free run. Envelope files replay because
-    the stream checkpoint is dropped, pgoutput frame files because the
-    frame queue's record is reset."""
+    final state equals the fault-free run. Both formats replay because
+    the frame queue's record of applied files is reset."""
     for fmt, table in (("envelope", "users"), ("pgoutput", "public.users")):
         sink, pipe = _setup(spark, tmp_path, f"rej_{fmt}", fail_n=1, fmt=fmt)
         p = pipe()
@@ -230,10 +229,10 @@ def test_copy_failure_partial_rows_then_retry_consistent(spark, tmp_path):
 
 
 def test_resync_noop_without_errored_tables(spark, tmp_path):
-    """resync_errored on a healthy pipeline must not invalidate the
-    checkpoint (no gratuitous replay)."""
+    """resync_errored on a healthy pipeline must not reset the frame
+    queue's record (no gratuitous replay)."""
     sink, pipe = _setup(spark, tmp_path, "noop")
     p = pipe()
     p.run_until_drained()
     assert p.resync_errored(force=True) == []
-    assert os.path.isdir(p.checkpoint_dir)
+    assert p.frame_queue.applied == {"b1.parquet"}

@@ -306,9 +306,9 @@ def test_unwrap_all_keepalive_chunk_yields_zero_rows(spark):
 
 
 def test_frame_pump_restart_never_reuses_file_names(spark, tmp_path):
-    """A restarted pump must not reuse pump file names: the file-stream
-    checkpoint marks seen paths, so a reused name's replayed frames would
-    be silently ignored (at-least-once replay lost)."""
+    """A restarted pump must not reuse pump file names: the frame
+    queue records applied file names, so a reused name's replayed frames
+    would be silently ignored (at-least-once replay lost)."""
     import os
 
     src_dir = str(tmp_path / "frames")
@@ -711,16 +711,22 @@ def test_assign_xids_tx_window_ceiling(spark):
 
 
 def test_tx_registry_fold_window_ceiling(spark, tmp_path, monkeypatch):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     monkeypatch.setattr(live, "MAX_TX_PER_WINDOW", 1)
     rows = []
     for t in range(3):
         base = 100 * (t + 1)
-        rows.append((base, base, bytearray(pgo.encode_begin(final_lsn=base + 9, xid=t))))
-        rows.append((base + 9, base, bytearray(pgo.encode_commit(base + 9, base + 10))))
-    frames = spark.createDataFrame(rows, pgo.FRAME_SCHEMA)
+        rows.append((base, base, pgo.encode_begin(final_lsn=base + 9, xid=t)))
+        rows.append((base + 9, base, pgo.encode_commit(base + 9, base + 10)))
+    path = str(tmp_path / "frames.parquet")
+    pq.write_table(pa.table([list(c) for c in zip(*rows)],
+                            schema=pgo.FRAME_ARROW_SCHEMA), path)
     reg = pgo.PersistentTxRegistry(str(tmp_path / "txs.json"))
     with pytest.raises(RuntimeError, match="driver-collect budget"):
-        reg.advance_from(frames)
+        w = pgo.collect_wire_stats([path], max_tx=live.MAX_TX_PER_WINDOW)
+        reg.advance_parsed(w.bc, w.env_counts, w.bounds)
 
 
 def test_run_live_proactive_keepalive_deadline():

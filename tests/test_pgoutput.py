@@ -131,6 +131,19 @@ def _write_frames(spark, path, rows, name):
     shutil.rmtree(staging)
 
 
+def _fold_tx(reg, tmp_path, rows, name):
+    """Advance ``reg`` over one batch of frames as the pipeline does: the
+    wire stats of the batch's frame file, then ``advance_parsed``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / f"{name}.parquet")
+    pq.write_table(pa.table([list(c) for c in zip(*rows)],
+                            schema=pgo.FRAME_ARROW_SCHEMA), path)
+    w = pgo.collect_wire_stats([path])
+    reg.advance_parsed(w.bc, w.env_counts, w.bounds)
+
+
 def test_pipeline_pgoutput_source_end_to_end(spark, tmp_path):
     """Binary WAL-shipper files drive the full pipeline: decode → typed
     merge → current state. The restart batch contains NO relation frame —
@@ -308,35 +321,36 @@ def test_cross_batch_transaction_carries_begin_state(spark, tmp_path):
                               [(1, "pk", 20, -1), (0, "val", 25, -1)])
     reg = pgo.PersistentTxRegistry(str(tmp_path / "tx.json"))
 
-    batch1 = _frames_df(spark, [
+    rows1 = [
         (-1, -1, rel),
         (10, 5, pgo.encode_begin(final_lsn=500, xid=5)),
         (11, 5, pgo.encode_insert(1, ["1", "a"])),
         (12, 5, pgo.encode_insert(1, ["2", "b"])),
-    ])
-    env1 = pgo.decode_frames(batch1, carry_tx=reg.snapshot())
+    ]
+    env1 = pgo.decode_frames(_frames_df(spark, rows1), carry_tx=reg.snapshot())
     got1 = {r.start_lsn: (r.commit_lsn, r.tx_ordinal)
             for r in env1.filter("op = 'INSERT'").collect()}
     assert got1 == {11: (500, 0), 12: (500, 1)}
-    reg.advance_from(batch1)
+    _fold_tx(reg, tmp_path, rows1, "b1")
     assert reg.snapshot() == {5: {"final_lsn": 500, "ordinal_offset": 2}}
 
     # restart simulation: a fresh registry instance rehydrates from disk
     reg2 = pgo.PersistentTxRegistry(str(tmp_path / "tx.json"))
-    batch2 = _frames_df(spark, [
+    rows2 = [
         (13, 5, pgo.encode_update(1, ["1", "a2"], key=["1"])),
         (14, 5, pgo.encode_delete(1, key=["2"])),
         (15, 5, pgo.encode_commit(500, 501)),
-    ])
+    ]
     env2 = pgo.decode_frames(
-        batch2, relations={1: [(0, {"table": "public.users",
-                                    "columns": ["pk", "val"],
-                                    "key_cols": ["pk"], "replident": "d"})]},
+        _frames_df(spark, rows2),
+        relations={1: [(0, {"table": "public.users",
+                            "columns": ["pk", "val"],
+                            "key_cols": ["pk"], "replident": "d"})]},
         carry_tx=reg2.snapshot())
     got2 = {r.start_lsn: (r.commit_lsn, r.tx_ordinal)
             for r in env2.filter("op != 'RELATION'").collect()}
     assert got2 == {13: (500, 2), 14: (500, 3)}
-    reg2.advance_from(batch2)
+    _fold_tx(reg2, tmp_path, rows2, "b2")
     assert reg2.snapshot() == {}  # COMMIT seen -> state dropped
 
 
@@ -544,8 +558,8 @@ def test_type_registry_collects_type_frames(spark):
 def test_persistent_type_registry_survives_restart(spark, tmp_path):
     path = str(tmp_path / "types.json")
     reg = pgo.PersistentTypeRegistry(path)
-    reg.update_from(_frames_df(spark, [
-        (9, 5, pgo.encode_type(99999, "public", "citext"))]))
+    reg.ingest(pgo.type_registry(_frames_df(spark, [
+        (9, 5, pgo.encode_type(99999, "public", "citext"))])))
     # fresh instance (simulated restart) still knows the type
     reg2 = pgo.PersistentTypeRegistry(path)
     assert reg2.snapshot() == {99999: "public.citext"}
@@ -556,10 +570,10 @@ def test_persistent_relation_registry_caps_versions(spark, tmp_path):
     path = str(tmp_path / "rels.json")
     reg = pgo.PersistentRelationRegistry(path, max_versions=3)
     for i in range(5):
-        reg.update_from(_frames_df(spark, [
+        reg.ingest(pgo.relation_registry_versioned(_frames_df(spark, [
             (10 + i, -1, pgo.encode_relation(
                 1, "public", "t", "d",
-                [(1, "pk", 20, -1), (0, f"c{i}", 25, -1)]))]))
+                [(1, "pk", 20, -1), (0, f"c{i}", 25, -1)]))])))
     snap = reg.snapshot()
     assert [w for w, _s in snap[1]] == [12, 13, 14]
 
@@ -887,12 +901,12 @@ def test_pgoutput_crash_replay_keeps_pre_ddl_decode(spark, tmp_path):
 
 
 def test_pgoutput_crash_after_registry_advance_replays_correctly(spark, tmp_path):
-    """ADVICE r9 regression (low): Spark writes the batch's commit log
-    only after foreachBatch RETURNS, so deferring the registry advance to
-    batch success still leaves a residual window — registry advanced,
-    commit log not yet written. A crash there replays the batch against
+    """ADVICE r9 regression (low): the frame queue marks the batch done
+    only after ``_apply_batch`` RETURNS, so deferring the registry advance
+    to batch success still leaves a residual window — registry advanced,
+    commit mark not yet written. A crash there replays the batch against
     the ADVANCED registry. Same frames as the deferred-advance test, but
-    the failpoint fires AFTER ``relations.update_from``: the persisted
+    the failpoint fires AFTER ``relations.ingest``: the persisted
     registry holds v2 when the replay decodes the pre-DDL 3-cell tuple.
     The versioned base must bisect that tuple (wal 61) to v1 (wal 1),
     not the newest v2 — a newest-only base would key 'G1' under 'keep'."""
@@ -1186,8 +1200,8 @@ def test_pgoutput_random_ddl_crash_model(spark, tmp_path, seed):
 
 def test_pgoutput_crash_after_tx_advance_replays_correctly(spark, tmp_path):
     """Round-10 hardening (sibling of the relation-registry window): a
-    crash AFTER txs.advance_from but before Spark's commit log replays
-    the batch against the ADVANCED tx state. For a cross-batch
+    crash AFTER txs.advance_parsed but before the queue's commit mark
+    replays the batch against the ADVANCED tx state. For a cross-batch
     transaction whose COMMIT was in the crashed batch, the advanced
     state has the xid POPPED — the strict no-begin-state decode would
     fail every replay (crash loop) — and a still-open continuation
@@ -1223,7 +1237,7 @@ def test_pgoutput_crash_after_tx_advance_replays_correctly(spark, tmp_path):
 
     # batch 2: tx 5 CONTINUES (no BEGIN here) and COMMITS; crash fires
     # after BOTH registry advances (xid 5 now popped from the newest
-    # tx generation), before the batch's commit log is written
+    # tx generation), before the batch's commit mark is written
     _write_frames(spark, source, [
         (20, 5, pgo.encode_update(1, ["1", "a2"])),
         (21, 5, pgo.encode_insert(1, ["2", "b"])),
@@ -1254,33 +1268,33 @@ def test_tx_registry_refolds_on_transport_replay(spark, tmp_path):
     r10, relaxed in r11 when the randomized pump-replay model proved
     the strict guard mis-fires on legitimate slot replays)."""
     reg = pgo.PersistentTxRegistry(str(tmp_path / "tx.json"))
-    b1 = _frames_df(spark, [
+    b1 = [
         (10, 5, pgo.encode_begin(final_lsn=500, xid=5)),
         (11, 5, pgo.encode_insert(1, ["1", "a"])),
-    ])
-    b2 = _frames_df(spark, [
+    ]
+    b2 = [
         (20, 5, pgo.encode_insert(1, ["2", "b"])),
-    ])
-    reg.advance_from(b1)
-    reg.advance_from(b2)
+    ]
+    _fold_tx(reg, tmp_path, b1, "b1")
+    _fold_tx(reg, tmp_path, b2, "b2")
     assert [g[0] for g in reg._gens] == [11, 20]
     # legit replay of the newest batch: idempotent re-fold
-    reg.advance_from(b2)
+    _fold_tx(reg, tmp_path, b2, "b2")
     assert [g[0] for g in reg._gens] == [11, 20]
     assert reg.snapshot()[5]["ordinal_offset"] == 2
     # a fold undercutting BOTH generations = transport replay from the
     # durable flush LSN (the slot re-sends whole transactions): warn for
     # visibility and RE-FOLD from the LSN-exact pre-batch base — the
     # replayed stream rebuilds everything the dropped generations held
-    replay = _frames_df(spark, [
+    replay = [
         (10, 5, pgo.encode_begin(final_lsn=500, xid=5)),
         (11, 5, pgo.encode_insert(1, ["1", "a"])),
-    ])
+    ]
     import warnings as _w
 
     with _w.catch_warnings(record=True) as rec:
         _w.simplefilter("always")
-        reg.advance_from(replay)
+        _fold_tx(reg, tmp_path, replay, "replay")
     assert any("multi-generation WAL re-fold" in str(r.message) for r in rec)
     # state converged to the same fold the first delivery produced
     assert reg.snapshot()[5]["ordinal_offset"] == 1

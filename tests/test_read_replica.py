@@ -5,7 +5,7 @@ already-applied frames RE-ARRIVE (the replica replays from an older
 position) interleaved with genuinely new ones. The pipeline must
 converge to the same LWW state as a single uninterrupted stream and
 advance the flush LSN past the replayed region — at-least-once plus
-idempotent merge, the same contract that makes checkpoint replay safe.
+idempotent merge, the same contract that makes crash replay safe.
 """
 
 from __future__ import annotations

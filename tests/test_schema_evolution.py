@@ -447,7 +447,7 @@ def test_pipeline_rename_survives_full_replay(spark, tmp_path):
     versions_first = {t: [lsn for lsn, _ in vs] for t, vs in p.schemas._versions.items()}
     log_first = sink._manifest("users", sink._current_version("users"))["ddl_log"]
 
-    shutil.rmtree(p.checkpoint_dir)  # missing status update → full replay
+    os.remove(p.frame_queue.path)  # missing status update → full replay
     p2 = mk()
     p2.run_until_drained()
     assert {r.pk: r.val2 for r in sink.read("users").select("pk", "val2").collect()} == first
@@ -915,7 +915,7 @@ def test_pipeline_ddl_matches_model_under_random_evolution(spark, tmp_path, seed
             # at-least-once CRASH-REPLAY composed with the DDL space: the
             # run fails at the durable-progress failpoint AFTER its first
             # batch applies (data + sink DDL already landed once); the
-            # next incarnation replays that batch from the checkpoint.
+            # next incarnation replays that batch from the queue's pin.
             # Convergence relies on LSN-keyed schema versions (replayed
             # pre-DDL rows still resolve their identity timelines
             # exactly), idempotent sink DDL, and LWW row merge — the

@@ -82,11 +82,13 @@ def test_snapshot_then_stream(spark, env):
     assert st["tables"]["users"]["state"] == "Ready"
     assert st["flush_lsn"] == 12
     assert current(env) == {1: "a", 2: "b2", 4: "d"}
+    # drained on the driver: no streaming query, so no checkpoint
+    assert not os.path.exists(os.path.join(env["work"], "checkpoint"))
 
 
 def test_replay_is_idempotent(spark, env):
-    """Checkpoint wiped (slot invalidation) → events replay; final state
-    unchanged (T7: at-least-once + LWW merge)."""
+    """Queue record deleted (slot invalidation) → events replay; final
+    state unchanged (T7: at-least-once + LWW merge)."""
     write_events(spark, env["source"], [
         ev("INSERT", "users", 20, 0, after={"pk": 4, "val": "x"}),
         ev("UPDATE", "users", 21, 0, after={"pk": 1, "val": "a2"}),
@@ -95,7 +97,7 @@ def test_replay_is_idempotent(spark, env):
     p.run_until_drained()
     first = current(env)
 
-    shutil.rmtree(p.checkpoint_dir)
+    os.remove(p.frame_queue.path)
     p2 = make_pipeline(spark, env)
     p2.run_until_drained()
     assert current(env) == first == {1: "a2", 2: "b", 3: "c", 4: "x"}
@@ -152,7 +154,7 @@ def test_quarantine_does_not_kill_pipeline(spark, env):
 
 
 def test_restart_recovers_and_continues(spark, env):
-    """Process restart with intact checkpoint: only new files process;
+    """Process restart with intact queue record: only new files process;
     Ready state and data survive (lifecycle.rs:241-255)."""
     write_events(spark, env["source"], [ev("INSERT", "users", 60, 0, after={"pk": 8, "val": "one"})], "b1")
     p = make_pipeline(spark, env)
@@ -265,7 +267,7 @@ def test_relation_event_evolves_schema(spark, env):
 def test_schema_snapshots_consistent_after_replay(spark, env):
     """Failpoint analog (pipeline_with_failpoints.rs: table_schema_snapshots_
     are_consistent_after_missing_status_update_*): a replay of a batch
-    containing interleaved DDL — checkpoint wiped, everything re-delivered —
+    containing interleaved DDL — queue record deleted, everything re-delivered —
     must leave the registry with the SAME version set (no duplicates, same
     as-of resolution) and the destination in the same final state."""
     newcols = {"columns": [
@@ -286,7 +288,7 @@ def test_schema_snapshots_consistent_after_replay(spark, env):
     state_first = {r.pk: (r.val, r.age) for r in
                    env["sink"].read("users").select("pk", "val", "age").collect()}
 
-    shutil.rmtree(p.checkpoint_dir)  # missing status update → full replay
+    os.remove(p.frame_queue.path)  # missing status update → full replay
     p2 = make_pipeline(spark, env)
     p2.run_until_drained()
     # registry: same version LSNs, no duplicate recording of the DDL
@@ -359,14 +361,14 @@ def test_replayed_batch_id_skips_rewrite(spark, env):
 
 
 def test_stop_then_resume(spark, env):
-    """stop() after a drained run is safe; a new pipeline resumes from the
-    checkpoint and only applies new events (continuous-mode lifecycle)."""
+    """A second drain with nothing pending is safe; a new pipeline resumes
+    from the queue record and only applies new events."""
     write_events(spark, env["source"], [
         ev("INSERT", "users", 60, 0, after={"pk": 12, "val": "x"}),
     ], "b1")
     p = make_pipeline(spark, env)
     p.run_until_drained()
-    p.stop()  # idempotent on a finished availableNow query
+    p.run_until_drained()  # nothing pending: applies nothing
     assert current(env)[12] == "x"
 
     write_events(spark, env["source"], [
@@ -374,7 +376,7 @@ def test_stop_then_resume(spark, env):
     ], "b2")
     p2 = make_pipeline(spark, env)
     p2.run_until_drained()
-    p2.stop()
+    p2.run_until_drained()
     assert current(env)[12] == "y"
     assert p2.status()["flush_lsn"] == 61
 
@@ -509,8 +511,8 @@ def test_duckdb_sink_delivery_contract(spark, tmp_path):
 
     # OUT OF CONTRACT (documented): a never-applied old batch carrying a
     # pre-tombstone image for key 2 resurrects it — nothing in the
-    # warehouse remembers the deleted key's sequence. Spark's checkpointed
-    # foreachBatch never delivers this shape; the assertion pins the
+    # warehouse remembers the deleted key's sequence. The pipeline's frame
+    # queue never delivers this shape; the assertion pins the
     # boundary so a silent behavior change is caught.
     stale_insert = batch([("INSERT", 2, "b-old", 12, 0)])
     sink.write_changes("users", stale_insert, batch_id=4)
@@ -654,8 +656,7 @@ def test_streaming_windowed_agg_with_watermark(spark, tmp_path):
     import time as _time
 
     from pyspark.sql import functions as F
-    from etl_spark.envelope import GENERIC_ENVELOPE
-    from etl_spark.sources.cdc import stream_changes
+    from etl_spark.envelope import GENERIC_ENVELOPE, with_sequence
 
     src = str(tmp_path / "src")
     os.makedirs(src)
@@ -669,7 +670,8 @@ def test_streaming_windowed_agg_with_watermark(spark, tmp_path):
                         schema_snapshot_lsn=None))
     write_events(spark, src, rows, "b1")
 
-    stream = stream_changes(spark, src)
+    stream = with_sequence(
+        spark.readStream.schema(GENERIC_ENVELOPE).parquet(src))
     decoded = stream.withColumn(
         "evt_ts",
         F.timestamp_seconds(F.get_json_object("after", "$.ts_sec").cast("long")),
@@ -746,8 +748,8 @@ def test_stateful_dedup_across_batches(spark, tmp_path):
 
 def test_replication_status_and_restart(spark, env):
     """§2.12 replication-status + restart verbs: a drained pipeline reports
-    its table replicating at zero lag; restart() resumes from the durable
-    checkpoint and applies only the new batch."""
+    its table replicating at zero lag; draining again resumes from the
+    durable queue record and applies only the new batch."""
     write_events(spark, env["source"], [
         ev("INSERT", "users", 40, 0, after={"pk": 7, "val": "r1"}),
     ], "b1")
@@ -762,8 +764,7 @@ def test_replication_status_and_restart(spark, env):
     write_events(spark, env["source"], [
         ev("UPDATE", "users", 41, 0, after={"pk": 7, "val": "r2"}),
     ], "b2")
-    q = p.restart(available_now=True)
-    q.awaitTermination()
+    p.run_until_drained()
     assert current(env)[7] == "r2"
     assert p.replication_status()["flush_lsn"] == 41
 
@@ -822,7 +823,6 @@ def test_rollback_destination_verb(spark, tmp_path):
     p = make_pipeline(spark, {"source": src, "snap": snap,
                               "work": str(tmp_path / "work"), "sink": sink})
     p.run_until_drained()
-    p.stop()
     v_cur = sink._current_version("users")
     assert v_cur >= 1
     before = {r.pk: r.val for r in sink.read("users").select("pk", "val").collect()}

@@ -260,28 +260,38 @@ def test_wire_stats_job_description_reset_on_failure(spark, tmp_path, monkeypatc
         spark.sparkContext.setJobDescription(None)
 
 
-def test_batch_stats_job_description_reset_on_failure(spark, tmp_path):
+def test_batch_stats_job_description_reset_on_failure(spark, tmp_path,
+                                                     monkeypatch):
     """Same guarantee for the batch-stats collect: a batch whose rows fail
     at execution time leaves no description behind."""
+    import os
+
     from pyspark.sql import functions as F
 
     from etl_spark.envelope import GENERIC_ENVELOPE, with_sequence
-    from etl_spark.streaming.pipeline import Pipeline
+    from etl_spark.streaming import pipeline
     from etl_spark.streaming.sinks import MemorySink
 
-    pipe = Pipeline(spark, str(tmp_path / "src"), [], MemorySink(),
-                    str(tmp_path / "work"),
-                    metrics_registry=telemetry.MetricsRegistry())
-    rows = spark.createDataFrame(
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
         [("INSERT", "t", 1, 1, 0, None, None, None, None, None)],
-        GENERIC_ENVELOPE)
-    batch = with_sequence(rows).withColumn(
-        "commit_lsn",
-        F.coalesce(F.raise_error(F.lit("batch-stats failed")).cast("long"),
-                   F.col("commit_lsn")))
+        GENERIC_ENVELOPE).coalesce(1).write.parquet(src)
+    files = [os.path.join(src, f) for f in os.listdir(src)
+             if f.endswith(".parquet")]
+
+    def failing_sequence(df):
+        return with_sequence(df).withColumn(
+            "commit_lsn",
+            F.coalesce(F.raise_error(F.lit("batch-stats failed")).cast("long"),
+                       F.col("commit_lsn")))
+
+    monkeypatch.setattr(pipeline, "with_sequence", failing_sequence)
+    pipe = pipeline.Pipeline(spark, src, [], MemorySink(),
+                             str(tmp_path / "work"),
+                             metrics_registry=telemetry.MetricsRegistry())
     try:
         with pytest.raises(Exception, match="batch-stats failed"):
-            pipe._apply_batch(batch, 0)
+            pipe._apply_batch(files, 0)
         assert _job_description(spark) is None
     finally:
         spark.sparkContext.setJobDescription(None)
